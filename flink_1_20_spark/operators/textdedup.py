@@ -52,7 +52,7 @@ def hash32(col: Column) -> Column:
 # Canonical shingle width shared by the minhash operators and the
 # queries that must reason about shingle EXISTENCE (a text enters the
 # pair graph iff it has >= _SHINGLE_N normalized words — word_shingles
-# emits the empty array below that, and minhash_lsh_pairs filters it).
+# emits the empty array below that, which yields no minhash signature).
 _SHINGLE_N = 3
 
 
@@ -236,8 +236,29 @@ def minhash_lsh_pairs(
     docs = _ensure_scan_parallelism(docs)
     words = normalized_words(F.col(text_col))
     sh = word_shingles(words, shingle_n).alias("shingles")
+    # No `size(shingles) > 0` filter: Catalyst would push it below the
+    # projection and shingle every row twice (Filter, then Project).  A
+    # doc with no shingles explodes to no signature rows, so it never
+    # reaches a band, a pair or a join-back anyway.
     base = docs.select(F.col(id_col).alias("doc"), sh)
-    base = base.filter(F.size("shingles") > 0)
+    # Multi-consumer subtrees — materialize ONCE (lazy: building the
+    # DataFrame must not run a job; the first action stores the blocks
+    # and every branch of that same job reuses them).  `base` feeds the
+    # signature aggregation AND the two shingle join-backs (sh_a/sh_b),
+    # so it is checkpointed BEFORE the signatures derive from it: were
+    # `sigs` built from the un-checkpointed `base`, `long`'s lineage
+    # would carry its own tokenize+shingle pass next to the one `base`
+    # stores, and the corpus would be shingled twice.  `long` feeds both
+    # sides of the pair self-join (plus the bucket population cut when
+    # capped).  Without these, every consumer re-runs the CPU-bound
+    # tokenize+shingle(+signature) pass over the whole corpus —
+    # measured on the 1M-doc --hotnear fixture: 449 s before the capped
+    # path gained them in r13; the uncapped path shares the cost
+    # structure.  Storage is bounded: `long` is n_bands small rows per
+    # doc, `base` is the shingle arrays (about the input text size),
+    # both spill-to-disk RDD blocks.  On a cluster this would be
+    # .checkpoint() to reliable storage.
+    base = base.localCheckpoint(eager=False)
     sigs = minhash_signatures(base, "doc", "shingles", num_hashes)
     banded = sigs.select("doc", *band_keys("mh", num_hashes, rows_per_band))
     n_bands = num_hashes // rows_per_band
@@ -253,21 +274,6 @@ def minhash_lsh_pairs(
     long = banded.select("doc", F.explode(band_struct).alias("bk")).select(
         "doc", "bk.band_idx", "bk.band_hash"
     )
-    # Multi-consumer subtrees — materialize ONCE (lazy: building the
-    # DataFrame must not run a job; the first action stores the blocks
-    # and every branch of that same job reuses them).  `base` feeds the
-    # signature aggregation AND the two shingle join-backs (sh_a/sh_b);
-    # `long` feeds both sides of the pair self-join (plus the bucket
-    # population cut when capped).  Without these, every consumer
-    # re-runs the CPU-bound tokenize+shingle(+signature) pass over the
-    # whole corpus — measured on the 1M-doc --hotnear fixture: 449 s
-    # before the capped path gained them in r13; the uncapped path
-    # shares the cost structure (r13 verdict task 3).  Storage is
-    # bounded: `long` is n_bands small rows per doc, `base` is the
-    # shingle arrays (about the input text size), both
-    # spill-to-disk RDD blocks.  On a cluster this would be
-    # .checkpoint() to reliable storage.
-    base = base.localCheckpoint(eager=False)
     long = long.localCheckpoint(eager=False)
     if max_bucket is not None:
         # bucket-population cut: one aggregate on the SAME key as the

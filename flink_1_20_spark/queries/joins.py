@@ -277,37 +277,48 @@ def cogroup_custkey(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CoGroup (DataStream.coGroup:748 / DataSet.coGroup:1041): both
     inputs' rows for a key delivered to ONE user function — keys present
     on either side included. Direct Spark mapping:
-    groupby().cogroup().applyInPandas (Arrow-batched both sides). The
+    groupby().cogroup().applyInArrow (Arrow-batched both sides). The
     oracle reformulates as full-outer-joined per-side aggregates — the
     declarative plan you'd prefer when the logic IS expressible; cogroup
     earns its keep when it isn't (custom pairing, ordered merges).
 
-    Cost, measured (local[32], 2026-08): cogroup runs ONE Python call
-    per key — 15k full keys at sf0.1 take ~3.1 s with the key
-    partitioning pinned to all cores (~0.2 ms/key wall; it was 21.8 s
-    when AQE coalesced the tiny shuffle to 2 tasks — see the pinning
-    note below), where the declarative full-outer-agg plan is <1 s.
-    The per-key Python/Arrow overhead is inherent to the operator (it
-    is why Flink, too, pushes users toward joins/aggs when
-    expressible); budget group counts accordingly before reaching for
-    cogroup."""
-    import pandas as pd
+    Cost: cogroup runs ONE Python call per key, so the per-key work at
+    the Python boundary is the operator's price.  The function takes
+    and returns Arrow tables (applyInArrow): measured on 4 cores, one
+    run over 1,500 keys at sf0.01 takes 0.7-1.05 s, where building
+    pandas frames per key (applyInPandas, the same rows) took
+    1.8-2.4 s.  The declarative full-outer-agg plan is cheaper still;
+    budget group counts before reaching for cogroup (Flink, too,
+    pushes users toward joins/aggs when expressible)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     c = T(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
     o = T(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
+    out = pa.schema(
+        [
+            ("custkey", pa.int64()),
+            ("n_cust", pa.int64()),
+            ("acctbal", pa.float64()),
+            ("n_orders", pa.int64()),
+            ("total_price", pa.float64()),
+        ]
+    )
 
-    def fn(cust: pd.DataFrame, orders: pd.DataFrame) -> pd.DataFrame:
-        key = int(cust["c_custkey"].iloc[0]) if len(cust) else int(orders["o_custkey"].iloc[0])
-        return pd.DataFrame(
-            [
-                {
-                    "custkey": key,
-                    "n_cust": len(cust),
-                    "acctbal": round(float(cust["c_acctbal"].max()), 2) if len(cust) else None,
-                    "n_orders": len(orders),
-                    "total_price": round(float(orders["o_totalprice"].sum()), 2),
-                }
-            ]
+    def fn(key, cust: pa.Table, orders: pa.Table) -> pa.Table:
+        # a side with no rows for the key: max -> NULL acctbal, and the
+        # order total sums to 0.0 (numpy's sum: bit-equal to pandas')
+        acctbal = pc.max(cust["c_acctbal"]).as_py()
+        total = orders["o_totalprice"].to_numpy().sum()
+        return pa.table(
+            {
+                "custkey": [key[0].as_py()],
+                "n_cust": [cust.num_rows],
+                "acctbal": [None if acctbal is None else round(acctbal, 2)],
+                "n_orders": [orders.num_rows],
+                "total_price": [round(float(total), 2)],
+            },
+            schema=out,
         )
 
     # Pin both sides' key partitioning: the shuffled bytes are tiny, so
@@ -320,7 +331,7 @@ def cogroup_custkey(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.repartition(parts, "c_custkey")
         .groupby("c_custkey")
         .cogroup(o.repartition(parts, "o_custkey").groupby("o_custkey"))
-        .applyInPandas(
+        .applyInArrow(
             fn,
             "custkey bigint, n_cust bigint, acctbal double, n_orders bigint, total_price double",
         )

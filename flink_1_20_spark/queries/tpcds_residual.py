@@ -783,11 +783,13 @@ def tpcds_q81_returns_incl_tax_above_avg(spark: SparkSession, sf_dir: str) -> Da
 # filtered re-aggregate and the scalar average) — Catalyst duplicates
 # the whole 6-table join spine (measured at the 100x fixture: 24
 # parquet scans, 20 joins, 85-92 s; plans/r14/..._100x_executed.txt).
-# Spark-first single-pass form (r14, VERDICT r13 task 6 — the q30/q81
-# playbook): materialize ssales ONCE (lazy localCheckpoint — the first
-# action stores the blocks, both consumers read them), reduce the
-# scalar gate to a 1-row frame, and attach it with a broadcast
-# EQUI-join on a constant key (stays BroadcastHashJoin — no BNLJ).
+# Spark-first single-pass form (the q30/q81 playbook): materialize
+# ssales ONCE (lazy localCheckpoint — the first action stores the
+# blocks, both consumers read them) and gate the HAVING with a scalar
+# subquery over it (`DataFrame.scalar()`: Filter + ScalarSubquery, no
+# join).  A 1-row frame attached on a constant key does NOT stay a
+# hash join: Catalyst folds the `lit(1)` key away and plans a 1-row
+# BroadcastNestedLoopJoin.
 # The oracle keeps the CTE spec form, proving the rewrite
 # value-identical at every SF on every gate run (DuckDB computes a
 # WITH-CTE once by design, so the spec form IS the one-pass semantics).
@@ -845,15 +847,11 @@ def tpcds_q24b_netpaid_above_cte_avg(
         # materialize the 6-join spine once; lazy — no job at build
         .localCheckpoint(eager=False)
     )
-    thr = ssales.agg((0.05 * F.avg("netpaid")).alias("__thr")).withColumn(
-        "__k", F.lit(1)
-    )
+    thr = ssales.select(0.05 * F.avg("netpaid")).scalar()
     return (
         ssales.filter(F.col("p_brand") == "Brand#21")
         .groupBy("c_name", "n_name")
         .agg(F.sum("netpaid").alias("__s"))
-        .withColumn("__k", F.lit(1))
-        .join(F.broadcast(thr), "__k")
-        .filter(F.col("__s") > F.col("__thr"))
+        .filter(F.col("__s") > thr)
         .select("c_name", "n_name", F.round("__s", 4).alias("paid"))
     )

@@ -6,8 +6,9 @@ For each query the formatted plan is scanned for:
   - SortMergeJoin                                 (sort both sides; the
     engine prefers hash — flag for review, not automatically wrong)
   - BatchEvalPython                               (row-at-a-time Python)
-  - ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas (Python
-    boundary — allowed for the custom operators, counted for review)
+  - ArrowEvalPython / MapInPandas / FlatMap(Co)GroupsIn{Pandas,Arrow}
+    (Python boundary — allowed for the custom operators, counted for
+    review)
   - Exchange count                                (shuffle count)
   - Scan parquet without PushedFilters while the query filters
 
@@ -27,6 +28,7 @@ import traceback
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from flink_1_20_spark import get_spark
+from flink_1_20_spark.plan_allowlist import bnlj_allowed
 from flink_1_20_spark.registry import get_queries
 
 MARKERS = [
@@ -34,7 +36,7 @@ MARKERS = [
     ("bnlj", r"BroadcastNestedLoopJoin"),
     ("smj", r"SortMergeJoin"),
     ("batch_py", r"BatchEvalPython"),
-    ("arrow_py", r"ArrowEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas"),
+    ("arrow_py", r"ArrowEvalPython|MapInPandas|MapInArrow|FlatMap(?:Co)?GroupsIn(?:Pandas|Arrow)"),
     ("window", r"\bWindow\b|WindowExec|WindowGroupLimit"),
     ("sort", r"\bSort \(|\bSort\b"),
 ]
@@ -89,13 +91,15 @@ def main() -> int:
                     + [flags.get(k, 0) for k, _ in MARKERS]
                     + [flags.get("exchanges", 0), nbytes, round(dt, 2)]
                 )
-    bad = [n for n, f, _, _ in rows if f.get("cartesian") or f.get("bnlj") or f.get("error")]
+    # nonzero exit on a cartesian, an error, or a BNLJ outside the
+    # audited allowlist (the same one tests/test_plans.py reads), so a
+    # clean tree exits 0 and only a new regression fails automation
+    bad = [
+        n for n, f, _, _ in rows
+        if f.get("cartesian") or f.get("error") or (f.get("bnlj") and not bnlj_allowed(n))
+    ]
     if bad:
         print("cartesian/bnlj/error:", " ".join(bad))
-    # r13 ADVICE: nonzero exit on cartesian/BNLJ/error hits so the audit
-    # can fail automation (BNLJ hits include the audited intentional
-    # broadcast-GEMM/scalar-subquery users — automation consumers should
-    # diff against the known allowlist in tests/test_plans.py)
     return 1 if bad else 0
 
 

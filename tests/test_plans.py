@@ -14,6 +14,7 @@ import re
 
 import pytest
 
+from flink_1_20_spark.plan_allowlist import bnlj_allowed, is_tpc
 from flink_1_20_spark.registry import get_queries
 
 
@@ -204,21 +205,15 @@ def test_tpc_suite_no_accidental_nested_loops(spark, sf_dir, queries):
     """Sweep EVERY TPC-H and TPC-DS-shape query: no CartesianProduct
     anywhere, and BroadcastNestedLoopJoin only where it joins single-row
     scalar-aggregate sides (q88/q90's 1×1 grid assembly — the right
-    plan). A new shape that accidentally loses its equi key gets caught
+    plan; `plan_allowlist.SINGLE_ROW_BNLJ_OK`). A new shape that accidentally loses its equi key gets caught
     here before it ships."""
-    # BNLJ of single-row aggregates is O(1) work — structurally fine
-    single_row_bnlj_ok = {
-        "tpcds_q88_count_grid",
-        "tpcds_q90_am_pm_ratio",
-        "tpcds_q61_promo_share_ratio",  # 1x1 scalar-aggregate ratio
-    }
     for name, fn in sorted(queries.items()):
-        if not name.startswith(("tpch_", "tpcds_")):
+        if not is_tpc(name):
             continue
         plan = _final_plan(fn(spark, sf_dir))
         final = plan.split("== Initial Plan ==")[0]
         assert "CartesianProduct" not in final, name
-        if name not in single_row_bnlj_ok:
+        if not bnlj_allowed(name):
             assert "BroadcastNestedLoopJoin" not in final, name
 
 
@@ -226,33 +221,16 @@ def test_full_registry_no_accidental_nested_loops(spark, queries):
     """r9: extend the no-NLJ net from the TPC suite to EVERY registered
     query (at sf0.001 — this is a plan audit, not a perf run): no
     CartesianProduct anywhere, and BroadcastNestedLoopJoin only in the
-    audited allowlist below. A new operator that accidentally loses its
+    audited allowlist (`plan_allowlist.BNLJ_OK`). A new operator that accidentally loses its
     equi key — the classic 100 TB cliff — gets caught here even if its
     tiny-SF correctness stays green."""
-    # audited intentional BNLJ users — every one joins a BROADCAST side
-    # that is O(1) rows or a deliberately-small query/model set:
-    bnlj_ok = {
-        "join_cross",  # the CROSS JOIN operator itself
-        "join_nonequi_range",  # non-equi SQL form; banded variant is the scale path
-        "pipeline_dsir_select",  # 64x1 totals attach
-        "pipeline_temperature_mix",  # 1-row totals broadcast
-        "simsearch_topk_bruteforce",  # documented all-pairs baseline, small query set
-        "simsearch_hard_negatives",  # same candidate plan as brute-force top-k
-        "simsearch_ivf_topk",  # centroid-distance attach (tiny broadcast)
-        "simsearch_ivfpq_adc_topk",
-        "simsearch_recall_lsh",  # recall gates join vs the brute-force baseline
-        "simsearch_recall_ivf",
-        "simsearch_recall_pq",
-        "simsearch_recall_ivfpq",
-        "text_lm_score",  # corpus-level stats broadcast attach
-    }
     for name, fn in sorted(queries.items()):
-        if name.startswith(("tpch_", "tpcds_")):
+        if is_tpc(name):
             continue  # covered (with its own allowlist) by the TPC sweep
         plan = _final_plan(fn(spark, "/root/testdata/sf0.001"))
         final = plan.split("== Initial Plan ==")[0]
         assert "CartesianProduct" not in final, name
-        if name not in bnlj_ok:
+        if not bnlj_allowed(name):
             assert "BroadcastNestedLoopJoin" not in final, name
 
 
@@ -391,3 +369,37 @@ def test_exact_substring_dedup_no_nlj_and_partitioned_windows(spark, sf_dir, que
         # both run windows must partition by the document id: a spec
         # whose partition list lost `doc` would sort corpus-wide
         assert "doc#" in ln.split("windowspecdefinition(", 1)[1], ln
+
+
+def test_minhash_shingles_once(spark, sf_dir):
+    """MinHash LSH tokenizes and shingles the corpus ONCE: `base` is
+    checkpointed before the signatures derive from it, so of all the
+    plans that execute (each checkpointed subtree plus the final join)
+    exactly one computes the shingle arrays, once; the others read
+    stored blocks.  Deriving the signatures from the un-checkpointed
+    `base` put a second shingle pass into `long`'s plan, and a
+    `size(shingles) > 0` filter pushed below the projection a third."""
+    from unittest import mock
+
+    from flink_1_20_spark.catalog import read_table
+    from flink_1_20_spark.operators.textdedup import minhash_lsh_pairs
+
+    docs = read_table(spark, sf_dir, "documents")
+    stored = []
+    checkpoint = type(docs).localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        stored.append(self)
+        return checkpoint(self, *args, **kwargs)
+
+    with mock.patch.object(type(docs), "localCheckpoint", spy):
+        pairs = minhash_lsh_pairs(docs, "doc_id", "text")
+    pairs.collect()
+    # word_shingles' array_distinct(transform(...)) is the derivation;
+    # FileScan's DataFilters would repeat a pushed-down shingle filter
+    derivations = [
+        d._jdf.queryExecution().executedPlan().toString()
+        .split("== Initial Plan ==")[0].count("array_distinct(transform(")
+        for d in stored + [pairs]
+    ]
+    assert len(stored) == 2 and sum(derivations) == 1, derivations
