@@ -295,15 +295,6 @@ def cogroup_custkey(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     c = T(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
     o = T(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    out = pa.schema(
-        [
-            ("custkey", pa.int64()),
-            ("n_cust", pa.int64()),
-            ("acctbal", pa.float64()),
-            ("n_orders", pa.int64()),
-            ("total_price", pa.float64()),
-        ]
-    )
 
     def fn(key, cust: pa.Table, orders: pa.Table) -> pa.Table:
         # a side with no rows for the key: max -> NULL acctbal, and the
@@ -314,11 +305,13 @@ def cogroup_custkey(spark: SparkSession, sf_dir: str) -> DataFrame:
             {
                 "custkey": [key[0].as_py()],
                 "n_cust": [cust.num_rows],
-                "acctbal": [None if acctbal is None else round(acctbal, 2)],
+                # typed: a lone NULL would otherwise infer the null type
+                "acctbal": pa.array(
+                    [None if acctbal is None else round(acctbal, 2)], pa.float64()
+                ),
                 "n_orders": [orders.num_rows],
                 "total_price": [round(float(total), 2)],
-            },
-            schema=out,
+            }
         )
 
     # Pin both sides' key partitioning: the shuffled bytes are tiny, so
