@@ -11,11 +11,15 @@ Steal discipline (r13/r14): this host shows hypervisor CPU-steal gusts
 that exceed user time, and a bench number taken inside one records host
 weather, not engine cost (r12: the driver's 6.309 s sample vs the
 3.0-3.9 s quiet band needed README prose to adjudicate). The artifact
-adjudicates itself: /proc/stat steal is sampled around the warmup and
-around EVERY timed run, the reported min carries the steal ratio it ran
-under, and a top-level "host" verdict says whether the winning runs
-were all quiet. A bounded (60 s) quiet-window wait runs before the
-timed section; the ratio it achieved is recorded, never assumed.
+adjudicates itself: host steal (scripts/measure.py: stolen jiffies over
+all jiffies, the benchmark ledger's definition; 0 where the kernel does
+not count it) is sampled around the warmup and around EVERY timed run,
+the reported min carries the steal ratio it ran under, and a top-level
+"host" verdict says whether the winning runs were all quiet. A bounded
+(60 s) quiet-window wait runs before the timed section (bounded because
+the driver runs bench under a timeout: it dodges a gust rather than
+insisting on a quiet host); the ratio it achieved is recorded, never
+assumed.
 
 r14 (per the r13 verdict): the single blind third run on a loaded
 sample is replaced by bounded quiet-retry. Each query runs twice; if no
@@ -40,6 +44,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from flink_1_20_spark import get_spark
 from flink_1_20_spark.registry import get_queries
+from scripts.measure import steal_since, ticks, timed, wait_quiet
 
 # Headline set: the operator mix the reference validates with TPC-H
 # (SURVEY.md §6) plus this engine's beyond-reference pipeline operators.
@@ -62,36 +67,6 @@ MAX_RUNS_PER_QUERY = 5
 RETRY_BUDGET_SEC = 120.0
 
 
-def _ticks() -> tuple[int, int]:
-    """(user, steal) jiffies from the aggregate /proc/stat cpu line."""
-    try:
-        with open("/proc/stat") as f:
-            p = f.readline().split()
-        return int(p[1]), int(p[8])
-    except (OSError, IndexError, ValueError):  # non-Linux: report 0 steal
-        return 0, 0
-
-
-def _steal_ratio(before: tuple[int, int], after: tuple[int, int]) -> float:
-    du, ds = after[0] - before[0], after[1] - before[1]
-    return ds / max(1, du + ds)
-
-
-def wait_quiet(threshold: float = 0.10, max_wait: float = 60.0) -> float:
-    """Best-effort bounded wait for a quiet window (model:
-    scripts/scale_probe.py wait_quiet, shortened — the driver runs
-    bench under a timeout, so this opportunistically dodges a gust
-    rather than insisting on one). Returns the last sampled ratio."""
-    t0 = time.time()
-    ratio = 1.0
-    while True:
-        b = _ticks()
-        time.sleep(2)
-        ratio = _steal_ratio(b, _ticks())
-        if ratio < threshold or time.time() - t0 >= max_wait:
-            return ratio
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("bench")
@@ -105,12 +80,12 @@ def main() -> None:
     # set's own plans/results are never touched — this measures the
     # steady-state engine cost a long-lived session (or any real
     # cluster deployment) runs at, not first-query JIT compilation.
-    warm_t = _ticks()
+    warm_t = ticks()
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
     for warm in ("tpch_q12_priority_by_status", "tpch_q4_order_priority"):
         if warm in queries:
             queries[warm](spark, sf_dir).collect()
-    warm_steal = _steal_ratio(warm_t, _ticks())
+    warm_steal = steal_since(warm_t)
     pre_wait_steal = wait_quiet(STEAL_QUIET)
 
     # Min of 2 timed executions per query (the second run hits the same
@@ -137,11 +112,7 @@ def main() -> None:
                 w0 = time.time()
                 wait_quiet(STEAL_QUIET, max_wait=20.0)
                 retry_spent += time.time() - w0
-            b = _ticks()
-            t0 = time.time()
-            queries[name](spark, sf_dir).collect()
-            dt = time.time() - t0
-            r = _steal_ratio(b, _ticks())
+            dt, _, r, _ = timed(lambda: queries[name](spark, sf_dir).collect(), 1)
             if run >= 2:
                 retry_spent += dt
             if r <= STEAL_QUIET and dt < best_quiet:

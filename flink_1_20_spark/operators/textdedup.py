@@ -233,7 +233,7 @@ def minhash_lsh_pairs(
     the inverted index), so recall loss is confined to pairs ALL of
     whose collisions are boilerplate-hot — measured by the
     hot-cluster probe's recall gate.  None = exact LSH (default)."""
-    docs = _ensure_scan_parallelism(docs)
+    docs = ensure_scan_parallelism(docs)
     words = normalized_words(F.col(text_col))
     sh = word_shingles(words, shingle_n).alias("shingles")
     # No `size(shingles) > 0` filter: Catalyst would push it below the
@@ -328,7 +328,7 @@ def simhash_pairs(
     if max_hamming >= n_bands:
         raise ValueError("max_hamming must be < 4 for exact 4-block LSH")
     # fingerprinting is CPU-bound per row — compact-input guard (r10)
-    docs = _ensure_scan_parallelism(docs)
+    docs = ensure_scan_parallelism(docs)
     fp = simhash_fingerprints(docs, id_col, text_col, bits)
     blk = fp.select("doc", "fp", *simhash_bands(F.col("fp"), n_bands, bits))
     block_struct = F.array(
@@ -395,11 +395,14 @@ def ngram_jaccard_pairs(
     drops shingles appearing in more docs (df-cut) to bound fanout on
     boilerplate — at 100 TB this is mandatory."""
     # shingling is CPU-bound per row — compact-input guard (r10)
-    docs = _ensure_scan_parallelism(docs)
+    docs = ensure_scan_parallelism(docs)
     words = normalized_words(F.col(text_col))
+    # No `size(shingles) > 0` filter (same reason as minhash_lsh_pairs):
+    # a doc with no shingles explodes to no posting, so it never reaches
+    # the join on `sh`.
     base = docs.select(
         F.col(id_col).alias("doc"), word_shingles(words, shingle_n).alias("shingles")
-    ).filter(F.size("shingles") > 0)
+    )
     # multi-consumer subtree (r13 verdict task 3, same rationale as
     # minhash_lsh_pairs): `base` feeds the sizes lookup and every
     # consumer of the inverted index (both self-join sides, plus the
@@ -478,8 +481,7 @@ def cross_corpus_contaminated(
                     "shingles"
                 ),
             )
-            .filter(F.size("shingles") > 0)
-        )
+        )  # unfiltered: a shingle-count filter shingles twice (ngram_jaccard_pairs)
         return distinct, ids
 
     t, t_ids = shingled(train, "train")
@@ -533,12 +535,6 @@ def cross_corpus_contaminated(
         .join(e_ids, "eval_h")
         .select("train_id", "eval_id", "jac")
     )
-
-
-# r11 ADVICE: the guard grew cross-module callers and is now the public
-# ensure_scan_parallelism in operators/util (full rationale there); the
-# old private name stays importable for in-module call sites and tests.
-_ensure_scan_parallelism = ensure_scan_parallelism
 
 
 def exact_substring_dedup(
@@ -727,7 +723,7 @@ def _cdc_chunks(
     if unit not in ("char", "token"):
         raise ValueError(f"unit must be 'char' or 'token', got {unit!r}")
     if multi_consumer:
-        docs = _ensure_scan_parallelism(docs)
+        docs = ensure_scan_parallelism(docs)
     w = int(window)
     nibs = ", ".join(f"'{n}'" for n in boundary_nibbles)
     # the boundary scan (one md5 per position) MUST land in its own

@@ -1,6 +1,6 @@
 """Audited BroadcastNestedLoopJoin users — the one allowlist that the
 plan regression tests (`tests/test_plans.py`) and the plan audit
-(`scripts/plan_audit.py`) both read, so the two cannot drift.
+(`scripts/profiler.py audit`) both read, so the two cannot drift.
 
 A query not named here must plan without BroadcastNestedLoopJoin: a new
 shape that accidentally loses its equi key (the classic 100 TB cliff)

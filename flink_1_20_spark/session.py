@@ -29,41 +29,38 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (os.cpu_count() or 8)
 
 
-# Minimum free tmpfs capacity before it is trusted as the spill dir.
-# Sized to the largest shuffle the probes actually produce (~6 GB for
-# the 100x q10) with 5x headroom; a memory-tight host fails the gate
-# and keeps disk spill.
-_TMPFS_MIN_FREE = 32 << 30
+# Host RAM (MemTotal).  Both memory defaults below are a quarter of
+# it: the driver heap, and the free tmpfs capacity required before
+# tmpfs is trusted as the spill dir.  On the 128 GiB host they were
+# first sized on that is 32 GiB of tmpfs (the largest shuffle the
+# probes produce, ~6 GB for the 100x q10, with 5x headroom); the fixed
+# 48g heap of that host drove a 15 GB host's test JVM to 10.6 GB RSS.
+_MEM_TOTAL = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+_TMPFS_MIN_FREE = _MEM_TOTAL // 4
 
 
 def _fast_local_dir() -> str:
     """Shuffle/spill scratch: prefer a writable tmpfs (RAM-backed —
     this box's /dev/shm) over the default /tmp when the latter sits on
-    a slow virtual disk.  Precedence: SPARK_LOCAL_DIRS (Spark's own
-    env override) always wins; SPARK_GRAFT_TMPFS_SPILL=1/0 forces the
-    tmpfs choice on/off; otherwise tmpfs is used only when its free
-    capacity clears _TMPFS_MIN_FREE (r12 ADVICE: tmpfs is typically
-    capped at 50% of RAM and its pages compete with executor memory —
-    on a memory-tight standalone node a RAM-backed spill both risks
-    ENOSPC where disk would have succeeded and defeats spilling under
-    memory pressure; on a managed cluster the cluster manager
-    overrides spark.local.dir anyway)."""
+    a slow virtual disk.  SPARK_LOCAL_DIRS (Spark's own env override)
+    always wins; otherwise tmpfs is used only when its free capacity
+    clears _TMPFS_MIN_FREE (r12 ADVICE: tmpfs is typically capped at
+    50% of RAM and its pages compete with executor memory — on a
+    memory-tight standalone node a RAM-backed spill both risks ENOSPC
+    where disk would have succeeded and defeats spilling under memory
+    pressure; on a managed cluster the cluster manager overrides
+    spark.local.dir anyway)."""
     env = os.environ.get("SPARK_LOCAL_DIRS")
     if env:
         return env
-    force = os.environ.get("SPARK_GRAFT_TMPFS_SPILL")
     shm = "/dev/shm"
-    if (
-        force != "0"
-        and os.path.isdir(shm)
-        and os.access(shm, os.W_OK)
-    ):
+    if os.path.isdir(shm) and os.access(shm, os.W_OK):
         try:
             st = os.statvfs(shm)
             free = st.f_bavail * st.f_frsize
         except OSError:
             free = 0
-        if force == "1" or free >= _TMPFS_MIN_FREE:
+        if free >= _TMPFS_MIN_FREE:
             d = os.path.join(shm, "spark-local")
             try:
                 os.makedirs(d, exist_ok=True)
@@ -118,8 +115,12 @@ def get_spark(
         # and AQE re-plans on runtime sizes, so oversized build sides
         # fall back to SMJ rather than OOM.
         .config("spark.sql.join.preferSortMergeJoin", "false")
-        # local mode: the driver is the only JVM — give it the memory.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        # local mode: the driver is the only JVM — give it a quarter of
+        # the host, so a second engine process fits beside it.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", f"{max(1024, (_MEM_TOTAL >> 20) // 4)}m"),
+        )
         # Shuffle spill directory on the fastest local storage, per
         # Spark's own spark.local.dir guidance ("fast, local disk").
         # This box's /tmp sits on a ~250 MB/s virtual disk while RAM

@@ -8,6 +8,12 @@ Usage:
     python scripts/scale_probe.py [--rep 10] [--dst /tmp/sfX1] [--gen]
     python scripts/scale_probe.py --run     # time the operator battery
 
+Each mode flag (--hundred, --tpch-full, ...) picks a fixture and a
+battery; --gen / --run do only one half, neither does both.  Timed
+lines read `fastest (cold first-run) rows label`; lines of the A/B
+modes, which wait for a quiet host first, add the steal share over the
+runs and the pre-wait sample (scripts/measure.py).
+
 Writes only under --dst (default /tmp/sfX1); never touches
 /root/testdata.
 """
@@ -17,13 +23,15 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
+from typing import Callable, NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
 from flink_1_20_spark import get_spark
+from flink_1_20_spark.operators.util import ensure_scan_parallelism
+from scripts.measure import timed, wait_quiet
 
 SRC = "/root/testdata/sf0.1"
 OFF = 10_000_000  # per-replica key offset — far above any fixture key
@@ -84,6 +92,70 @@ HEAVY = [
 ]
 
 
+def replicate(spark, dst, tables, rep, copy=(), derive=None,
+              fmt="generated {t} x{rep}: {n} rows") -> None:
+    """Copy the `copy` tables as-is, then write each of `tables` (name
+    -> key columns) `rep` times with its keys shifted by OFF per
+    replica; `derive(name, df)` rewrites columns after the shift.  Each
+    table is counted back and reported with `fmt` (None: not at all)."""
+    for t in copy:
+        spark.read.parquet(f"{SRC}/{t}.parquet").write.mode(
+            "overwrite"
+        ).parquet(f"{dst}/{t}.parquet")
+    for t, keys in tables.items():
+        df = spark.read.parquet(f"{SRC}/{t}.parquet")
+        r = df.crossJoin(spark.range(rep).withColumnRenamed("id", "__rep"))
+        for k in keys:
+            r = r.withColumn(k, F.col(k) + F.col("__rep") * OFF)
+        if derive is not None:
+            r = derive(t, r)
+        # realistic multi-file layout (r11): the crossJoin inherits the
+        # compact source's 1-2 partitions, so an un-repartitioned write
+        # produced 1-2 giant files whose few splits serialized every
+        # scan (the same compact-input hazard the r9/r10 text-op guard
+        # fixed, here throttling the join headliners) — a real corpus
+        # at this scale is thousands of files
+        r.drop("__rep").repartition(64).write.mode("overwrite").parquet(
+            f"{dst}/{t}.parquet"
+        )
+        if fmt:
+            n = spark.read.parquet(f"{dst}/{t}.parquet").count()
+            print(fmt.format(t=t, rep=rep, n=n))
+
+
+def line(best: float, cold: float, rows: int, label: str, runs: int = 2) -> str:
+    cold_part = f" (cold {cold:7.2f}s)" if runs > 1 else ""
+    return f"{best:7.2f}s{cold_part} {rows:9d} rows  {label}"
+
+
+def probe(label: str, count, runs: int = 2, quiet: bool = False) -> None:
+    """Time `count()` (a thunk returning a row count) min-of-`runs`
+    in-session — the JIT-retime discipline that adjudicated the r8
+    watch item: the first run pays per-query JIT, the minimum reports
+    steady state; both are printed.  quiet=True first waits (up to
+    10 min) for a 5 s sample with steal under 20%: this host shows
+    steal GUSTS exceeding user time, and timings taken inside one are
+    meaningless, so the A/B probes gate on a quiet window and annotate
+    the share they ran under."""
+    pre = wait_quiet(0.20, 600.0, 5.0) if quiet else 0.0
+    best, cold, steal, rows = timed(count, runs)
+    tail = f"  steal={100 * steal:.0f}% prewait={pre:.2f}" if quiet else ""
+    print(line(best, cold, rows, label, runs) + tail, flush=True)
+
+
+def _uniq_text():
+    """40 md5 words per doc: no 3-shingle in common with any other doc."""
+    return F.concat_ws(
+        " ",
+        F.transform(
+            F.sequence(F.lit(1), F.lit(40)),
+            lambda i: F.md5(
+                F.concat_ws("-", F.col("doc_id").cast("string"), i.cast("string"))
+            ),
+        ),
+    )
+
+
 # ---- 100x subset (r10): one decade more evidence for the 100 TB
 # design claims. Only the tables the subset battery reads are
 # replicated (lineitem 60M rows, documents 500k docs; r11 adds orders
@@ -112,47 +184,17 @@ HUNDRED_OPS = [
 ]
 
 
-def generate_hundred(spark, dst: str, rep: int = 100) -> None:
+def generate_hundred(spark, dst: str, rep: int) -> None:
     # dims copy as-is (q3/q5/q10 read nation/region/supplier from dst)
-    for t in COPY:
-        spark.read.parquet(f"{SRC}/{t}.parquet").write.mode(
-            "overwrite"
-        ).parquet(f"{dst}/{t}.parquet")
-    for t, keys in HUNDRED_TABLES.items():
-        df = spark.read.parquet(f"{SRC}/{t}.parquet")
-        r = df.crossJoin(spark.range(rep).withColumnRenamed("id", "__rep"))
-        for k in keys:
-            r = r.withColumn(k, F.col(k) + F.col("__rep") * OFF)
-        # realistic multi-file layout (r11): the crossJoin inherits the
-        # compact source's 1-2 partitions, so an un-repartitioned write
-        # produced 1-2 giant files whose few splits serialized every
-        # scan (the same compact-input hazard the r9/r10 text-op guard
-        # fixed, here throttling the join headliners) — a real corpus
-        # at this scale is thousands of files
-        r.drop("__rep").repartition(64).write.mode("overwrite").parquet(
-            f"{dst}/{t}.parquet"
-        )
-        n = spark.read.parquet(f"{dst}/{t}.parquet").count()
-        print(f"generated {t} x{rep}: {n} rows")
+    replicate(spark, dst, HUNDRED_TABLES, rep, COPY)
 
 
 def run_hundred(spark, dst: str) -> None:
-    """Time the subset battery min-of-2 in-session (the JIT-retime
-    discipline that adjudicated the r8 watch item: first run pays
-    per-query JIT, min-of-2 reports steady state; both are printed)."""
     import __spark_entry__ as entry
 
     qs = entry.queries()
     for name in HUNDRED_OPS:
-        times = []
-        for _ in range(2):
-            t0 = time.time()
-            cnt = qs[name](spark, dst).count()
-            times.append(time.time() - t0)
-        print(
-            f"{min(times):7.2f}s (cold {times[0]:7.2f}s) {cnt:9d} rows  {name}",
-            flush=True,
-        )
+        probe(name, lambda: qs[name](spark, dst).count())
 
 
 # ---- full-TPC-H 100x battery (r12 second half): the 100x subset
@@ -176,20 +218,7 @@ TPCH_FULL_COPY = ["region", "nation"]
 
 
 def generate_tpch_full(spark, dst: str, rep: int) -> None:
-    for t in TPCH_FULL_COPY:
-        spark.read.parquet(f"{SRC}/{t}.parquet").write.mode(
-            "overwrite"
-        ).parquet(f"{dst}/{t}.parquet")
-    for t, keys in TPCH_FULL_TABLES.items():
-        df = spark.read.parquet(f"{SRC}/{t}.parquet")
-        r = df.crossJoin(spark.range(rep).withColumnRenamed("id", "__rep"))
-        for k in keys:
-            r = r.withColumn(k, F.col(k) + F.col("__rep") * OFF)
-        r.drop("__rep").repartition(64).write.mode("overwrite").parquet(
-            f"{dst}/{t}.parquet"
-        )
-        n = spark.read.parquet(f"{dst}/{t}.parquet").count()
-        print(f"generated {t} x{rep}: {n} rows")
+    replicate(spark, dst, TPCH_FULL_TABLES, rep, TPCH_FULL_COPY)
 
 
 def run_q21_ab(spark, dst: str) -> None:
@@ -217,20 +246,7 @@ def run_q21_ab(spark, dst: str) -> None:
     print(f"q21 A/B: results identical ({len(spec_rows)} rows)", flush=True)
 
     for name, sql in (("spec", spec_sql), ("preagg", preagg_sql)):
-        q = wait_quiet()
-        times = []
-        u0, s0 = _steal_ticks()
-        for _ in range(3):
-            t0 = time.time()
-            spark.sql(sql).count()
-            times.append(time.time() - t0)
-        u1, s1 = _steal_ticks()
-        pct = 100 * (s1 - s0) / max(1, (u1 - u0) + (s1 - s0))
-        print(
-            f"{min(times):7.2f}s (cold {times[0]:7.2f}s) q21_{name}  "
-            f"steal={pct:.0f}% prewait={q:.2f}",
-            flush=True,
-        )
+        probe(f"q21_{name}", lambda: spark.sql(sql).count(), runs=3, quiet=True)
 
 
 def run_tpch_full(spark, dst: str) -> None:
@@ -244,15 +260,7 @@ def run_tpch_full(spark, dst: str) -> None:
         key=lambda n: int(n.split("_")[1][1:]),
     )
     for name in names:
-        times, cnt = [], 0
-        for _ in range(2):
-            t0 = time.time()
-            cnt = qs[name](spark, dst).count()
-            times.append(time.time() - t0)
-        print(
-            f"{min(times):7.2f}s (cold {times[0]:7.2f}s) {cnt:9d} rows  {name}",
-            flush=True,
-        )
+        probe(name, lambda: qs[name](spark, dst).count())
 
 
 # ---- flagship decade (r12, VERDICT r11 task 1): second-decade (100x
@@ -274,16 +282,7 @@ FLAGSHIP_REP = 1000
 
 
 def generate_flagship(spark, dst: str, rep: int) -> None:
-    for t, keys in FLAGSHIP_TABLES.items():
-        df = spark.read.parquet(f"{SRC}/{t}.parquet")
-        r = df.crossJoin(spark.range(rep).withColumnRenamed("id", "__rep"))
-        for k in keys:
-            r = r.withColumn(k, F.col(k) + F.col("__rep") * OFF)
-        r.drop("__rep").repartition(64).write.mode("overwrite").parquet(
-            f"{dst}/{t}.parquet"
-        )
-        n = spark.read.parquet(f"{dst}/{t}.parquet").count()
-        print(f"generated {t} x{rep}: {n} rows")
+    replicate(spark, dst, FLAGSHIP_TABLES, rep)
 
 
 def run_flagship(spark, dst: str) -> None:
@@ -304,32 +303,20 @@ def run_flagship(spark, dst: str) -> None:
     )
 
     qs = entry.queries()
-
-    def probe(name, thunk):
-        times, cnt = [], 0
-        for _ in range(2):
-            t0 = time.time()
-            cnt = thunk().count()
-            times.append(time.time() - t0)
-        print(
-            f"{min(times):7.2f}s (cold {times[0]:7.2f}s) {cnt:9d} rows  {name}",
-            flush=True,
-        )
-
     docs = spark.read.parquet(f"{dst}/documents.parquet")
     emb = spark.read.parquet(f"{dst}/embeddings.parquet")
     probe(
         "minhash_lsh_pairs_collapsed",
-        lambda: minhash_lsh_pairs_collapsed(docs, "doc_id", "text"),
+        lambda: minhash_lsh_pairs_collapsed(docs, "doc_id", "text").count(),
     )
     probe(
         "dedup_semantic_cells(n_centroids=1024)",
         lambda: semantic_dedup(
             emb, "vec_id", "embedding", threshold=0.35, n_centroids=1024
-        ),
+        ).count(),
     )
     for name in ("pipeline_corpus_curation", "dedup_cross_corpus"):
-        probe(name, lambda n=name: qs[n](spark, dst))
+        probe(name, lambda: qs[name](spark, dst).count())
 
 
 # ---- skew probe (r12, VERDICT r11 task 2): every scale replica to
@@ -343,31 +330,18 @@ SKEW_HOT_KEY = 1  # c_custkey 1 — exists at every sf
 
 
 def generate_skew(spark, dst: str, rep: int) -> None:
-    for t in COPY:
-        spark.read.parquet(f"{SRC}/{t}.parquet").write.mode(
-            "overwrite"
-        ).parquet(f"{dst}/{t}.parquet")
-    for t, keys in (
-        ("lineitem", ["l_orderkey"]),
-        ("orders", ["o_orderkey", "o_custkey"]),
-        ("customer", ["c_custkey"]),
-    ):
-        df = spark.read.parquet(f"{SRC}/{t}.parquet")
-        r = df.crossJoin(spark.range(rep).withColumnRenamed("id", "__rep"))
-        for k in keys:
-            r = r.withColumn(k, F.col(k) + F.col("__rep") * OFF)
-        if t == "orders":
-            r = r.withColumn(
-                "o_custkey",
-                F.when(
-                    F.col("o_orderkey") % 5 == 0, F.lit(SKEW_HOT_KEY)
-                ).otherwise(F.col("o_custkey")),
-            )
-        r.drop("__rep").repartition(64).write.mode("overwrite").parquet(
-            f"{dst}/{t}.parquet"
+    def hot_orders(t, r):
+        if t != "orders":
+            return r
+        return r.withColumn(
+            "o_custkey",
+            F.when(
+                F.col("o_orderkey") % 5 == 0, F.lit(SKEW_HOT_KEY)
+            ).otherwise(F.col("o_custkey")),
         )
-        n = spark.read.parquet(f"{dst}/{t}.parquet").count()
-        print(f"generated {t} x{rep}: {n} rows")
+
+    tables = {t: SHIFT[t] for t in ("lineitem", "orders", "customer")}
+    replicate(spark, dst, tables, rep, COPY, derive=hot_orders)
 
 
 def run_skew(spark, dst: str) -> None:
@@ -388,18 +362,7 @@ def run_skew(spark, dst: str) -> None:
 
     qs = entry.queries()
     for name in ("tpch_q3_shipping_priority", "tpch_q10_returned_items"):
-        times = []
-        for _ in range(2):
-            t0 = time.time()
-            cnt = qs[name](spark, dst).count()
-            times.append(time.time() - t0)
-        print(
-            f"{min(times):7.2f}s (cold {times[0]:7.2f}s) {cnt:9d} rows  "
-            f"{name} [session defaults]",
-            flush=True,
-        )
-
-    from pyspark.sql import functions as F
+        probe(f"{name} [session defaults]", lambda: qs[name](spark, dst).count())
 
     orders = spark.read.parquet(f"{dst}/orders.parquet")
     customer = spark.read.parquet(f"{dst}/customer.parquet")
@@ -415,26 +378,22 @@ def run_skew(spark, dst: str) -> None:
             F.sum(F.length("c_name")).alias("sum_name"),
         )
 
-    def timed(name, thunk, grep_plan: str | None = None):
-        times, cnt, plan = [], 0, ""
-        for _ in range(2):
-            t0 = time.time()
-            df = thunk()
+    def forced(label, build, grep_plan: str | None = None):
+        def once():
+            df = build()
             # collect() executes THIS DataFrame's plan — count() builds
             # a separate aggregation plan, leaving df's own
             # AdaptiveSparkPlan at isFinalPlan=false so the skew check
             # would read the pre-runtime plan (r12 probe fix); the A/B
             # arms all end in a global aggregate, so collect is tiny
-            cnt = len(df.collect())
-            times.append(time.time() - t0)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            return len(df.collect()), df
+
+        best, cold, _, (rows, df) = timed(once)
         note = ""
         if grep_plan is not None:
+            plan = df._jdf.queryExecution().executedPlan().toString()
             note = f"  [{grep_plan} in final plan: {grep_plan.lower() in plan.lower()}]"
-        print(
-            f"{min(times):7.2f}s (cold {times[0]:7.2f}s) {cnt:9d} rows  {name}{note}",
-            flush=True,
-        )
+        print(line(best, cold, rows, label) + note, flush=True)
 
     conf = spark.conf
     saved = {
@@ -462,17 +421,17 @@ def run_skew(spark, dst: str) -> None:
         conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4MB")
 
         conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        timed(
+        forced(
             "hot join+agg, shuffle-forced, AQE skew-split ON",
             hot_join,
             grep_plan="skew",
         )
         conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-        timed(
+        forced(
             "hot join+agg, shuffle-forced, skew-split OFF (serialized baseline)",
             hot_join,
         )
-        timed(
+        forced(
             "hot join+agg, salted_skew_join(16) (explicit mitigation)",
             lambda: salted_skew_join(
                 orders, customer, "o_custkey", "c_custkey", num_salts=16
@@ -507,375 +466,58 @@ HOT_REP = 200
 HOT_MOD = 5  # doc_id % 5 == 0 -> hot text: 20% of the corpus
 
 
-def generate_hotcluster(spark, dst: str, rep: int) -> None:
-    docs = spark.read.parquet(f"{SRC}/documents.parquet")
-    r = docs.crossJoin(spark.range(rep).withColumnRenamed("id", "__rep"))
-    r = r.withColumn("doc_id", F.col("doc_id") + F.col("__rep") * OFF)
-    uniq = F.concat_ws(
-        " ",
-        F.transform(
-            F.sequence(F.lit(1), F.lit(40)),
-            lambda i: F.md5(
-                F.concat_ws(
-                    "-", F.col("doc_id").cast("string"), i.cast("string")
-                )
-            ),
-        ),
-    )
-    hot = F.lit(" ".join(f"hotword{i:02d} filler{i:02d}" for i in range(20)))
-    r = r.withColumn(
-        "text",
-        F.when(F.pmod(F.col("doc_id"), F.lit(HOT_MOD)) == 0, hot).otherwise(
-            uniq
-        ),
-    )
-    r.drop("__rep").repartition(64).write.mode("overwrite").parquet(
-        f"{dst}/documents.parquet"
-    )
-    n = spark.read.parquet(f"{dst}/documents.parquet").count()
-    nh = (
-        spark.read.parquet(f"{dst}/documents.parquet")
-        .filter(F.pmod(F.col("doc_id"), F.lit(HOT_MOD)) == 0)
-        .count()
-    )
-    print(f"generated documents x{rep}: {n} rows, hot cluster {nh}")
+def _is_hot():
+    return F.pmod(F.col("doc_id"), F.lit(HOT_MOD)) == 0
 
 
-# ---- near-dup hot bucket (r13, VERDICT r12 task 4): the residual
-# 100 TB hazard collapse-first CANNOT eat — a templated hot cluster of
-# DISTINCT texts (shared 60-word boilerplate + one unique tail word)
-# whose minhash band values mostly coincide (each band's minima come
-# from the shared shingles with prob (20/21)^4 ~ 0.82, so ~82% of the
-# hot docs share ONE mega-bucket per band).  The candidate pair set is
-# quadratic in that bucket's population; the max_bucket cap drops such
-# buckets before the join.  Two fixtures: a small one where the
-# uncapped pair set is still enumerable (the recall ledger), and the
-# 1M-doc one where only the capped form is feasible (the wall-clock
-# evidence).
-HOTNEAR_CYCLE = " ".join(f"boiler{i:02d}" for i in range(20))
-
-
-def generate_hotnear(spark, dst: str, rep: int) -> None:
-    docs = spark.read.parquet(f"{SRC}/documents.parquet")
-    r = docs.crossJoin(spark.range(rep).withColumnRenamed("id", "__rep"))
-    r = r.withColumn("doc_id", F.col("doc_id") + F.col("__rep") * OFF)
-    uniq = F.concat_ws(
-        " ",
-        F.transform(
-            F.sequence(F.lit(1), F.lit(40)),
-            lambda i: F.md5(
-                F.concat_ws(
-                    "-", F.col("doc_id").cast("string"), i.cast("string")
-                )
-            ),
-        ),
-    )
-    hot = F.concat_ws(
-        " ",
-        F.lit(HOTNEAR_CYCLE),
-        F.lit(HOTNEAR_CYCLE),
-        F.lit(HOTNEAR_CYCLE),
-        F.concat(F.lit("uniqtail"), F.col("doc_id").cast("string")),
-    )
-    # COLD near-dup pairs (the recall ledger's non-vacuous side): ids
-    # with doc_id%10 in {1, 6} pair up per decade g=doc_id//10 — a
-    # 3-word cycle keyed by g repeated 2 (for %10==1) or 3 (for %10==6)
-    # times gives the pair identical shingle sets (guaranteed band
-    # collision, bucket population exactly 2) but distinct texts and
-    # distinct buckets across decades.
-    g = (F.col("doc_id") / F.lit(10)).cast("long").cast("string")
-    cold_cycle = F.concat_ws(
-        " ",
-        F.concat(F.lit("cw"), g, F.lit("a")),
-        F.concat(F.lit("cw"), g, F.lit("b")),
-        F.concat(F.lit("cw"), g, F.lit("c")),
-    )
-    cold2 = F.concat_ws(" ", cold_cycle, cold_cycle)
-    cold3 = F.concat_ws(" ", cold_cycle, cold_cycle, cold_cycle)
-    m10 = F.pmod(F.col("doc_id"), F.lit(10))
-    r = r.withColumn(
-        "text",
-        F.when(F.pmod(F.col("doc_id"), F.lit(HOT_MOD)) == 0, hot)
-        .when(m10 == 1, cold2)
-        .when(m10 == 6, cold3)
-        .otherwise(uniq),
-    )
-    r.drop("__rep").repartition(64).write.mode("overwrite").parquet(
-        f"{dst}/documents.parquet"
-    )
-    n = spark.read.parquet(f"{dst}/documents.parquet").count()
-    nh = (
-        spark.read.parquet(f"{dst}/documents.parquet")
-        .filter(F.pmod(F.col("doc_id"), F.lit(HOT_MOD)) == 0)
-        .count()
-    )
-    print(f"generated near-dup documents x{rep}: {n} rows, hot {nh}")
-
-
-def run_hotnear(spark, small_dst: str, big_dst: str, cap: int = 1000) -> None:
-    from flink_1_20_spark.operators.textdedup import minhash_lsh_pairs
-
-    # (a) recall ledger on the small fixture: uncapped still enumerable
-    docs_s = spark.read.parquet(f"{small_dst}/documents.parquet")
-    raw = {
-        (r.id_a, r.id_b)
-        for r in minhash_lsh_pairs(docs_s, "doc_id", "text").collect()
-    }
-    capped = {
-        (r.id_a, r.id_b)
-        for r in minhash_lsh_pairs(
-            docs_s, "doc_id", "text", max_bucket=cap
-        ).collect()
-    }
-    is_hot = lambda d: d % HOT_MOD == 0  # noqa: E731
-    hot_raw = {p for p in raw if is_hot(p[0]) and is_hot(p[1])}
-    cold_raw = raw - hot_raw
-    cold_capped = capped - hot_raw
-    missing_cold = cold_raw - capped
-    cold_recall = (
-        len(cold_capped & cold_raw) / len(cold_raw) if cold_raw else float("nan")
-    )
-    print(
-        f"recall ledger (cap={cap}): raw={len(raw)} "
-        f"(hot {len(hot_raw)}, cold {len(cold_raw)}), "
-        f"capped={len(capped)} (hot kept "
-        f"{len(capped & hot_raw)}), cold recall={cold_recall:.4f} "
-        f"(missing {len(missing_cold)})",
-        flush=True,
-    )
-    assert cold_raw, "fixture must contain cold pairs or the ledger is vacuous"
-    assert not missing_cold, "cap must not lose pairs outside hot buckets"
-
-    # (b) wall clock on the 1M-doc fixture: only the capped form is
-    # feasible — print the accounting that makes the uncapped one not
-    docs_b = spark.read.parquet(f"{big_dst}/documents.parquet")
-    nh = docs_b.filter(F.pmod(F.col("doc_id"), F.lit(HOT_MOD)) == 0).count()
-    mega = int(nh * (20 / 21) ** 4)
-    print(
-        f"big fixture: hot cluster {nh} DISTINCT texts; expected "
-        f"mega-bucket ~{mega}/band -> ~{mega * (mega - 1) // 2:.2e} "
-        "candidate pairs/band uncapped (not run)",
-        flush=True,
-    )
-    wait_quiet()
-    times, cnt = [], 0
-    u0, s0 = _steal_ticks()
-    for _ in range(2):
-        t0 = time.time()
-        cnt = minhash_lsh_pairs(
-            docs_b, "doc_id", "text", max_bucket=cap
-        ).count()
-        times.append(time.time() - t0)
-    u1, s1 = _steal_ticks()
-    pct = 100 * (s1 - s0) / max(1, (u1 - u0) + (s1 - s0))
-    print(
-        f"{min(times):7.2f}s (cold {times[0]:7.2f}s) {cnt:9d} rows  "
-        f"minhash_lsh_pairs capped={cap} [1M docs, {nh} near-dup hot]  "
-        f"steal={pct:.0f}%",
-        flush=True,
-    )
-
-
-# ---- uncapped multi-consumer A/B (r14, VERDICT r13 task 3): the
-# UNCAPPED minhash/ngram/simhash pair paths re-derived the CPU-bound
-# tokenize+shingle(+signature) pass once per consumer subtree (the
-# capped paths gained lazy localCheckpoints in r13: 449 -> 140 s at
-# the 1M-doc hotnear fixture).  Fixture here: 1M UNIQUE 40-word docs —
-# the candidate pair set is ~empty, so wall clock isolates exactly the
-# redundant derivations the checkpoints remove.  The OLD forms are
-# reproduced inline (checkpoint-free) so the A/B runs on one tree.
-def generate_uniqdocs(spark, dst: str, n: int = 1_000_000) -> None:
-    uniq = F.concat_ws(
-        " ",
-        F.transform(
-            F.sequence(F.lit(1), F.lit(40)),
-            lambda i: F.md5(
-                F.concat_ws("-", F.col("doc_id").cast("string"), i.cast("string"))
-            ),
-        ),
-    )
-    (
-        spark.range(n)
-        .withColumnRenamed("id", "doc_id")
-        .withColumn("text", uniq)
-        .repartition(64)
-        .write.mode("overwrite")
-        .parquet(f"{dst}/documents.parquet")
-    )
-    print(f"generated {n} unique docs at {dst}")
-
-
-def _minhash_pairs_old(docs, id_col, text_col):
-    """The pre-r14 UNCAPPED minhash_lsh_pairs body: no localCheckpoint —
-    base/long re-derived per consumer (kept verbatim for the A/B)."""
-    from flink_1_20_spark.operators.textdedup import (
-        _ensure_scan_parallelism, band_keys, jaccard, minhash_signatures,
-        normalized_words, word_shingles,
-    )
-
-    docs = _ensure_scan_parallelism(docs)
-    words = normalized_words(F.col(text_col))
-    sh = word_shingles(words, 3).alias("shingles")
-    base = docs.select(F.col(id_col).alias("doc"), sh)
-    base = base.filter(F.size("shingles") > 0)
-    sigs = minhash_signatures(base, "doc", "shingles", 16)
-    banded = sigs.select("doc", *band_keys("mh", 16, 4))
-    band_struct = F.array(
-        *[
-            F.struct(F.lit(b).alias("band_idx"), F.col(f"band{b}").alias("band_hash"))
-            for b in range(4)
-        ]
-    )
-    long = banded.select("doc", F.explode(band_struct).alias("bk")).select(
-        "doc", "bk.band_idx", "bk.band_hash"
-    )
-    pairs = (
-        long.select(F.col("doc").alias("id_a"), "band_idx", "band_hash")
-        .join(long.select(F.col("doc").alias("id_b"), "band_idx", "band_hash"),
-              ["band_idx", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sh_a = base.select(F.col("doc").alias("id_a"), F.col("shingles").alias("sh_a"))
-    sh_b = base.select(F.col("doc").alias("id_b"), F.col("shingles").alias("sh_b"))
-    return (
-        pairs.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .withColumn("jac", jaccard(F.col("sh_a"), F.col("sh_b")))
-        .filter(F.col("jac") >= 0.5)
-        .select("id_a", "id_b", F.round("jac", 6).alias("jac"))
-    )
-
-
-def _ngram_pairs_old(docs, id_col, text_col):
-    """The pre-r14 ngram_jaccard_pairs body (checkpoint-free)."""
-    from flink_1_20_spark.operators.textdedup import (
-        _ensure_scan_parallelism, normalized_words, word_shingles,
-    )
-
-    docs = _ensure_scan_parallelism(docs)
-    words = normalized_words(F.col(text_col))
-    base = docs.select(
-        F.col(id_col).alias("doc"), word_shingles(words, 3).alias("shingles")
-    ).filter(F.size("shingles") > 0)
-    sizes = base.select("doc", F.size("shingles").alias("n_sh"))
-    inv = base.select("doc", F.explode("shingles").alias("sh"))
-    a = inv.select(F.col("doc").alias("id_a"), "sh")
-    b = inv.select(F.col("doc").alias("id_b"), "sh")
-    shared = (
-        a.join(b, "sh")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    return (
-        shared.join(sizes.withColumnRenamed("doc", "id_a").withColumnRenamed("n_sh", "na"), "id_a")
-        .join(sizes.withColumnRenamed("doc", "id_b").withColumnRenamed("n_sh", "nb"), "id_b")
-        .withColumn("jac", F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")))
-        .filter(F.col("jac") >= 0.4)
-        .select("id_a", "id_b", F.round("jac", 6).alias("jac"))
-    )
-
-
-def run_uncapped_ab(spark, dst: str) -> None:
-    from flink_1_20_spark.operators.textdedup import (
-        minhash_lsh_pairs, ngram_jaccard_pairs,
-    )
-
+def _hot_counts(spark, dst: str) -> tuple[int, int]:
     docs = spark.read.parquet(f"{dst}/documents.parquet")
-    battery = [
-        ("minhash_old", lambda: _minhash_pairs_old(docs, "doc_id", "text")),
-        ("minhash_new", lambda: minhash_lsh_pairs(docs, "doc_id", "text")),
-        ("ngram_old", lambda: _ngram_pairs_old(docs, "doc_id", "text")),
-        ("ngram_new", lambda: ngram_jaccard_pairs(docs, "doc_id", "text")),
-    ]
-    for tag, mk in battery:
-        wait_quiet()
-        times = []
-        u0, s0 = _steal_ticks()
-        for _ in range(2):
-            t0 = time.time()
-            cnt = mk().count()
-            times.append(time.time() - t0)
-        u1, s1 = _steal_ticks()
-        pct = 100 * (s1 - s0) / max(1, (u1 - u0) + (s1 - s0))
-        print(
-            f"{min(times):7.2f}s (cold {times[0]:7.2f}s) {cnt:6d} rows "
-            f"{tag} [1M unique docs] steal={pct:.0f}%",
-            flush=True,
-        )
+    return docs.count(), docs.filter(_is_hot()).count()
 
 
-def _steal_ticks() -> tuple[int, int]:
-    with open("/proc/stat") as f:
-        p = f.readline().split()
-    return int(p[1]), int(p[8])  # user, steal
-
-
-def wait_quiet(threshold: float = 0.20, max_wait: float = 600.0) -> float:
-    """Block until hypervisor CPU steal over a 5 s sample drops below
-    `threshold` (fraction of user+steal), or max_wait passes.  This
-    session's host shows steal GUSTS exceeding user time — timings
-    taken inside one are meaningless, so probes gate on a quiet
-    window and annotate the ratio they ran under."""
-    t0 = time.time()
-    ratio = 1.0
-    while time.time() - t0 < max_wait:
-        u0, s0 = _steal_ticks()
-        time.sleep(5)
-        u1, s1 = _steal_ticks()
-        du, ds = u1 - u0, s1 - s0
-        ratio = ds / max(1, du + ds)
-        if ratio < threshold:
-            return ratio
-    return ratio
+def generate_hotcluster(spark, dst: str, rep: int) -> None:
+    hot = F.lit(" ".join(f"hotword{i:02d} filler{i:02d}" for i in range(20)))
+    replicate(
+        spark, dst, {"documents": ["doc_id"]}, rep, fmt=None,
+        derive=lambda t, r: r.withColumn(
+            "text", F.when(_is_hot(), hot).otherwise(_uniq_text())
+        ),
+    )
+    n, nh = _hot_counts(spark, dst)
+    print(f"generated documents x{rep}: {n} rows, hot cluster {nh}")
 
 
 def run_hotcluster(spark, dst: str) -> None:
     import __spark_entry__ as entry
 
-    from flink_1_20_spark.operators.textdedup import collapse_exact
-
     qs = entry.queries()
-
-    def timed(name, thunk):
-        wait_quiet()
-        times, cnt = [], 0
-        u0, s0 = _steal_ticks()
-        for _ in range(2):
-            t0 = time.time()
-            cnt = thunk().count()
-            times.append(time.time() - t0)
-        u1, s1 = _steal_ticks()
-        pct = 100 * (s1 - s0) / max(1, (u1 - u0) + (s1 - s0))
-        print(
-            f"{min(times):7.2f}s (cold {times[0]:7.2f}s) {cnt:9d} rows  "
-            f"{name}  steal={pct:.0f}%",
-            flush=True,
-        )
-
     docs = spark.read.parquet(f"{dst}/documents.parquet")
     # (a) hot GROUP BY keys: exact dedup + the curation funnel
-    timed("dedup_exact [hot md5 key]", lambda: qs["dedup_exact"](spark, dst))
-    timed(
+    probe(
+        "dedup_exact [hot md5 key]",
+        lambda: qs["dedup_exact"](spark, dst).count(),
+        quiet=True,
+    )
+    probe(
         "pipeline_corpus_curation [hot content hash]",
-        lambda: qs["pipeline_corpus_curation"](spark, dst),
+        lambda: qs["pipeline_corpus_curation"](spark, dst).count(),
+        quiet=True,
     )
     # (b) collapse-first clustering: the hot cluster is ONE node; print
     # the pair-graph accounting that makes the raw form infeasible
-    k = docs.filter(F.pmod(F.col("doc_id"), F.lit(HOT_MOD)) == 0).count()
+    k = docs.filter(_is_hot()).count()
     print(
         f"raw LSH pair graph would carry K(K-1)/2 = {k * (k - 1) // 2:,} "
         f"exact-dup pairs for the hot cluster alone (K={k:,}) — not "
         "enumerated; the collapsed form contracts it to one node:",
         flush=True,
     )
-    timed(
+    probe(
         "dedup_cluster_best_representative_collapsed [1M docs, 200k hot]",
         lambda: qs["dedup_cluster_best_representative_collapsed"](
             spark, dst
-        ),
+        ).count(),
+        quiet=True,
     )
     # (c) keep-decision A/B on a synthetic labeled membership with the
     # same Zipfian shape: window row_number serializes the hot
@@ -919,26 +561,232 @@ def run_hotcluster(spark, dst: str) -> None:
             F.count(F.lit(1)).alias("n_members"),
         )
 
-    timed("keep-decision: row_number window + sizes join", keep_window)
-    timed("keep-decision: max_by single agg", keep_maxby)
+    probe(
+        "keep-decision: row_number window + sizes join",
+        lambda: keep_window().count(),
+        quiet=True,
+    )
+    probe("keep-decision: max_by single agg", lambda: keep_maxby().count(), quiet=True)
+
+
+# ---- near-dup hot bucket (r13, VERDICT r12 task 4): the residual
+# 100 TB hazard collapse-first CANNOT eat — a templated hot cluster of
+# DISTINCT texts (shared 60-word boilerplate + one unique tail word)
+# whose minhash band values mostly coincide (each band's minima come
+# from the shared shingles with prob (20/21)^4 ~ 0.82, so ~82% of the
+# hot docs share ONE mega-bucket per band).  The candidate pair set is
+# quadratic in that bucket's population; the max_bucket cap drops such
+# buckets before the join.  Two fixtures: a small one (<dst>s, rep 2)
+# where the uncapped pair set is still enumerable (the recall ledger),
+# and the 1M-doc one where only the capped form is feasible (the
+# wall-clock evidence).
+HOTNEAR_CYCLE = " ".join(f"boiler{i:02d}" for i in range(20))
+
+
+def _hotnear_text(t, r):
+    hot = F.concat_ws(
+        " ",
+        F.lit(HOTNEAR_CYCLE),
+        F.lit(HOTNEAR_CYCLE),
+        F.lit(HOTNEAR_CYCLE),
+        F.concat(F.lit("uniqtail"), F.col("doc_id").cast("string")),
+    )
+    # COLD near-dup pairs (the recall ledger's non-vacuous side): ids
+    # with doc_id%10 in {1, 6} pair up per decade g=doc_id//10 — a
+    # 3-word cycle keyed by g repeated 2 (for %10==1) or 3 (for %10==6)
+    # times gives the pair identical shingle sets (guaranteed band
+    # collision, bucket population exactly 2) but distinct texts and
+    # distinct buckets across decades.
+    g = (F.col("doc_id") / F.lit(10)).cast("long").cast("string")
+    cold_cycle = F.concat_ws(
+        " ",
+        F.concat(F.lit("cw"), g, F.lit("a")),
+        F.concat(F.lit("cw"), g, F.lit("b")),
+        F.concat(F.lit("cw"), g, F.lit("c")),
+    )
+    cold2 = F.concat_ws(" ", cold_cycle, cold_cycle)
+    cold3 = F.concat_ws(" ", cold_cycle, cold_cycle, cold_cycle)
+    m10 = F.pmod(F.col("doc_id"), F.lit(10))
+    return r.withColumn(
+        "text",
+        F.when(_is_hot(), hot)
+        .when(m10 == 1, cold2)
+        .when(m10 == 6, cold3)
+        .otherwise(_uniq_text()),
+    )
+
+
+def generate_hotnear(spark, dst: str, rep: int) -> None:
+    for d, k in ((dst + "s", 2), (dst, rep)):
+        replicate(spark, d, {"documents": ["doc_id"]}, k, derive=_hotnear_text, fmt=None)
+        n, nh = _hot_counts(spark, d)
+        print(f"generated near-dup documents x{k}: {n} rows, hot {nh}")
+
+
+def run_hotnear(spark, big_dst: str, cap: int = 1000) -> None:
+    from flink_1_20_spark.operators.textdedup import minhash_lsh_pairs
+
+    # (a) recall ledger on the small fixture: uncapped still enumerable
+    docs_s = spark.read.parquet(f"{big_dst}s/documents.parquet")
+    raw = {
+        (r.id_a, r.id_b)
+        for r in minhash_lsh_pairs(docs_s, "doc_id", "text").collect()
+    }
+    capped = {
+        (r.id_a, r.id_b)
+        for r in minhash_lsh_pairs(
+            docs_s, "doc_id", "text", max_bucket=cap
+        ).collect()
+    }
+    is_hot = lambda d: d % HOT_MOD == 0  # noqa: E731
+    hot_raw = {p for p in raw if is_hot(p[0]) and is_hot(p[1])}
+    cold_raw = raw - hot_raw
+    cold_capped = capped - hot_raw
+    missing_cold = cold_raw - capped
+    cold_recall = (
+        len(cold_capped & cold_raw) / len(cold_raw) if cold_raw else float("nan")
+    )
+    print(
+        f"recall ledger (cap={cap}): raw={len(raw)} "
+        f"(hot {len(hot_raw)}, cold {len(cold_raw)}), "
+        f"capped={len(capped)} (hot kept "
+        f"{len(capped & hot_raw)}), cold recall={cold_recall:.4f} "
+        f"(missing {len(missing_cold)})",
+        flush=True,
+    )
+    assert cold_raw, "fixture must contain cold pairs or the ledger is vacuous"
+    assert not missing_cold, "cap must not lose pairs outside hot buckets"
+
+    # (b) wall clock on the 1M-doc fixture: only the capped form is
+    # feasible — print the accounting that makes the uncapped one not
+    docs_b = spark.read.parquet(f"{big_dst}/documents.parquet")
+    nh = docs_b.filter(_is_hot()).count()
+    mega = int(nh * (20 / 21) ** 4)
+    print(
+        f"big fixture: hot cluster {nh} DISTINCT texts; expected "
+        f"mega-bucket ~{mega}/band -> ~{mega * (mega - 1) // 2:.2e} "
+        "candidate pairs/band uncapped (not run)",
+        flush=True,
+    )
+    probe(
+        f"minhash_lsh_pairs capped={cap} [1M docs, {nh} near-dup hot]",
+        lambda: minhash_lsh_pairs(docs_b, "doc_id", "text", max_bucket=cap).count(),
+        quiet=True,
+    )
+
+
+# ---- uncapped multi-consumer A/B (r14, VERDICT r13 task 3): the
+# UNCAPPED minhash/ngram/simhash pair paths re-derived the CPU-bound
+# tokenize+shingle(+signature) pass once per consumer subtree (the
+# capped paths gained lazy localCheckpoints in r13: 449 -> 140 s at
+# the 1M-doc hotnear fixture).  Fixture here: 1M UNIQUE 40-word docs —
+# the candidate pair set is ~empty, so wall clock isolates exactly the
+# redundant derivations the checkpoints remove.  The OLD forms are
+# reproduced inline (checkpoint-free) so the A/B runs on one tree.
+def generate_uniqdocs(spark, dst: str, rep=None, n: int = 1_000_000) -> None:
+    (
+        spark.range(n)
+        .withColumnRenamed("id", "doc_id")
+        .withColumn("text", _uniq_text())
+        .repartition(64)
+        .write.mode("overwrite")
+        .parquet(f"{dst}/documents.parquet")
+    )
+    print(f"generated {n} unique docs at {dst}")
+
+
+def _minhash_pairs_old(docs, id_col, text_col):
+    """The pre-r14 UNCAPPED minhash_lsh_pairs body: no localCheckpoint —
+    base/long re-derived per consumer (kept verbatim for the A/B)."""
+    from flink_1_20_spark.operators.textdedup import (
+        band_keys, jaccard, minhash_signatures, normalized_words,
+        word_shingles,
+    )
+
+    docs = ensure_scan_parallelism(docs)
+    words = normalized_words(F.col(text_col))
+    sh = word_shingles(words, 3).alias("shingles")
+    base = docs.select(F.col(id_col).alias("doc"), sh)
+    base = base.filter(F.size("shingles") > 0)
+    sigs = minhash_signatures(base, "doc", "shingles", 16)
+    banded = sigs.select("doc", *band_keys("mh", 16, 4))
+    band_struct = F.array(
+        *[
+            F.struct(F.lit(b).alias("band_idx"), F.col(f"band{b}").alias("band_hash"))
+            for b in range(4)
+        ]
+    )
+    long = banded.select("doc", F.explode(band_struct).alias("bk")).select(
+        "doc", "bk.band_idx", "bk.band_hash"
+    )
+    pairs = (
+        long.select(F.col("doc").alias("id_a"), "band_idx", "band_hash")
+        .join(long.select(F.col("doc").alias("id_b"), "band_idx", "band_hash"),
+              ["band_idx", "band_hash"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .dropDuplicates(["id_a", "id_b"])
+    )
+    sh_a = base.select(F.col("doc").alias("id_a"), F.col("shingles").alias("sh_a"))
+    sh_b = base.select(F.col("doc").alias("id_b"), F.col("shingles").alias("sh_b"))
+    return (
+        pairs.join(sh_a, "id_a")
+        .join(sh_b, "id_b")
+        .withColumn("jac", jaccard(F.col("sh_a"), F.col("sh_b")))
+        .filter(F.col("jac") >= 0.5)
+        .select("id_a", "id_b", F.round("jac", 6).alias("jac"))
+    )
+
+
+def _ngram_pairs_old(docs, id_col, text_col):
+    """The pre-r14 ngram_jaccard_pairs body (checkpoint-free)."""
+    from flink_1_20_spark.operators.textdedup import (
+        normalized_words, word_shingles,
+    )
+
+    docs = ensure_scan_parallelism(docs)
+    words = normalized_words(F.col(text_col))
+    base = docs.select(
+        F.col(id_col).alias("doc"), word_shingles(words, 3).alias("shingles")
+    ).filter(F.size("shingles") > 0)
+    sizes = base.select("doc", F.size("shingles").alias("n_sh"))
+    inv = base.select("doc", F.explode("shingles").alias("sh"))
+    a = inv.select(F.col("doc").alias("id_a"), "sh")
+    b = inv.select(F.col("doc").alias("id_b"), "sh")
+    shared = (
+        a.join(b, "sh")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").alias("inter"))
+    )
+    return (
+        shared.join(sizes.withColumnRenamed("doc", "id_a").withColumnRenamed("n_sh", "na"), "id_a")
+        .join(sizes.withColumnRenamed("doc", "id_b").withColumnRenamed("n_sh", "nb"), "id_b")
+        .withColumn("jac", F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")))
+        .filter(F.col("jac") >= 0.4)
+        .select("id_a", "id_b", F.round("jac", 6).alias("jac"))
+    )
+
+
+def run_uncapped_ab(spark, dst: str) -> None:
+    from flink_1_20_spark.operators.textdedup import (
+        minhash_lsh_pairs, ngram_jaccard_pairs,
+    )
+
+    docs = spark.read.parquet(f"{dst}/documents.parquet")
+    battery = [
+        ("minhash_old", lambda: _minhash_pairs_old(docs, "doc_id", "text")),
+        ("minhash_new", lambda: minhash_lsh_pairs(docs, "doc_id", "text")),
+        ("ngram_old", lambda: _ngram_pairs_old(docs, "doc_id", "text")),
+        ("ngram_new", lambda: ngram_jaccard_pairs(docs, "doc_id", "text")),
+    ]
+    for tag, mk in battery:
+        probe(f"{tag} [1M unique docs]", lambda: mk().count(), quiet=True)
 
 
 def generate(spark, dst: str, rep: int) -> None:
-    for t in COPY:
-        spark.read.parquet(f"{SRC}/{t}.parquet").write.mode(
-            "overwrite"
-        ).parquet(f"{dst}/{t}.parquet")
-    for t, keys in SHIFT.items():
-        df = spark.read.parquet(f"{SRC}/{t}.parquet")
-        r = df.crossJoin(spark.range(rep).withColumnRenamed("id", "__rep"))
-        for k in keys:
-            r = r.withColumn(k, F.col(k) + F.col("__rep") * OFF)
-        # multi-file layout, same rationale as generate_hundred (r11)
-        r.drop("__rep").repartition(64).write.mode("overwrite").parquet(
-            f"{dst}/{t}.parquet"
-        )
-        n = spark.read.parquet(f"{dst}/{t}.parquet").count()
-        print(f"generated {t}: {n} rows")
+    # multi-file layout, same rationale as generate_hundred (r11)
+    replicate(spark, dst, SHIFT, rep, COPY, fmt="generated {t}: {n} rows")
 
 
 def run(spark, dst: str) -> None:
@@ -946,151 +794,98 @@ def run(spark, dst: str) -> None:
 
     qs = entry.queries()
     for name in HEAVY:
-        t0 = time.time()
-        cnt = qs[name](spark, dst).count()
-        print(f"{time.time() - t0:7.2f}s {cnt:9d} rows  {name}", flush=True)
+        probe(name, lambda: qs[name](spark, dst).count(), runs=1)
     # r8: trained-centroid IVFADC gate — unregistered (k-means is not
     # SQL-expressible, so it has no oracle), probed here for scale and
     # for the recall/balance numbers at 10x
     from flink_1_20_spark.queries.training_prep import ivfpq_trained_gate
 
-    t0 = time.time()
-    row = ivfpq_trained_gate(spark, dst).collect()[0]
-    print(
-        f"{time.time() - t0:7.2f}s {1:9d} rows  ivfpq_trained_gate "
-        f"(recall_vs_flat={row['recall_vs_flat']}, "
-        f"balance_ratio={row['balance_ratio']})",
-        flush=True,
+    dt, _, _, row = timed(lambda: ivfpq_trained_gate(spark, dst).collect()[0], 1)
+    label = (
+        f"ivfpq_trained_gate (recall_vs_flat={row['recall_vs_flat']}, "
+        f"balance_ratio={row['balance_ratio']})"
     )
+    print(line(dt, dt, 1, label, runs=1), flush=True)
+
+
+class Mode(NamedTuple):
+    rep: int | None  # default --rep
+    dst: str  # default --dst
+    gen: Callable | None  # gen(spark, dst, rep); None: the mode only runs
+    run: Callable  # run(spark, dst)
+    help: str | None
+
+
+# Mode flags in --help order (the first one given wins); defaults
+# resolve per mode — an EXPLICIT --rep 10 with --hundred must stay 10,
+# not silently become 100.
+MODES = {
+    "hundred": Mode(
+        100, "/tmp/sfX2", generate_hundred, run_hundred,
+        "100x subset mode: lineitem+documents only, subset battery "
+        "(default --rep 100, --dst /tmp/sfX2)",
+    ),
+    "tpch_full": Mode(
+        100, "/tmp/sfX6", generate_tpch_full, run_tpch_full,
+        "full-TPC-H 100x mode: all 22 queries on a fixture where "
+        "part/supplier scale too (default --rep 100, --dst /tmp/sfX6)",
+    ),
+    "flagship": Mode(
+        FLAGSHIP_REP, "/tmp/sfX3", generate_flagship, run_flagship,
+        "flagship-decade mode: documents+embeddings at 1000x "
+        "(5M docs / 2M embeddings), the four dedup/similarity flagships "
+        "(default --dst /tmp/sfX3)",
+    ),
+    "hotcluster": Mode(
+        HOT_REP, "/tmp/sfX7", generate_hotcluster, run_hotcluster,
+        "Zipfian duplicate-content mode: 1M docs, 20%% share one "
+        "hot text; hot GROUP BY keys, collapse-first clustering, "
+        "keep-decision A/B (default --rep 200, --dst /tmp/sfX7)",
+    ),
+    "skew": Mode(
+        100, "/tmp/sfX5", generate_skew, run_skew,
+        "Zipfian hot-key mode: one customer carries 20%% of orders "
+        "at 100x; AQE skew-split vs salted join A/B "
+        "(default --dst /tmp/sfX5)",
+    ),
+    "hotnear": Mode(
+        HOT_REP, "/tmp/sfX8", generate_hotnear, run_hotnear,
+        "near-dup templated hot bucket: small recall-ledger "
+        "fixture (/tmp/sfX8s, rep 2) + 1M-doc capped wall clock "
+        "(/tmp/sfX8, rep 200)",
+    ),
+    "q21ab": Mode(
+        None, "/tmp/sfX6", None, run_q21_ab,
+        "q21 spec-vs-preagg A/B on the --tpch-full fixture "
+        "(default --dst /tmp/sfX6; generate it with --tpch-full --gen)",
+    ),
+    "uncappedab": Mode(
+        None, "/tmp/sfX9", generate_uniqdocs, run_uncapped_ab,
+        "uncapped minhash/ngram multi-consumer checkpoint A/B on "
+        "a 1M-unique-doc fixture (default --dst /tmp/sfX9)",
+    ),
+}
+DEFAULT = Mode(10, "/tmp/sfX1", generate, run, None)
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    # defaults resolve per mode (None sentinel — an EXPLICIT --rep 10
-    # with --hundred must stay 10, not silently become 100)
     ap.add_argument("--rep", type=int, default=None)
     ap.add_argument("--dst", default=None)
     ap.add_argument("--gen", action="store_true")
     ap.add_argument("--run", action="store_true")
-    ap.add_argument(
-        "--hundred",
-        action="store_true",
-        help="100x subset mode: lineitem+documents only, subset battery "
-        "(default --rep 100, --dst /tmp/sfX2)",
-    )
-    ap.add_argument(
-        "--tpch-full",
-        action="store_true",
-        help="full-TPC-H 100x mode: all 22 queries on a fixture where "
-        "part/supplier scale too (default --rep 100, --dst /tmp/sfX6)",
-    )
-    ap.add_argument(
-        "--flagship",
-        action="store_true",
-        help="flagship-decade mode: documents+embeddings at 1000x "
-        "(5M docs / 2M embeddings), the four dedup/similarity flagships "
-        "(default --dst /tmp/sfX3)",
-    )
-    ap.add_argument(
-        "--hotcluster",
-        action="store_true",
-        help="Zipfian duplicate-content mode: 1M docs, 20%% share one "
-        "hot text; hot GROUP BY keys, collapse-first clustering, "
-        "keep-decision A/B (default --rep 200, --dst /tmp/sfX7)",
-    )
-    ap.add_argument(
-        "--skew",
-        action="store_true",
-        help="Zipfian hot-key mode: one customer carries 20%% of orders "
-        "at 100x; AQE skew-split vs salted join A/B "
-        "(default --dst /tmp/sfX5)",
-    )
-    ap.add_argument(
-        "--hotnear",
-        action="store_true",
-        help="near-dup templated hot bucket: small recall-ledger "
-        "fixture (/tmp/sfX8s, rep 2) + 1M-doc capped wall clock "
-        "(/tmp/sfX8, rep 200)",
-    )
-    ap.add_argument(
-        "--q21ab",
-        action="store_true",
-        help="q21 spec-vs-preagg A/B on the --tpch-full fixture "
-        "(default --dst /tmp/sfX6; generate it with --tpch-full --gen)",
-    )
-    ap.add_argument(
-        "--uncappedab",
-        action="store_true",
-        help="uncapped minhash/ngram multi-consumer checkpoint A/B on "
-        "a 1M-unique-doc fixture (default --dst /tmp/sfX9)",
-    )
+    for flag, mode in MODES.items():
+        ap.add_argument(f"--{flag.replace('_', '-')}", action="store_true", help=mode.help)
     args = ap.parse_args()
+    mode = next((m for flag, m in MODES.items() if getattr(args, flag)), DEFAULT)
+    rep = mode.rep if args.rep is None else args.rep
+    dst = mode.dst if args.dst is None else args.dst
+    both = not (args.gen or args.run)
     spark = get_spark("scale-probe")
-    if args.q21ab:
-        run_q21_ab(spark, args.dst if args.dst is not None else "/tmp/sfX6")
-        return
-    if args.uncappedab:
-        dst = args.dst if args.dst is not None else "/tmp/sfX9"
-        if args.gen or not (args.gen or args.run):
-            generate_uniqdocs(spark, dst)
-        if args.run or not (args.gen or args.run):
-            run_uncapped_ab(spark, dst)
-        return
-    if args.hotnear:
-        big = args.dst if args.dst is not None else "/tmp/sfX8"
-        small = big + "s"
-        if args.gen or not (args.gen or args.run):
-            generate_hotnear(spark, small, 2)
-            generate_hotnear(spark, big, args.rep if args.rep is not None else HOT_REP)
-        if args.run or not (args.gen or args.run):
-            run_hotnear(spark, small, big)
-        return
-    if args.tpch_full:
-        rep = args.rep if args.rep is not None else 100
-        dst = args.dst if args.dst is not None else "/tmp/sfX6"
-        if args.gen or not (args.gen or args.run):
-            generate_tpch_full(spark, dst, rep)
-        if args.run or not (args.gen or args.run):
-            run_tpch_full(spark, dst)
-        return
-    if args.flagship:
-        rep = args.rep if args.rep is not None else FLAGSHIP_REP
-        dst = args.dst if args.dst is not None else "/tmp/sfX3"
-        if args.gen or not (args.gen or args.run):
-            generate_flagship(spark, dst, rep)
-        if args.run or not (args.gen or args.run):
-            run_flagship(spark, dst)
-        return
-    if args.hotcluster:
-        rep = args.rep if args.rep is not None else HOT_REP
-        dst = args.dst if args.dst is not None else "/tmp/sfX7"
-        if args.gen or not (args.gen or args.run):
-            generate_hotcluster(spark, dst, rep)
-        if args.run or not (args.gen or args.run):
-            run_hotcluster(spark, dst)
-        return
-    if args.skew:
-        rep = args.rep if args.rep is not None else 100
-        dst = args.dst if args.dst is not None else "/tmp/sfX5"
-        if args.gen or not (args.gen or args.run):
-            generate_skew(spark, dst, rep)
-        if args.run or not (args.gen or args.run):
-            run_skew(spark, dst)
-        return
-    if args.hundred:
-        rep = args.rep if args.rep is not None else 100
-        dst = args.dst if args.dst is not None else "/tmp/sfX2"
-        if args.gen or not (args.gen or args.run):
-            generate_hundred(spark, dst, rep)
-        if args.run or not (args.gen or args.run):
-            run_hundred(spark, dst)
-        return
-    rep = args.rep if args.rep is not None else 10
-    dst = args.dst if args.dst is not None else "/tmp/sfX1"
-    if args.gen or not (args.gen or args.run):
-        generate(spark, dst, rep)
-    if args.run or not (args.gen or args.run):
-        run(spark, dst)
+    if mode.gen is not None and (args.gen or both):
+        mode.gen(spark, dst, rep)
+    if mode.gen is None or args.run or both:
+        mode.run(spark, dst)
 
 
 if __name__ == "__main__":

@@ -665,12 +665,7 @@ def test_ensure_scan_parallelism_guard(spark, tmp_path):
     serialized onto one core), stay a NO-OP at healthy split counts,
     and skip non-file inputs — all decided from metadata only (no jobs
     at build time)."""
-    from flink_1_20_spark.operators.textdedup import _ensure_scan_parallelism
     from flink_1_20_spark.operators.util import ensure_scan_parallelism
-
-    # r11 ADVICE: the cross-module contract is the PUBLIC name in
-    # operators/util; textdedup's private name is the same object
-    assert _ensure_scan_parallelism is ensure_scan_parallelism
 
     cores = spark.sparkContext.defaultParallelism
     rows = spark.range(1000).selectExpr("id AS doc_id", "repeat('x', 50) AS text")
@@ -679,7 +674,7 @@ def test_ensure_scan_parallelism_guard(spark, tmp_path):
     rows.coalesce(1).write.parquet(one)
     compact = spark.read.parquet(one)
     assert len(compact.inputFiles()) == 1
-    assert _ensure_scan_parallelism(compact).rdd.getNumPartitions() == cores
+    assert ensure_scan_parallelism(compact).rdd.getNumPartitions() == cores
     # a few files but < cores -> guard still fires (r10: the old
     # cores//2 bar left a 3-file scan at 3-way parallelism, and was
     # unsatisfiable outright at defaultParallelism <= 2). Skipped when
@@ -690,7 +685,7 @@ def test_ensure_scan_parallelism_guard(spark, tmp_path):
         rows.repartition(3).write.parquet(few)
         assert 0 < len(spark.read.parquet(few).inputFiles()) < cores
         assert (
-            _ensure_scan_parallelism(spark.read.parquet(few)).rdd.getNumPartitions()
+            ensure_scan_parallelism(spark.read.parquet(few)).rdd.getNumPartitions()
             == cores
         )
     # many files -> no-op (the SAME plan object back, no extra exchange)
@@ -698,10 +693,10 @@ def test_ensure_scan_parallelism_guard(spark, tmp_path):
     rows.repartition(cores).write.parquet(many)
     healthy = spark.read.parquet(many)
     assert len(healthy.inputFiles()) >= cores
-    assert _ensure_scan_parallelism(healthy) is healthy
+    assert ensure_scan_parallelism(healthy) is healthy
     # non-file input (no listing) -> no-op
     mem = spark.createDataFrame([(1, "t")], "doc_id long, text string")
-    assert _ensure_scan_parallelism(mem) is mem
+    assert ensure_scan_parallelism(mem) is mem
     # few LARGE splittable files -> no-op (r11 ADVICE: files are not
     # splits; the guard estimates splits as ceil(size/maxPartitionBytes)
     # per file and skips when the scan is already wide). Simulated by
@@ -716,7 +711,7 @@ def test_ensure_scan_parallelism_guard(spark, tmp_path):
         spark.conf.set(
             "spark.sql.files.maxPartitionBytes", str(max(1, fsize // cores))
         )
-        assert _ensure_scan_parallelism(compact) is compact
+        assert ensure_scan_parallelism(compact) is compact
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
     # derived (post-shuffle) input over a compact FILE source -> FIRES
@@ -731,7 +726,7 @@ def test_ensure_scan_parallelism_guard(spark, tmp_path):
     assert reps.rdd.getNumPartitions() <= 2, (
         "premise: AQE coalesces the compact post-shuffle output"
     )
-    assert _ensure_scan_parallelism(reps).rdd.getNumPartitions() == cores
+    assert ensure_scan_parallelism(reps).rdd.getNumPartitions() == cores
     # broadcast-JOINED but unshuffled frame fires too (a broadcast join
     # keeps the probe side's scan partitioning)
     joined = compact.join(
@@ -739,7 +734,7 @@ def test_ensure_scan_parallelism_guard(spark, tmp_path):
         "doc_id",
         "left",
     )
-    assert _ensure_scan_parallelism(joined) is not joined
+    assert ensure_scan_parallelism(joined) is not joined
 
 
 def test_exact_substring_decontaminate(spark):

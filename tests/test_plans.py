@@ -371,18 +371,24 @@ def test_exact_substring_dedup_no_nlj_and_partitioned_windows(spark, sf_dir, que
         assert "doc#" in ln.split("windowspecdefinition(", 1)[1], ln
 
 
-def test_minhash_shingles_once(spark, sf_dir):
-    """MinHash LSH tokenizes and shingles the corpus ONCE: `base` is
-    checkpointed before the signatures derive from it, so of all the
+@pytest.mark.parametrize(
+    "pair_fn, n_stored",
+    [("minhash_lsh_pairs", 2), ("ngram_jaccard_pairs", 1)],
+    ids=["minhash_lsh_pairs", "ngram_jaccard_pairs"],
+)
+def test_minhash_shingles_once(spark, sf_dir, pair_fn, n_stored):
+    """The pair operators tokenize and shingle the corpus ONCE: `base`
+    is checkpointed before anything derives from it, so of all the
     plans that execute (each checkpointed subtree plus the final join)
     exactly one computes the shingle arrays, once; the others read
-    stored blocks.  Deriving the signatures from the un-checkpointed
-    `base` put a second shingle pass into `long`'s plan, and a
-    `size(shingles) > 0` filter pushed below the projection a third."""
+    stored blocks.  MinHash deriving its signatures from the
+    un-checkpointed `base` put a second shingle pass into `long`'s
+    plan, and a `size(shingles) > 0` filter, which Catalyst pushes
+    below the projection, a third (ngram: a second)."""
     from unittest import mock
 
     from flink_1_20_spark.catalog import read_table
-    from flink_1_20_spark.operators.textdedup import minhash_lsh_pairs
+    from flink_1_20_spark.operators import textdedup
 
     docs = read_table(spark, sf_dir, "documents")
     stored = []
@@ -393,7 +399,7 @@ def test_minhash_shingles_once(spark, sf_dir):
         return checkpoint(self, *args, **kwargs)
 
     with mock.patch.object(type(docs), "localCheckpoint", spy):
-        pairs = minhash_lsh_pairs(docs, "doc_id", "text")
+        pairs = getattr(textdedup, pair_fn)(docs, "doc_id", "text")
     pairs.collect()
     # word_shingles' array_distinct(transform(...)) is the derivation;
     # FileScan's DataFilters would repeat a pushed-down shingle filter
@@ -402,4 +408,4 @@ def test_minhash_shingles_once(spark, sf_dir):
         .split("== Initial Plan ==")[0].count("array_distinct(transform(")
         for d in stored + [pairs]
     ]
-    assert len(stored) == 2 and sum(derivations) == 1, derivations
+    assert len(stored) == n_stored and sum(derivations) == 1, derivations
