@@ -9,15 +9,18 @@ by CepOperator.java:82; SQL MATCH_RECOGNIZE lowers onto the same operator
 Spark-first design: Spark has no pattern operator. Batch: one shuffle+sort
 per key (`applyInPandas`), then a linear NFA scan per partition-group in
 Python — Arrow-batched, no per-row Python round trips. The NFA is the
-textbook nondeterministic simulation with:
-- contiguity: STRICT (Flink `next`) or RELAXED (`followedBy`)
+textbook nondeterministic simulation — one matcher (`_matches_at`)
+and one skip scan (`_scan`), shared with streaming/cep_stream.py — with:
+- contiguity: STRICT (Flink `next`), RELAXED (`followedBy`,
+  SKIP_TILL_NEXT: binds the first matching row, never a later one) or
+  non-deterministic relaxed (`followedByAny`, one branch per row)
 - negative patterns: `not_next` / `not_followed_by` (Pattern.java:338,369;
   final not_followed_by requires `within`, as in Flink)
 - quantifiers: exactly-once, `times(n[, m])`, `one_or_more`, `optional`,
   `until` stop condition (Pattern.until:244)
 - `within`: max duration first→last event (Pattern.within:272)
-- after-match skip: PAST_LAST_EVENT or TO_NEXT_ROW
-  (AfterMatchSkipStrategy.java:44-82)
+- after-match skip: NO_SKIP, PAST_LAST_EVENT, TO_NEXT_ROW,
+  SKIP_TO_FIRST or SKIP_TO_LAST (AfterMatchSkipStrategy.java:44-82)
 
 Scale: matching is embarrassingly parallel across keys (state never
 crosses keys — same invariant CepOperator relies on). The shuffle is the
@@ -28,7 +31,7 @@ pre-split by time range).
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 
 import pandas as pd
@@ -80,7 +83,9 @@ class Pattern:
 
     def followed_by(self, name: str, where: RowPredicate) -> "Pattern":
         """Relaxed contiguity — non-matching rows may intervene
-        (Pattern.followedBy:356)."""
+        (Pattern.followedBy:356). SKIP_TILL_NEXT: the step binds the
+        first matching row, never a later one, under every skip
+        strategy."""
         self.steps.append(_Step(name, where, strict=False))
         return self
 
@@ -271,141 +276,35 @@ def _ctx_eval(cm, pdf: pd.DataFrame, j: int, bindings) -> bool:
         ) from exc
 
 
-def _match_at(
-    pat: Pattern, rows: pd.DataFrame, start: int, pre: tuple | None = None
-) -> list[tuple[str, int]] | None:
-    """Greedy left-to-right match attempt anchored at `start`.
-
-    Returns [(step_name, row_idx), ...] or None. Greedy quantifiers with
-    backtracking on the *count* (try max first, shrink) — the same match
-    preference order as Flink's greedy NFA branches. Pass `pre` from
-    `_precompute` when scanning many anchors over one frame.
-    """
-    n = len(rows)
-    sec, pmat, umat, cmat = pre if pre is not None else _precompute(pat, rows)
-    t0 = sec[start]
-
-    def rec(
-        step_i: int,
-        pos: int,
-        acc: list[tuple[str, int]],
-        bound: int | None = None,
-    ) -> list[tuple[str, int]] | None:
-        if step_i == len(pat.steps):
-            return []
-        step = pat.steps[step_i]
-        pm, cm = pmat[step_i], cmat[step_i]
-
-        def test(j: int, run: list[int]) -> bool:
-            # mask pre-filter, then the lazy context predicate with the
-            # bindings so far (incl. this step's own rows taken so far,
-            # so LAST(B.x) inside B's own DEFINE sees the previous B).
-            # Callers on the hot path inline the cm-is-None case — this
-            # closure only runs for context steps or cold paths.
-            if not pm[j]:
-                return False
-            if cm is None:
-                return True
-            return _ctx_eval(
-                cm, rows, j, acc + [(step.name, i) for i in run]
-            )
-
-        if step.negative:
-            if step.strict:
-                # notNext: the immediately-following row must not match
-                if pos < n and test(pos, []):
-                    return None
-                return rec(step_i + 1, pos, acc)
-            if step_i == len(pat.steps) - 1:
-                # final notFollowedBy — only valid with within (Flink's
-                # restriction): no match until the pattern window closes
-                if pat.within_seconds is None:
-                    raise ValueError("notFollowedBy cannot be the last step without within()")
-                for j in range(pos, n):
-                    if (sec[j] - t0) > pat.within_seconds:
-                        break
-                    if test(j, []):
-                        return None
-                return []
-            # non-final notFollowedBy: the NEXT step's first row must
-            # come no later than the first forbidden row
-            limit = next((j for j in range(pos, n) if test(j, [])), n)
-            return rec(step_i + 1, pos, acc, bound=limit)
-        # Candidate row positions where this step may begin.
-        anchored = step_i == 0
-        hi = n if bound is None else min(n, bound + 1)
-        # Collect the maximal run of matches for this step starting at
-        # each feasible position, then backtrack over counts.
-        start_positions = [pos] if (anchored or step.strict) else range(pos, hi)
-        for sp in start_positions:
-            if sp >= n and step.min_times > 0:
-                break
-            if bound is not None and sp > bound:
-                break
-            # run of consecutive (strict) matches from sp — mask check
-            # inlined (hot loop); context predicate evaluated lazily
-            matches: list[int] = []
-            j = sp
-            um = umat[step_i]
-            while j < n and (step.max_times == -1 or len(matches) < step.max_times):
-                if pat.within_seconds is not None and (sec[j] - t0) > pat.within_seconds:
-                    break
-                if um is not None and um[j]:
-                    break
-                if pm[j] and (cm is None or test(j, matches)):
-                    matches.append(j)
-                    j += 1
-                else:
-                    break
-            # backtracking order = quantifier preference: greedy tries
-            # the maximal run first, reluctant (B+? — Quantifier.java
-            # consumingStrategy) the MINIMAL — the r12 match_varlen fuzz
-            # shape caught reluctant steps being resolved greedily here
-            # (B+? behaved as B+ under the single-match skip strategies)
-            order = (
-                range(len(matches), step.min_times - 1, -1)
-                if step.greedy
-                else range(step.min_times, len(matches) + 1)
-            )
-            for take in order:
-                nxt = sp + take if take > 0 else sp
-                taken = [(step.name, idx) for idx in matches[:take]]
-                rest = rec(step_i + 1, nxt, acc + taken)
-                if rest is not None:
-                    return taken + rest
-            if anchored or step.strict:
-                break
-        if pos >= n and step.min_times == 0:
-            # zero-occupancy attempt when no rows remain (optional tail)
-            return rec(step_i + 1, pos, acc)
-        return None
-
-    return rec(0, start, [])
-
-
-def _match_all_at(
-    pat: Pattern, rows: pd.DataFrame, start: int, pre: tuple | None = None
-) -> list[list[tuple[str, int]]]:
-    """Enumerate ALL matches anchored at `start` — the NFA's full branch
+def _matches_at(
+    pat: Pattern, rows: pd.DataFrame, start: int, pre: tuple
+) -> Iterator[list[tuple[str, int]]]:
+    """Yield the matches anchored at `start`, lazily — the NFA's branch
     set (NFA.java keeps one partial match per live branch):
 
     - `next`: the single contiguous position;
     - `followedBy`: the FIRST matching occurrence after the previous
-      step (one branch — Flink does not backtrack relaxed contiguity);
+      step (SKIP_TILL_NEXT: only non-matching rows may be skipped, so
+      one branch — Flink does not backtrack relaxed contiguity);
     - `followedByAny`: one branch PER matching occurrence;
-    - looping steps: greedy → only the maximal run; reluctant → one
-      branch per count in min..run length;
-    - negative steps as in `_match_at`.
+    - looping steps: greedy → the largest count that completes a match;
+      reluctant → one branch per count in min..run length;
+    - negative steps consume no rows.
 
-    Emission order is deterministic: depth-first, positions then counts
-    ascending. Used by `after_match_skip("NO_SKIP")`.
+    Order is deterministic: depth-first, positions ascending, counts in
+    quantifier preference order. NO_SKIP takes every branch; the
+    single-match skip strategies take the first non-empty one, so the
+    rest are never built. `pre` is `_precompute(pat, rows)`, computed
+    once per frame for all anchors.
     """
     n = len(rows)
-    sec, pmat, umat, cmat = pre if pre is not None else _precompute(pat, rows)
+    sec, pmat, umat, cmat = pre
     t0 = sec[start]
-    results: list[list[tuple[str, int]]] = []
 
     def test(step_i: int, j: int, acc, run: list[int]) -> bool:
+        # mask pre-filter, then the lazy context predicate with the
+        # bindings so far (incl. this step's own rows taken so far, so
+        # LAST(B.x) inside B's own DEFINE sees the previous B)
         pm, cm = pmat[step_i], cmat[step_i]
         if not pm[j]:
             return False
@@ -433,18 +332,22 @@ def _match_all_at(
             j += 1
         return matches
 
-    def rec(step_i: int, pos: int, acc: list[tuple[str, int]], bound: int | None) -> None:
+    def rec(
+        step_i: int, pos: int, acc: list[tuple[str, int]], bound: int | None
+    ) -> Iterator[list[tuple[str, int]]]:
         if step_i == len(pat.steps):
-            results.append(list(acc))
+            yield list(acc)
             return
         step = pat.steps[step_i]
         if step.negative:
             if step.strict:
-                if pos < n and test(step_i, pos, acc, []):
-                    return
-                rec(step_i + 1, pos, acc, None)
+                # notNext: the immediately-following row must not match
+                if not (pos < n and test(step_i, pos, acc, [])):
+                    yield from rec(step_i + 1, pos, acc, None)
                 return
             if step_i == len(pat.steps) - 1:
+                # final notFollowedBy — only valid with within (Flink's
+                # restriction): no match until the pattern window closes
                 if pat.within_seconds is None:
                     raise ValueError("notFollowedBy cannot be the last step without within()")
                 for j in range(pos, n):
@@ -452,10 +355,12 @@ def _match_all_at(
                         break
                     if test(step_i, j, acc, []):
                         return
-                results.append(list(acc))
+                yield list(acc)
                 return
+            # non-final notFollowedBy: the NEXT step's first row must
+            # come no later than the first forbidden row
             limit = next((j for j in range(pos, n) if test(step_i, j, acc, [])), n)
-            rec(step_i + 1, pos, acc, limit)
+            yield from rec(step_i + 1, pos, acc, limit)
             return
 
         anchored = step_i == 0
@@ -476,27 +381,115 @@ def _match_all_at(
             if bound is not None and sp > bound:
                 continue
             matches = run_from(step_i, sp, acc) if sp < n else []
+            # count order = quantifier preference: greedy tries the
+            # maximal run first and stops at the largest count that
+            # completes a match (one branch per start position);
+            # reluctant (B+? — Quantifier.java consumingStrategy) tries
+            # the MINIMAL first and every count is its own branch — the
+            # r12 match_varlen fuzz shape caught reluctant steps being
+            # resolved greedily under the single-match skip strategies
             if step.greedy:
-                # maximal run first; stop at the largest count that
-                # completes a match (single branch per start position)
                 counts = range(len(matches), step.min_times - 1, -1)
             else:
-                # reluctant: every count is its own branch
                 counts = range(step.min_times, len(matches) + 1)
             for take in counts:
                 # zero-occupancy resumes at `pos`: rows between pos and
                 # sp stay available to the next step
                 nxt = sp + take if take > 0 else pos
-                before = len(results)
                 acc.extend((step.name, idx) for idx in matches[:take])
-                rec(step_i + 1, nxt, acc, None)
+                completed = False
+                for m in rec(step_i + 1, nxt, acc, None):
+                    completed = True
+                    yield m
                 if take:
                     del acc[-take:]
-                if step.greedy and len(results) > before:
+                if step.greedy and completed:
                     break
 
-    rec(0, start, [], None)
-    return results
+    return rec(0, start, [], None)
+
+
+def _skip_next(pat: Pattern, anchor: int, m: list[tuple[str, int]]) -> int:
+    """The anchor after match `m` found at `anchor`, per the pattern's
+    single-match skip strategy (AfterMatchSkipStrategy.java:44-82)."""
+    if pat.skip == "PAST_LAST_EVENT":
+        return max(idx for _, idx in m) + 1
+    if pat.skip in ("SKIP_TO_FIRST", "SKIP_TO_LAST"):
+        tgt = [idx for name, idx in m if name == pat.skip_step] or [anchor]
+        j = tgt[0] if pat.skip == "SKIP_TO_FIRST" else tgt[-1]
+        # resume AT the target step's first/last row (error if that
+        # equals the match start — Flink throws on the resulting
+        # infinite loop; we step past instead)
+        if j > anchor:
+            return j
+    return anchor + 1  # TO_NEXT_ROW
+
+
+def _scan(
+    pat: Pattern, rows: pd.DataFrame
+) -> Iterator[tuple[int, list[tuple[str, int]]]]:
+    """The after-match skip scan over one key's ordered rows (with
+    `__ts`): yields (anchor, match). NO_SKIP emits EVERY branch at every
+    anchor (AfterMatchSkipStrategy.noSkip + followedByAny/reluctant
+    enumeration); the other strategies take the first branch at an
+    anchor and jump to `_skip_next`."""
+    pre = _precompute(pat, rows)
+    # vectorized anchor gate: rows failing the first step's predicate
+    # can never start a match (unless that step is optional) — skip
+    # the per-row NFA probe entirely for them
+    first = pat.steps[0]
+    can_anchor = None if (first.min_times == 0 or first.negative) else pre[1][0]
+    i, n = 0, len(rows)
+    while i < n:
+        if can_anchor is not None and not can_anchor[i]:
+            i += 1
+        elif pat.skip == "NO_SKIP":
+            for m in _matches_at(pat, rows, i, pre):
+                if m:
+                    yield i, m
+            i += 1
+        else:
+            m = next((m for m in _matches_at(pat, rows, i, pre) if m), None)
+            if m is None:
+                i += 1
+            else:
+                yield i, m
+                i = _skip_next(pat, i, m)
+
+
+def _render(
+    pdf: pd.DataFrame,
+    m: list[tuple[str, int]],
+    measures: Callable[[dict[str, pd.DataFrame]], dict],
+    key_vals: dict,
+    match_no: int,
+    all_rows: bool,
+    drop: list[str],
+    classifier_col: str,
+    match_number_col: str,
+) -> list[dict]:
+    """Output rows for one match: the measures over its bindings grouped
+    by step, plus the key columns. ALL ROWS PER MATCH: one row per bound
+    input row — its source columns minus the helper columns `drop`, the
+    step that bound it (CLASSIFIER), `match_no` (MATCH_NUMBER) and the
+    measures with RUNNING semantics (prefix up to and including the
+    row)."""
+    groups: dict[str, list[int]] = {}
+    out: list[dict] = []
+    for name, idx in m:
+        groups.setdefault(name, []).append(idx)
+        if all_rows:
+            src = pdf.iloc[idx].drop(labels=drop, errors="ignore").to_dict()
+            src[classifier_col] = name
+            src[match_number_col] = match_no
+            src.update(measures({k: pdf.iloc[v] for k, v in groups.items()}))
+            src.update(key_vals)
+            out.append(src)
+    if not all_rows:
+        row = measures({k: pdf.iloc[v] for k, v in groups.items()})
+        row.update(key_vals)
+        out.append(row)
+    return out
 
 
 def match_recognize(
@@ -532,83 +525,13 @@ def match_recognize(
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values([ts, *tiebreak], kind="mergesort").reset_index(drop=True)
         pdf["__ts"] = pdf[ts]
-        pre = _precompute(pattern, pdf)
-        # vectorized anchor gate: rows failing the first step's predicate
-        # can never start a match (unless that step is optional) — skip
-        # the per-row NFA probe entirely for them
-        first = pattern.steps[0]
-        can_anchor = None if (first.min_times == 0 or first.negative) else pre[1][0]
+        key_vals = {k: pdf[k].iloc[0] for k in keys}
         out_rows: list[dict] = []
-        match_no = 0
-
-        def render(m: list[tuple[str, int]]) -> dict:
-            groups: dict[str, list[int]] = {}
-            for name, idx in m:
-                groups.setdefault(name, []).append(idx)
-            rendered = measures({k: pdf.iloc[v] for k, v in groups.items()})
-            for k in keys:
-                rendered[k] = pdf[k].iloc[0]
-            return rendered
-
-        def emit(m: list[tuple[str, int]]) -> None:
-            nonlocal match_no
-            match_no += 1
-            if not all_rows:
-                out_rows.append(render(m))
-                return
-            # ALL ROWS PER MATCH: one output row per bound input row,
-            # measures with RUNNING semantics (prefix up to this row)
-            prefix: dict[str, list[int]] = {}
-            for name, idx in m:
-                prefix.setdefault(name, []).append(idx)
-                src = pdf.iloc[idx].drop(labels="__ts").to_dict()
-                src[classifier_col] = name
-                src[match_number_col] = match_no
-                src.update(
-                    measures({k: pdf.iloc[v] for k, v in prefix.items()})
-                )
-                out_rows.append(src)
-
-        if pattern.skip == "NO_SKIP":
-            # emit EVERY branch at every anchor (AfterMatchSkipStrategy
-            # .noSkip + followedByAny/reluctant enumeration)
-            for i in range(len(pdf)):
-                if can_anchor is not None and not can_anchor[i]:
-                    continue
-                for m in _match_all_at(pattern, pdf, i, pre):
-                    if m:
-                        emit(m)
-            if not out_rows:
-                return pd.DataFrame(columns=out_cols)
-            return pd.DataFrame(out_rows)
-
-        i = 0
-        while i < len(pdf):
-            if can_anchor is not None and not can_anchor[i]:
-                i += 1
-                continue
-            m = _match_at(pattern, pdf, i, pre)
-            if m:
-                groups: dict[str, list[int]] = {}
-                for name, idx in m:
-                    groups.setdefault(name, []).append(idx)
-                emit(m)
-                last_idx = max(idx for _, idx in m)
-                if pattern.skip == "PAST_LAST_EVENT":
-                    i = last_idx + 1
-                elif pattern.skip == "SKIP_TO_FIRST":
-                    tgt = groups.get(pattern.skip_step, [])
-                    # resume AT the target step's first row (error if
-                    # that equals the match start — Flink throws on the
-                    # resulting infinite loop; we step past instead)
-                    i = tgt[0] if tgt and tgt[0] > i else i + 1
-                elif pattern.skip == "SKIP_TO_LAST":
-                    tgt = groups.get(pattern.skip_step, [])
-                    i = tgt[-1] if tgt and tgt[-1] > i else i + 1
-                else:  # TO_NEXT_ROW
-                    i = i + 1
-            else:
-                i += 1
+        for match_no, (_, m) in enumerate(_scan(pattern, pdf), 1):
+            out_rows += _render(
+                pdf, m, measures, key_vals, match_no, all_rows, ["__ts"],
+                classifier_col, match_number_col,
+            )
         if not out_rows:
             return pd.DataFrame(columns=out_cols)
         return pd.DataFrame(out_rows)

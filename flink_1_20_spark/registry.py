@@ -76,19 +76,24 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "dedup_minhash_lsh_capped",
     "tpch_q21_waiting_suppliers",
     "dedup_cluster_best_representative_collapsed",
-    # ---- the remaining 39 re-proof slots take the next-oldest driver
-    # confirmations (computed from CORRECTNESS_r01..r12: every r5-era
-    # row aged past by r12's rotation, then the full r6 era — the
-    # wtvf_*/setop_*/fn_* band the r12 verdict names).  The r12 window
-    # rows rotate out; their local-oracle coverage continues in every
-    # verify_local sweep.
-    "dedup_semantic_cells",
-    "pipeline_sequence_pack",
-    "simsearch_recall_lsh",
-    "text_chunk_sliding",
-    "tpcds_q30_returns_above_nation_avg",
-    "agg_json_objectagg",
-    "cdc_upsert_materialize",
+    # ---- rewritten queries enter the window in the round they change
+    # (7): the q16 EXISTS shape, q24b's scalar-subquery HAVING gate,
+    # the Arrow cogroup, q44's floor form, and the three CEP queries
+    # whose matcher became the one branch enumerator (followedBy binds
+    # the first matching row under every skip strategy)
+    "tpcds_q16_exists_shape",
+    "tpcds_q24b_netpaid_above_cte_avg",
+    "cogroup_custkey",
+    "tpcds_q44_best_worst",
+    "cep_funnel_strict",
+    "cep_followed_by_any",
+    "cep_vshape_iterative",
+    # ---- the remaining 32 re-proof slots take the next-oldest driver
+    # confirmations (computed from CORRECTNESS_r01..r12: the r6 era —
+    # the wtvf_*/setop_*/fn_* band the r12 verdict names; the five
+    # r5-era rows and the two oldest r6 rows rotated out to make room
+    # for the block above).  Rotated-out rows keep their local-oracle
+    # coverage in every verify_local sweep.
     "cep_error_burst",
     "changelog_normalize",
     "correlate_posexplode",

@@ -8,10 +8,12 @@ operator (CommonExecMatch.java:170).
 Spark mapping: `applyInPandasWithState`. Per key we keep the pending
 event buffer (the NFA's shared buffer, SharedBuffer.java) serialized in
 GroupState; each micro-batch appends its rows, re-sorts by event time,
-runs the same NFA used in batch (`_match_at`, or `_match_all_at`
-branch enumeration under NO_SKIP / followedByAny), emits completed
-matches, and retains the buffer per skip strategy: PAST_LAST_EVENT
-consumes matched rows (its scan can never revisit them); the
+runs the batch operator's one matcher and skip scan (`cep._scan`
+over `cep._matches_at`: every branch under NO_SKIP, the first branch
+per anchor under the other strategies), emits completed matches
+through the batch renderer (`cep._render`), and retains the buffer
+per skip strategy: PAST_LAST_EVENT consumes matched rows (its scan
+can never revisit them); the
 REVISITING strategies (TO_NEXT_ROW / SKIP_TO_FIRST / SKIP_TO_LAST)
 retain them — a row inside an emitted match may start a later
 overlapping match whose tail arrives in a future batch (r11
@@ -71,7 +73,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from flink_1_20_spark.operators.cep import Pattern, _match_all_at, _match_at, _precompute
+from flink_1_20_spark.operators.cep import Pattern, _render, _scan
 
 
 # state-record marshalling shared with streaming/rank.py — one place
@@ -174,65 +176,50 @@ def match_recognize_stream(
         pdf[ts] = pd.to_datetime(pdf[ts])
         pdf = pdf.sort_values(ts, kind="mergesort").reset_index(drop=True)
         pdf["__ts"] = pdf[ts]
-        pre = _precompute(pattern, pdf)
+        key_vals = dict(zip(key_cols, key))
 
         out_rows: list[dict] = []
         consumed_until = -1
         held_idx = None  # provisional-match hold point (chain strategies)
 
-        def render(m: list[tuple[str, int]]) -> tuple[dict, dict]:
+        def emit(m: list[tuple[str, int]]) -> None:
             nonlocal match_no
             match_no += 1
-            groups: dict[str, list[int]] = {}
-            for name, idx in m:
-                groups.setdefault(name, []).append(idx)
-            if all_rows:
-                # one row per bound input row: source columns + the step
-                # that bound it + match number + RUNNING measures (the
-                # prefix of bindings up to and including the row)
-                prefix: dict[str, list[int]] = {}
-                for name, idx in m:
-                    prefix.setdefault(name, []).append(idx)
-                    src = pdf.iloc[idx].drop(
-                        labels=["__ts", "__new", "__seq"], errors="ignore"
-                    ).to_dict()
-                    src[classifier_col] = name
-                    src[match_number_col] = match_no
-                    src.update(
-                        measures({k: pdf.iloc[v] for k, v in prefix.items()})
-                    )
-                    for kc, kv in zip(key_cols, key):
-                        src[kc] = kv
-                    out_rows.append(src)
-                return {}, groups
-            rendered = measures({k: pdf.iloc[v] for k, v in groups.items()})
-            for kc, kv in zip(key_cols, key):
-                rendered[kc] = kv
-            return rendered, groups
+            out_rows.extend(
+                _render(
+                    pdf, m, measures, key_vals, match_no, all_rows,
+                    ["__ts", "__new", "__seq"], classifier_col, match_number_col,
+                )
+            )
 
-        if pattern.skip == "NO_SKIP":
-            # full-branch enumeration (followedByAny / reluctant /
-            # NO_SKIP — CepOperator with AfterMatchSkipStrategy.noSkip).
-            # Nothing is consumed; a match is emitted exactly once by
-            # requiring its LAST event to be new this batch (matches
-            # ending in retained rows were emitted when those rows first
-            # arrived — same in-order contract as the module docstring).
-            for i in range(len(pdf)):
-                for m in _match_all_at(pattern, pdf, i, pre):
-                    if m and bool(pdf["__new"].iat[max(idx for _, idx in m)]):
-                        rendered, _ = render(m)
-                        if not all_rows:  # all-rows mode appends inside
-                            out_rows.append(rendered)
-        else:
-            # Only PAST_LAST_EVENT may CONSUME matched rows: its scan
-            # resumes after the match, so those rows can never serve a
-            # future match.  The revisiting strategies (TO_NEXT_ROW,
-            # SKIP_TO_FIRST/LAST) must RETAIN them — a row inside an
-            # emitted match may start a later overlapping match whose
-            # tail arrives in a future batch (FOUND by the r11 cep
-            # differential shape, seed 900: consuming up to the match
-            # end silently dropped the overlap).
-            consume = pattern.skip == "PAST_LAST_EVENT"
+        # Only PAST_LAST_EVENT may CONSUME matched rows: its scan
+        # resumes after the match, so those rows can never serve a
+        # future match.  The revisiting strategies (TO_NEXT_ROW,
+        # SKIP_TO_FIRST/LAST) must RETAIN them — a row inside an
+        # emitted match may start a later overlapping match whose
+        # tail arrives in a future batch (FOUND by the r11 cep
+        # differential shape, seed 900: consuming up to the match
+        # end silently dropped the overlap).
+        consume = pattern.skip == "PAST_LAST_EVENT"
+        for i, m in _scan(pattern, pdf):
+            last_idx = max(idx for _, idx in m)
+            if pattern.skip == "NO_SKIP":
+                # full-branch enumeration (followedByAny / reluctant /
+                # NO_SKIP — CepOperator with AfterMatchSkipStrategy
+                # .noSkip).  Nothing is consumed; a match is emitted
+                # exactly once by requiring its LAST event to be new this
+                # batch (matches ending in retained rows were emitted
+                # when those rows first arrived — same in-order contract
+                # as the module docstring).
+                if pdf["__new"].iat[last_idx]:
+                    emit(m)
+                continue
+            if var_len and last_idx == len(pdf) - 1:
+                # provisional (see var_len note above): hold the match
+                # AND the scan — everything from here replays next
+                # batch with more rows
+                held_idx = i
+                break
             # Dedup by an EMISSION LOG of (first_ts, last_ts) identities
             # rather than by row arrival: the skip-jump chain is
             # deterministic over the buffer, but it is re-run each batch
@@ -245,49 +232,20 @@ def match_recognize_stream(
             # reshape — see var_len note), so log membership IS
             # emitted-before; entries are pruned once their end falls
             # before the retained buffer (no re-find can reach them).
-            i = 0
-            while i < len(pdf):
-                m = _match_at(pattern, pdf, i, pre)
-                if m:
-                    last_idx = max(idx for _, idx in m)
-                    if var_len and last_idx == len(pdf) - 1:
-                        # provisional (see var_len note above): hold the
-                        # match AND the scan — everything from here
-                        # replays next batch with more rows
-                        held_idx = i
-                        break
-                    first_idx = min(idx for _, idx in m)
-                    ident = (
-                        pdf["__ts"].iat[first_idx].isoformat(),
-                        pdf["__ts"].iat[last_idx].isoformat(),
-                        int(pdf["__seq"].iat[first_idx]),
-                        int(pdf["__seq"].iat[last_idx]),
-                    )
-                    if ident not in elog:
-                        elog.add(ident)
-                        rendered, groups = render(m)
-                        if not all_rows:  # all-rows mode appends inside
-                            out_rows.append(rendered)
-                    else:
-                        # re-found already-emitted match: advance the
-                        # scan chain exactly as if reported, without
-                        # re-emitting
-                        groups = {}
-                        for name, idx in m:
-                            groups.setdefault(name, []).append(idx)
-                    if consume:
-                        consumed_until = max(consumed_until, last_idx)
-                        i = last_idx + 1
-                    elif pattern.skip == "SKIP_TO_FIRST":
-                        tgt = groups.get(pattern.skip_step, [])
-                        i = tgt[0] if tgt and tgt[0] > i else i + 1
-                    elif pattern.skip == "SKIP_TO_LAST":
-                        tgt = groups.get(pattern.skip_step, [])
-                        i = tgt[-1] if tgt and tgt[-1] > i else i + 1
-                    else:  # TO_NEXT_ROW
-                        i += 1
-                else:
-                    i += 1
+            # A re-found already-emitted match advances the scan chain
+            # exactly as if reported, without re-emitting.
+            first_idx = min(idx for _, idx in m)
+            ident = (
+                pdf["__ts"].iat[first_idx].isoformat(),
+                pdf["__ts"].iat[last_idx].isoformat(),
+                int(pdf["__seq"].iat[first_idx]),
+                int(pdf["__seq"].iat[last_idx]),
+            )
+            if ident not in elog:
+                elog.add(ident)
+                emit(m)
+            if consume:
+                consumed_until = max(consumed_until, last_idx)
 
         # retain the un-consumed tail as the new buffer: bounded by
         # max_buffer, and when the pattern has `within`, pruned to rows

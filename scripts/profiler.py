@@ -67,6 +67,13 @@ def explain(df, mode: str = "formatted") -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
 
 
+def plan_bytes(plan: str) -> int:
+    """Size of a plan with its expression ids (`#123`) and `plan_id=123`
+    suffixes removed: those count up with every plan the JVM has built,
+    so the raw length drifts with history, not with the plan."""
+    return len(re.sub(r"#\d+|plan_id=\d+", "", plan))
+
+
 def each_query(args, default=None):
     """Yield (name, build) for the selected queries, build() -> DataFrame
     at --sf: --only (or `default`, else the whole registry), then
@@ -140,7 +147,7 @@ def cmd_audit(args) -> int:
             if n:
                 flags[key] = n
         flags["exchanges"] = len(re.findall(r"^\(\d+\) Exchange", plan, re.M))
-        rows.append((name, flags, len(plan), time.time() - t0))
+        rows.append((name, flags, plan_bytes(plan), time.time() - t0))
 
     print(f"{'query':<50} {'exch':>4}  flags")
     for name, flags, _, dt in sorted(rows, key=lambda r: -r[1].get("exchanges", 0)):

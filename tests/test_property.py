@@ -7,9 +7,10 @@ from __future__ import annotations
 import datetime as dt
 
 import pandas as pd
+import pytest
 from hypothesis import given, settings, strategies as st
 
-from flink_1_20_spark.operators.cep import Pattern, _match_at, _precompute
+from flink_1_20_spark.operators.cep import Pattern, _scan
 
 EVENTS = ["a", "b", "c"]
 
@@ -23,18 +24,29 @@ def _frame(seq: list[str]) -> pd.DataFrame:
     return pdf
 
 
-def _scan(pat: Pattern, pdf: pd.DataFrame) -> list[list[tuple[str, int]]]:
-    pre = _precompute(pat, pdf)
-    out, i = [], 0
-    while i < len(pdf):
-        m = _match_at(pat, pdf, i, pre)
-        if m:
-            out.append(m)
-            last = max(idx for _, idx in m)
-            i = last + 1 if pat.skip == "PAST_LAST_EVENT" else i + 1
-        else:
-            i += 1
-    return out
+def _matches(pat: Pattern, pdf: pd.DataFrame) -> list[list[tuple[str, int]]]:
+    return [m for _, m in _scan(pat, pdf)]
+
+
+@pytest.mark.parametrize(
+    "skip", ["NO_SKIP", "PAST_LAST_EVENT", "TO_NEXT_ROW", "SKIP_TO_FIRST", "SKIP_TO_LAST"]
+)
+@pytest.mark.parametrize(
+    "seq, want",
+    [("abxbc", []), ("abcxbc", [[("A", 0), ("B", 1), ("C", 2)]])],
+)
+def test_followed_by_binds_first_occurrence(skip, seq, want):
+    """followedBy is SKIP_TILL_NEXT: it may skip only rows that do not
+    match, so B binds the FIRST b after A and the strict C must follow
+    that b — the later `b c` in `a b x b c` is never reached. The answer
+    must not depend on the skip strategy."""
+    pat = (
+        Pattern.begin("A", lambda r: r["event_type"] == "a")
+        .followed_by("B", lambda r: r["event_type"] == "b")
+        .next("C", lambda r: r["event_type"] == "c")
+        .after_match_skip(skip, "B" if skip.startswith("SKIP_TO") else None)
+    )
+    assert _matches(pat, _frame(list(seq))) == want
 
 
 @settings(max_examples=60, deadline=None)
@@ -46,7 +58,7 @@ def test_cep_strict_pair_equals_bruteforce(seq):
         .next("y", lambda r: r["event_type"] == "b")
         .after_match_skip("TO_NEXT_ROW")
     )
-    got = {tuple(idx for _, idx in m) for m in _scan(pat, _frame(seq))}
+    got = {tuple(idx for _, idx in m) for m in _matches(pat, _frame(seq))}
     expected = {(i, i + 1) for i in range(len(seq) - 1) if seq[i] == "a" and seq[i + 1] == "b"}
     assert got == expected
 
@@ -61,7 +73,7 @@ def test_cep_match_invariants(seq):
         .followed_by("y", lambda r: r["event_type"] == "b")
         .followed_by("z", lambda r: r["event_type"] == "c")
     )
-    matches = _scan(pat, _frame(seq))
+    matches = _matches(pat, _frame(seq))
     prev_end = -1
     for m in matches:
         idxs = [idx for _, idx in m]
@@ -89,7 +101,7 @@ def test_cep_times_or_more_greedy(seq, k):
         .times_or_more(k)
         .strict_repeat()
     )
-    matches = _scan(pat, _frame(seq))
+    matches = _matches(pat, _frame(seq))
     # brute-force maximal runs
     runs, i = [], 0
     while i < len(seq):

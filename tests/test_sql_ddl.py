@@ -330,8 +330,9 @@ def test_sql_match_recognize_cross_var_define(fixture_env, spark):
 def test_sql_match_recognize_reluctant_vs_greedy(spark):
     """B+? must bind the MINIMAL run (Quantifier.java consumingStrategy)
     where B+ binds the maximal — the r12 match_varlen fuzz shape caught
-    _match_at resolving reluctant steps greedily under the single-match
-    skip strategies (B+? behaved exactly like B+)."""
+    the then-separate single-match matcher resolving reluctant steps
+    greedily (B+? behaved exactly like B+). Every skip strategy now
+    takes its match from the one branch enumerator, cep._matches_at."""
     from flink_1_20_spark.sql_ddl import TableEnvironment
 
     spark.createDataFrame(
