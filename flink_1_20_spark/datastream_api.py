@@ -227,19 +227,15 @@ class KeyedStream(DataStream):
         timeout: str = "NoTimeout",
     ) -> "DataStream":
         """KeyedProcessFunction (keyed state + timers):
-        applyInPandasWithState via streaming/process.py semantics.
+        streaming/process.py keyed_process (applyInPandasWithState).
         `fn(key, pdf_iter, state) -> iter[pdf]` — the raw Spark contract,
         which IS Flink's processElement+state, batched."""
-        from pyspark.sql.streaming.state import GroupStateTimeout
+        from flink_1_20_spark.streaming.process import keyed_process
 
-        timeouts = {
-            "NoTimeout": GroupStateTimeout.NoTimeout,
-            "ProcessingTimeTimeout": GroupStateTimeout.ProcessingTimeTimeout,
-            "EventTimeTimeout": GroupStateTimeout.EventTimeTimeout,
-        }
         return DataStream(
-            self._df.groupBy(*self._keys).applyInPandasWithState(
-                fn, output_schema, state_schema, "update", timeouts[timeout]
+            keyed_process(
+                self._df, self._keys, fn, output_schema, state_schema,
+                timeout=timeout,
             )
         )
 

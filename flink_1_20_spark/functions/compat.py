@@ -1,8 +1,9 @@
-"""Flink built-in functions that need a shim on Spark (SURVEY.md §2.8).
+"""Flink built-ins for the Python (DataFrame) API (SURVEY.md §2.8).
 
-Each helper cites the Flink definition it mirrors
-(BuiltInFunctionDefinitions.java = BFD, runtime SqlFunctionUtils.java =
-SFU, both under flink-table/ in /root/reference). Everything here
+Every Flink built-in that Spark lacks is defined once, as a SQL text
+rewrite in sql_flink._BUILTIN_REWRITES (BuiltInFunctionDefinitions.java
+= BFD); `call_sql` is the Python entry point to that table. What stays
+here has no SQL-name twin: SUM0 and the TIME(p) emulation. Everything
 compiles to built-in Catalyst expressions (JVM-side, codegen'd) — no
 Python UDFs — so the shims cost nothing at scale.
 """
@@ -12,136 +13,23 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from flink_1_20_spark.sql_flink import rewrite_flink_builtins
+
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
+def call_sql(expr: str) -> Column:
+    """A SQL expression string, Flink built-in names included, as a
+    Column (Flink's Expressions.callSql / PyFlink call_sql):
+    `call_sql("SPLIT_INDEX(text, ' ', 2)")`."""
+    return F.expr(rewrite_flink_builtins(expr))
+
+
 def sum0(col: Column | str) -> Column:
     """SUM0 (BFD:778): like SUM but 0 (not NULL) on empty/all-null input."""
     return F.coalesce(F.sum(_c(col)), F.lit(0.0))
-
-
-def split_index(col: Column | str, delim: str, idx: int) -> Column:
-    """SPLIT_INDEX(str, sep, index) (BFD:1286, SFU.splitIndex):
-    0-based element of the split, NULL when out of range."""
-    # Flink's delimiter is a LITERAL; Spark split() takes a Java regex —
-    # \Q...\E quoting keeps metachar delimiters ('.', '|', '+') literal
-    arr = F.split(_c(col), "\\Q" + delim + "\\E", -1)
-    # element_at is 1-based and raises under ANSI for OOB; get() is
-    # 0-based and NULL-safe, matching Flink's OOB→NULL contract.
-    return F.get(arr, idx)
-
-
-def truncate(col: Column | str, scale: int = 0) -> Column:
-    """TRUNCATE(numeric, d) (BFD:1802): truncate toward zero to d decimal
-    places — Spark's `trunc` is date-only, so compose floor/ceil."""
-    c = _c(col)
-    factor = F.lit(10.0) ** F.lit(scale)
-    scaled = c * factor
-    truncated = F.when(c >= 0, F.floor(scaled)).otherwise(F.ceil(scaled))
-    return truncated / factor
-
-
-def regexp(col: Column | str, pattern: str) -> Column:
-    """REGEXP(str, pattern) (BFD:1255): partial-match boolean → rlike."""
-    return _c(col).rlike(pattern)
-
-
-def similar_to(col: Column | str, pattern: str) -> Column:
-    """SIMILAR TO (BFD:897): SQL regex dialect → Java regex, anchored.
-
-    Handles the SQL:2016 core: `%` → `.*`, `_` → `.`; character
-    classes/alternation/quantifiers pass through unchanged.
-    """
-    java_pat = (
-        pattern.replace("%", ".*").replace("_", ".")
-    )
-    return _c(col).rlike(f"^(?:{java_pat})$")
-
-
-def str_to_map(col: Column | str, pair_delim: str = ",", kv_delim: str = "=") -> Column:
-    """STR_TO_MAP (BFD:1298) — present in Spark ≥3.4 as str_to_map."""
-    return F.str_to_map(_c(col), F.lit(pair_delim), F.lit(kv_delim))
-
-
-def if_null(col: Column | str, fallback: Column) -> Column:
-    """IFNULL (BFD:135)."""
-    return F.coalesce(_c(col), fallback)
-
-
-def is_decimal_str(col: Column | str) -> Column:
-    """IS_DECIMAL (SFU): string parses as a number."""
-    return F.try_cast(_c(col), "decimal(38,18)").isNotNull()
-
-
-def is_digit_str(col: Column | str) -> Column:
-    """IS_DIGIT (SFU): string is all ASCII digits."""
-    return _c(col).rlike("^[0-9]+$")
-
-
-def is_alpha_str(col: Column | str) -> Column:
-    """IS_ALPHA (SFU): string is all letters."""
-    return _c(col).rlike("^[A-Za-z]+$")
-
-
-def log2(col: Column | str) -> Column:
-    """LOG2 (BFD:1542)."""
-    return F.log2(_c(col))
-
-
-def rand_integer(bound: int, seed: int | None = None) -> Column:
-    """RAND_INTEGER(bound) (BFD:1769): uniform int in [0, bound)."""
-    r = F.rand(seed) if seed is not None else F.rand()
-    return F.floor(r * bound).cast("int")
-
-
-def to_base64(col: Column | str) -> Column:
-    """TO_BASE64 (BFD:1098)."""
-    return F.base64(_c(col).cast("binary"))
-
-
-def from_base64(col: Column | str) -> Column:
-    """FROM_BASE64 (BFD:1090) → string (Flink returns STRING)."""
-    return F.unbase64(_c(col)).cast("string")
-
-
-def multiset_collect(col: Column | str) -> Column:
-    """COLLECT → MULTISET(T) (BFD:823): value→count map aggregate.
-
-    One hash agg (collect_list) + higher-order finishing expressions;
-    keys sorted so the map is deterministic. For unbounded-cardinality
-    groups prefer the flattened (group, elem, count) form — see
-    queries/aggregates.py::agg_collect_multiset.
-    """
-    arr = F.collect_list(_c(col))
-    dist = F.array_sort(F.array_distinct(arr))
-    counts = F.transform(dist, lambda x: F.size(F.filter(arr, lambda y: y == x)))
-    return F.map_from_arrays(dist, counts)
-
-
-def timestamp_diff(unit: str, start: Column | str, end: Column | str) -> Column:
-    """TIMESTAMPDIFF(unit, t1, t2) (BFD:1931)."""
-    return F.expr(f"timestampdiff({unit}, {_name(start)}, {_name(end)})")
-
-
-def _name(col: Column | str) -> str:
-    if isinstance(col, str):
-        return col
-    raise TypeError("timestamp_diff needs column names (SQL expression shim)")
-
-
-def date_format_flink(col: Column | str, java_fmt: str) -> Column:
-    """DATE_FORMAT (BFD:1916) — Flink uses Java SimpleDateFormat-style
-    patterns, same family as Spark's date_format; pass through."""
-    return F.date_format(_c(col), java_fmt)
-
-
-def parse_url(col: Column | str, part: str, key: str | None = None) -> Column:
-    """PARSE_URL (BFD:1193) — Spark ships the same function."""
-    if key is None:
-        return F.parse_url(_c(col), F.lit(part))
-    return F.parse_url(_c(col), F.lit(part), F.lit(key))
 
 
 # --- TIME(p) emulation (SURVEY.md §1.2: Spark has no TimeType) ---------
@@ -169,71 +57,3 @@ def time_minute(nanos: Column | str) -> Column:
 
 def time_second(nanos: Column | str) -> Column:
     return (F.floor(_c(nanos) / F.lit(1_000_000_000)) % 60).cast("int")
-
-
-# --- SQL/JSON path functions (BFD:2339 JSON_EXISTS, :2361 JSON_VALUE,
-# :2379 JSON_QUERY). Paths accept the standard 'lax $.a.b' / 'strict $.a'
-# prefix; extraction compiles to get_json_object (JVM-side Jackson).
-# Error handling: per-row raising isn't expressible in a JVM expression,
-# so BOTH modes use the functions' default ON ERROR behaviors (FALSE for
-# EXISTS, NULL for VALUE/QUERY) — which is exactly Flink's default; the
-# strict-mode THROW ON ERROR option is the one deviation.
-
-
-def _json_path(path: str) -> str:
-    p = path.strip()
-    if p.startswith("lax "):
-        return p[4:].strip()
-    if p.startswith("strict "):
-        return p[7:].strip()
-    return p
-
-
-def json_exists(col: Column | str, path: str) -> Column:
-    """JSON_EXISTS(col, path) — TRUE iff the path yields an item
-    (BFD:2339). Caveat vs the spec: a JSON null item reports FALSE
-    (get_json_object maps it to SQL NULL)."""
-    return F.get_json_object(_c(col), _json_path(path)).isNotNull()
-
-
-def json_value(
-    col: Column | str,
-    path: str,
-    returning: str | None = None,
-    default=None,
-) -> Column:
-    """JSON_VALUE(col, path [RETURNING type] [DEFAULT x ON EMPTY]) —
-    scalar extraction; structured items (object/array) yield NULL, as the
-    spec requires (BFD:2361)."""
-    raw = F.get_json_object(_c(col), _json_path(path))
-    first = F.substring(raw, 1, 1)
-    out = F.when(first.isin("{", "["), F.lit(None).cast("string")).otherwise(raw)
-    if default is not None:
-        out = F.coalesce(out, F.lit(default).cast("string"))
-    if returning is not None:
-        out = out.cast(returning)
-    return out
-
-
-_NUM_RE = r"^-?[0-9]+(\.[0-9]+)?([eE][+-]?[0-9]+)?$"
-
-
-def json_query(col: Column | str, path: str, wrapper: str = "WITHOUT_ARRAY") -> Column:
-    """JSON_QUERY(col, path [WITH/WITHOUT ARRAY WRAPPER]) — returns JSON
-    text (BFD:2379). WITHOUT_ARRAY: only structured items, scalars →
-    NULL. WITH_UNCONDITIONAL_ARRAY: every item wrapped in a one-element
-    array; string scalars are re-quoted (get_json_object strips quotes),
-    numeric/boolean/null literals pass through."""
-    raw = F.get_json_object(_c(col), _json_path(path))
-    first = F.substring(raw, 1, 1)
-    structured = first.isin("{", "[")
-    if wrapper == "WITHOUT_ARRAY":
-        return F.when(structured, raw)
-    if wrapper != "WITH_UNCONDITIONAL_ARRAY":
-        raise ValueError("wrapper must be WITHOUT_ARRAY or WITH_UNCONDITIONAL_ARRAY")
-    literal = raw.rlike(_NUM_RE) | raw.isin("true", "false", "null")
-    wrapped_literal = F.concat(F.lit("["), raw, F.lit("]"))
-    wrapped_string = F.to_json(F.array(raw))
-    return F.when(
-        structured, F.concat(F.lit("["), raw, F.lit("]"))
-    ).otherwise(F.when(literal, wrapped_literal).otherwise(wrapped_string))

@@ -162,12 +162,12 @@ def dedup_cluster_best_representative_collapsed(
       over members; n_members = sum of group sizes.
     - zero-shingle texts (< shingle_n normalized words, including
       empty/whitespace) NEVER enter the raw pair graph —
-      minhash_lsh_pairs filters size(shingles) > 0 and the oracle
-      filters len(sh) > 0 — so K identical short docs are K singleton
-      clusters in the raw form.  Collapsing them would merge what the
-      raw graph keeps apart (r12 ADVICE, high), so the collapse is
-      restricted to texts that survive the shingle filter and
-      zero-shingle docs bypass it as per-doc singletons
+      in minhash_lsh_pairs a doc with no shingles yields no signature
+      row, and the oracle filters len(sh) > 0 — so K identical short
+      docs are K singleton clusters in the raw form.  Collapsing them
+      would merge what the raw graph keeps apart (r12 ADVICE, high),
+      so the collapse is restricted to texts with at least one shingle
+      and zero-shingle docs bypass it as per-doc singletons
       (cluster = kept_doc = doc_id, n_members = 1).  The word-count
       gate is the exact shingle-existence condition (word_shingles
       emits the empty array iff len(words) < n), evaluated once per

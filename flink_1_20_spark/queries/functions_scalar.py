@@ -91,18 +91,20 @@ def fn_string_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def fn_string_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """regexpExtract/regexpReplace/regexp(rlike)/splitIndex/split
-    (BFD:1073,1266,1255,1286,424). Note Spark regexp_replace is global
-    by default — DuckDB needs the 'g' flag to match."""
-    from flink_1_20_spark.functions.compat import regexp, split_index
+    """regexpExtract/regexpReplace/regexp/splitIndex/split
+    (BFD:1073,1266,1255,1286,424). REGEXP is Spark's own function;
+    SPLIT_INDEX goes through the SQL rewrite table. Note Spark
+    regexp_replace is global by default — DuckDB needs the 'g' flag to
+    match."""
+    from flink_1_20_spark.functions.compat import call_sql
 
     d = _docs(spark, sf_dir)
     return d.select(
         "doc_id",
         F.regexp_extract("text", r"([a-z]+) ([a-z]+)", 2).alias("second_word"),
         F.regexp_replace(F.left(F.col("text"), F.lit(30)), "[aeiou]", "_").alias("devoweled"),
-        regexp("text", "spark|flink").alias("mentions_engine"),
-        split_index("text", " ", 2).alias("word3"),
+        F.regexp("text", F.lit("spark|flink")).alias("mentions_engine"),
+        call_sql("SPLIT_INDEX(text, ' ', 2)").alias("word3"),
         F.get(F.split(F.left(F.col("text"), F.lit(20)), " "), 0).alias("first_tok"),
     )
 
@@ -266,8 +268,9 @@ def fn_math_trig(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def fn_math_misc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """factorial/bin/hex/TRUNCATE/greatest/least (BFD:1783-1802,688,698).
-    TRUNCATE uses the compat shim (Spark trunc() is date-only)."""
-    from flink_1_20_spark.functions.compat import truncate
+    TRUNCATE goes through the SQL rewrite table (Spark trunc() is
+    date-only)."""
+    from flink_1_20_spark.functions.compat import call_sql
 
     p = T(spark, sf_dir, "part").filter(F.col("p_partkey") <= 300)
     return p.select(
@@ -275,7 +278,7 @@ def fn_math_misc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.factorial(F.col("p_size") % 8).alias("fact"),
         F.bin("p_size").alias("b"),
         F.hex("p_partkey").alias("hx"),
-        truncate("p_retailprice", 1).alias("trunc1"),
+        call_sql("TRUNCATE(p_retailprice, 1)").alias("trunc1"),
         F.greatest(F.col("p_size"), F.lit(25), (F.col("p_partkey") % 40).cast("int")).alias("gr"),
         F.least(F.col("p_size"), F.lit(25), (F.col("p_partkey") % 40).cast("int")).alias("ls"),
     )
@@ -721,11 +724,11 @@ def fn_time_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_json_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL/JSON path family (BFD:2339 JSON_EXISTS, :2361 JSON_VALUE,
     :2379 JSON_QUERY) with lax/strict path prefixes, RETURNING casts,
-    scalar-vs-structured discipline, and array wrappers — the shims in
-    functions/compat.py compiled to get_json_object (JVM-side). The
-    oracle recomputes each behavior with DuckDB's json_extract/json_type
-    primitives."""
-    from flink_1_20_spark.functions.compat import json_exists, json_query, json_value
+    scalar-vs-structured discipline, and array wrappers — the SQL
+    rewrite table's forms (sql_flink._BUILTIN_REWRITES) compiled to
+    get_json_object (JVM-side). The oracle recomputes each behavior with
+    DuckDB's json_extract/json_type primitives."""
+    from flink_1_20_spark.functions.compat import call_sql
 
     e = T(spark, sf_dir, "events").filter(F.col("event_id") <= 300)
     js = F.concat(
@@ -740,15 +743,19 @@ def fn_json_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = e.select("event_id", js.alias("js"))
     return d.select(
         "event_id",
-        json_exists("js", "lax $.k").alias("ex_k"),
-        json_exists("js", "$.missing").alias("ex_missing"),
-        json_value("js", "lax $.k", returning="int").alias("v_k"),
-        json_value("js", "lax $.user").alias("v_user"),
-        json_value("js", "strict $.user.tags[0]").alias("v_tag"),
-        json_query("js", "$.user").alias("q_user"),
-        json_query("js", "$.k", wrapper="WITH_UNCONDITIONAL_ARRAY").alias("q_k_wrap"),
-        json_query("js", "$.user.tags[0]", wrapper="WITH_UNCONDITIONAL_ARRAY").alias("q_tag_wrap"),
-        json_query("js", "$.k").alias("q_scalar_without"),
+        call_sql("JSON_EXISTS(js, 'lax $.k')").alias("ex_k"),
+        call_sql("JSON_EXISTS(js, '$.missing')").alias("ex_missing"),
+        call_sql("JSON_VALUE(js, 'lax $.k' RETURNING INT)").alias("v_k"),
+        call_sql("JSON_VALUE(js, 'lax $.user')").alias("v_user"),
+        call_sql("JSON_VALUE(js, 'strict $.user.tags[0]')").alias("v_tag"),
+        call_sql("JSON_QUERY(js, '$.user')").alias("q_user"),
+        call_sql(
+            "JSON_QUERY(js, '$.k' WITH UNCONDITIONAL ARRAY WRAPPER)"
+        ).alias("q_k_wrap"),
+        call_sql(
+            "JSON_QUERY(js, '$.user.tags[0]' WITH UNCONDITIONAL ARRAY WRAPPER)"
+        ).alias("q_tag_wrap"),
+        call_sql("JSON_QUERY(js, '$.k')").alias("q_scalar_without"),
     )
 
 

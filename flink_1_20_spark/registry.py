@@ -77,10 +77,12 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "tpch_q21_waiting_suppliers",
     "dedup_cluster_best_representative_collapsed",
     # ---- rewritten queries enter the window in the round they change
-    # (7): the q16 EXISTS shape, q24b's scalar-subquery HAVING gate,
-    # the Arrow cogroup, q44's floor form, and the three CEP queries
+    # (10): the q16 EXISTS shape, q24b's scalar-subquery HAVING gate,
+    # the Arrow cogroup, q44's floor form, the three CEP queries
     # whose matcher became the one branch enumerator (followedBy binds
-    # the first matching row under every skip strategy)
+    # the first matching row under every skip strategy), and the three
+    # scalar batteries whose Flink built-ins now come from the SQL
+    # rewrite table through compat.call_sql
     "tpcds_q16_exists_shape",
     "tpcds_q24b_netpaid_above_cte_avg",
     "cogroup_custkey",
@@ -88,12 +90,17 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "cep_funnel_strict",
     "cep_followed_by_any",
     "cep_vshape_iterative",
-    # ---- the remaining 32 re-proof slots take the next-oldest driver
+    "fn_string_regex",
+    "fn_math_misc",
+    "fn_json_path",
+    # ---- the remaining 29 re-proof slots take the next-oldest driver
     # confirmations (computed from CORRECTNESS_r01..r12: the r6 era —
     # the wtvf_*/setop_*/fn_* band the r12 verdict names; the five
-    # r5-era rows and the two oldest r6 rows rotated out to make room
-    # for the block above).  Rotated-out rows keep their local-oracle
-    # coverage in every verify_local sweep.
+    # r5-era rows, the two oldest r6 rows, and fn_map, subquery_in and
+    # simsearch_lsh_buckets (3 confirmations each, r06/r13/r14; their
+    # families keep fn_json, subquery_scalar and simsearch_hard_negatives
+    # here) rotated out to make room for the block above).  Rotated-out
+    # rows keep their local-oracle coverage in every verify_local sweep.
     "cep_error_burst",
     "changelog_normalize",
     "correlate_posexplode",
@@ -101,14 +108,11 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "count_window_slide",
     "dedup_simhash_collapsed",
     "fn_json",
-    "fn_map",
     "fn_temporal_extract",
     "pipeline_temperature_mix",
     "simsearch_hard_negatives",
-    "simsearch_lsh_buckets",
     "simsearch_recall_ivf",
     "subquery_correlated_agg",
-    "subquery_in",
     "subquery_scalar",
     "text_fingerprint",
     "text_repetition",

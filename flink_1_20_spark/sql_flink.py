@@ -45,6 +45,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from flink_1_20_spark.sqlenv.text import flink_type_to_spark
+
 # ------------------------------------------------------------- intervals
 
 _UNIT_SECONDS = {
@@ -1069,9 +1071,11 @@ def rewrite_unnest(sql: str) -> str:
 
 # ------------------------------------------------- Flink builtin names
 # Flink SQL function names with no Spark builtin of the same name
-# (BuiltInFunctionDefinitions.java; library forms in functions/compat.py)
-# rewritten to the equivalent Spark SQL expression — pure text, so the
-# result stays inside whole-stage codegen (never a Python UDF).
+# (BuiltInFunctionDefinitions.java = BFD) rewritten to the equivalent
+# Spark SQL expression — pure text, so the result stays inside
+# whole-stage codegen (never a Python UDF). This table is the only
+# definition of each built-in: execute_sql, the Table API's string
+# expressions and functions/compat.call_sql all go through it.
 
 
 def _strip_json_mode(arg: str) -> str:
@@ -1079,10 +1083,21 @@ def _strip_json_mode(arg: str) -> str:
     return f"'{m.group(1)}'" if m else arg
 
 
+def _json_path_clause(arg: str) -> tuple[str, str]:
+    """Split a SQL/JSON path argument into the path (mode prefix
+    stripped) and its trailing clause: `'lax $.k' RETURNING INT` ->
+    (`'$.k'`, `RETURNING INT`). A non-literal path has no clause."""
+    m = re.match(r"\s*('(?:[^']|'')*')(.*)$", arg, re.S)
+    if not m:
+        return arg, ""
+    return _strip_json_mode(m.group(1)), " ".join(m.group(2).split())
+
+
 def _bi_split_index(a):
     # Flink's delimiter is a LITERAL; Spark's split() takes a Java
     # regex — \Q...\E quoting makes metachar delimiters ('.', '|', '+')
-    # behave literally
+    # behave literally. get() is 0-based and NULL out of range, which is
+    # SPLIT_INDEX's contract (element_at raises under ANSI)
     return (
         f"get(split({a[0]}, concat('\\\\Q', {a[1]}, '\\\\E'), -1), {a[2]})"
     )
@@ -1093,10 +1108,13 @@ def _bi_to_base64(a):
 
 
 def _bi_from_base64(a):
-    return f"unbase64({a[0]})"
+    # Flink types FROM_BASE64 as STRING; Spark's unbase64 is BINARY
+    return f"CAST(unbase64({a[0]}) AS STRING)"
 
 
 def _bi_truncate(a):
+    # TRUNCATE(numeric, d) (BFD:1802) truncates toward zero; Spark's
+    # trunc() is date-only
     x = a[0]
     n = a[1] if len(a) > 1 else "0"
     return (
@@ -1115,34 +1133,80 @@ def _bi_convert_tz(a):
     return f"from_utc_timestamp(to_utc_timestamp({a[0]}, {a[1]}), {a[2]})"
 
 
+# SQL/JSON path functions (BFD:2339 JSON_EXISTS, :2361 JSON_VALUE, :2379
+# JSON_QUERY) compile to get_json_object (JVM-side Jackson). Per-row
+# raising is not expressible in a JVM expression, so both path modes
+# keep the functions' default ON ERROR behaviour (FALSE for EXISTS, NULL
+# for VALUE/QUERY), which is Flink's default; strict mode's THROW ON
+# ERROR is the one deviation. Any other ON EMPTY/ON ERROR clause is
+# rejected rather than silently ignored.
+
+
+def _json_clause_error(fn: str, clause: str, supported: str) -> ValueError:
+    return ValueError(
+        f"{fn}: unsupported clause {clause!r} (supported: {supported})"
+    )
+
+
 def _bi_json_exists(a):
-    p = _strip_json_mode(a[1])
+    p, clause = _json_path_clause(a[1])
+    if clause:
+        raise _json_clause_error("JSON_EXISTS", clause, "none")
+    # a JSON null item reports FALSE (get_json_object maps it to NULL)
     return f"(get_json_object({a[0]}, {p}) IS NOT NULL)"
 
 
 def _bi_json_value(a):
-    if len(a) != 2:
-        raise ValueError(
-            "JSON_VALUE rewrite supports the 2-arg form; use "
-            "functions/compat.json_value for RETURNING/DEFAULT clauses"
-        )
-    p = _strip_json_mode(a[1])
+    # JSON_VALUE(js, path [RETURNING type]): scalar items only —
+    # structured items (object/array) yield NULL, as the spec requires.
+    # RETURNING is a try_cast, so an unconvertible item is NULL (Flink's
+    # NULL ON ERROR), not an ANSI cast error
+    p, clause = _json_path_clause(a[1])
+    ret = re.fullmatch(r"RETURNING\s+(\w+(?:\s*\([\d\s,]*\))?)", clause, re.I)
+    if clause and not ret:
+        raise _json_clause_error("JSON_VALUE", clause, "RETURNING <type>")
     g = f"get_json_object({a[0]}, {p})"
-    return (
+    out = (
         f"(CASE WHEN substring({g}, 1, 1) IN ('{{', '[') "
         f"THEN CAST(NULL AS STRING) ELSE {g} END)"
     )
+    if ret:
+        out = f"try_cast({out} AS {flink_type_to_spark(ret.group(1))})"
+    return out
 
 
 def _bi_json_query(a):
-    if len(a) != 2:
-        raise ValueError(
-            "JSON_QUERY rewrite supports the 2-arg WITHOUT-ARRAY form; "
-            "use functions/compat.json_query for array wrappers"
+    # JSON_QUERY(js, path [WITHOUT | WITH UNCONDITIONAL [ARRAY] WRAPPER])
+    # returns JSON text. WITHOUT (the default): structured items only,
+    # scalars -> NULL. WITH UNCONDITIONAL: every item wrapped in a
+    # one-element array; get_json_object strips a string scalar's
+    # quotes, so strings are re-quoted via to_json while numeric,
+    # boolean and null literals pass through. A missing item stays NULL
+    # (Flink's NULL ON EMPTY)
+    p, clause = _json_path_clause(a[1])
+    wrap = re.fullmatch(
+        r"(?:(WITHOUT)|WITH\s+UNCONDITIONAL)(?:\s+ARRAY)?\s+WRAPPER",
+        clause,
+        re.I,
+    )
+    if clause and not wrap:
+        raise _json_clause_error(
+            "JSON_QUERY", clause,
+            "WITHOUT [ARRAY] WRAPPER, WITH UNCONDITIONAL [ARRAY] WRAPPER",
         )
-    p = _strip_json_mode(a[1])
     g = f"get_json_object({a[0]}, {p})"
-    return f"(CASE WHEN substring({g}, 1, 1) IN ('{{', '[') THEN {g} END)"
+    structured = f"substring({g}, 1, 1) IN ('{{', '[')"
+    if not wrap or wrap.group(1):
+        return f"(CASE WHEN {structured} THEN {g} END)"
+    literal = (
+        f"{g} RLIKE '^-?[0-9]+([.][0-9]+)?([eE][+-]?[0-9]+)?$' "
+        f"OR {g} IN ('true', 'false', 'null')"
+    )
+    return (
+        f"(CASE WHEN {g} IS NULL THEN CAST(NULL AS STRING) "
+        f"WHEN {structured} OR {literal} THEN concat('[', {g}, ']') "
+        f"ELSE to_json(array({g})) END)"
+    )
 
 
 def _bi_str_to_map(a):

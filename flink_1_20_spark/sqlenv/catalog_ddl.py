@@ -97,11 +97,8 @@ class CatalogDdlMixin:
     # -- CREATE FUNCTION / SHOW / DESCRIBE -------------------------------
     @staticmethod
     def _like_filter(names: list[str], pattern: str | None, negate: bool) -> list[str]:
-        """SQL LIKE over a name listing (% = any run, _ = one char).
-        Deliberately NOT shared with functions/compat.similar_to: LIKE
-        treats every other character literally (hence re.escape), while
-        SIMILAR TO passes the SQL-regex subset (classes, alternation,
-        quantifiers) through unescaped."""
+        """SQL LIKE over a name listing (% = any run, _ = one char):
+        every other character matches literally (hence re.escape)."""
         if pattern is None:
             return list(names)
         rx = re.compile(

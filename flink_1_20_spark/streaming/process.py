@@ -87,6 +87,66 @@ def running_aggregate(
     )
 
 
+def _streaming_over(
+    df: DataFrame,
+    keys: list[str],
+    ts: str,
+    value_col: str,
+    output_schema: str,
+    peers_by_ts: bool,
+    trim: Callable[[list[tuple[str, float]], Any], list[tuple[str, float]]],
+) -> DataFrame:
+    """The one keyed-state loop behind both over-aggregate frames.
+
+    State = the frame's rows (ts iso, value) serialized as JSON. Rows
+    are time-sorted within a batch and taken in peer groups: under ROWS
+    each row is its own group, under RANGE (`peers_by_ts`) rows with
+    EQUAL timestamps are one group. Each group joins the frame,
+    `trim(frame, t)` drops what fell out of it, and every row of the
+    group emits the aggregate over the trimmed frame."""
+    import json as _json
+    from itertools import groupby as _groupby
+
+    key_cols = list(keys)
+
+    def fn(key: tuple, batches: Iterator[pd.DataFrame], state: GroupState):
+        window: list[tuple[str, float]] = (
+            _json.loads(state.get[0]) if state.exists else []
+        )
+        rows: list[tuple] = []
+        for pdf in batches:
+            if len(pdf):
+                rows.extend(zip(pdf[ts], pdf[value_col].astype(float)))
+        rows.sort(key=lambda x: x[0])
+        if peers_by_ts:
+            groups = [list(g) for _, g in _groupby(rows, key=lambda x: x[0])]
+        else:
+            groups = [[r] for r in rows]
+        out: list[dict] = []
+        for peers in groups:
+            t = peers[0][0]
+            window.extend((t.isoformat(), v) for _, v in peers)
+            window = trim(window, t)
+            vals = [x[1] for x in window]
+            for _, v in peers:
+                rec = dict(zip(key_cols, key))
+                rec.update(
+                    {
+                        "ts": t,
+                        "value": v,
+                        "win_sum": sum(vals),
+                        "win_cnt": len(vals),
+                        "win_avg": sum(vals) / len(vals),
+                    }
+                )
+                out.append(rec)
+        state.update((_json.dumps(window),))
+        if out:
+            yield pd.DataFrame(out)
+
+    return keyed_process(df, key_cols, fn, output_schema, "win string")
+
+
 def streaming_over_rows(
     df: DataFrame,
     keys: list[str],
@@ -105,41 +165,9 @@ def streaming_over_rows(
     columns: keys..., ts, value, win_sum, win_cnt, win_avg — declare in
     `output_schema`. Same in-order-across-batches contract as the other
     state operators here; within a batch rows are time-sorted."""
-    import json as _json
-
-    key_cols = list(keys)
-
-    def fn(key: tuple, batches: Iterator[pd.DataFrame], state: GroupState):
-        window: list[tuple[str, float]] = (
-            _json.loads(state.get[0]) if state.exists else []
-        )
-        rows: list[tuple] = []
-        for pdf in batches:
-            if len(pdf):
-                rows.extend(zip(pdf[ts], pdf[value_col].astype(float)))
-        rows.sort(key=lambda x: x[0])
-        out = []
-        for t, v in rows:
-            window.append((t.isoformat(), v))
-            window = window[-(n_preceding + 1):]
-            vals = [x[1] for x in window]
-            rec = dict(zip(key_cols, key))
-            rec.update(
-                {
-                    "ts": t,
-                    "value": v,
-                    "win_sum": sum(vals),
-                    "win_cnt": len(vals),
-                    "win_avg": sum(vals) / len(vals),
-                }
-            )
-            out.append(rec)
-        state.update((_json.dumps(window),))
-        if out:
-            yield pd.DataFrame(out)
-
-    return df.groupBy(*key_cols).applyInPandasWithState(
-        fn, output_schema, "win string", "update", GroupStateTimeout.NoTimeout
+    return _streaming_over(
+        df, keys, ts, value_col, output_schema, peers_by_ts=False,
+        trim=lambda window, t: window[-(n_preceding + 1):],
     )
 
 
@@ -165,45 +193,12 @@ def streaming_over_range(
     every step, so state size is bounded by the interval's row count,
     not history. Same in-order-across-batches contract as the other
     state operators here; within a batch rows are time-sorted."""
-    import json as _json
-    from itertools import groupby as _groupby
-
-    key_cols = list(keys)
     delta = pd.Timedelta(seconds=range_seconds)
 
-    def fn(key: tuple, batches: Iterator[pd.DataFrame], state: GroupState):
-        window: list[tuple[str, float]] = (
-            _json.loads(state.get[0]) if state.exists else []
-        )
-        rows: list[tuple] = []
-        for pdf in batches:
-            if len(pdf):
-                rows.extend(zip(pdf[ts], pdf[value_col].astype(float)))
-        rows.sort(key=lambda x: x[0])
-        out: list[dict] = []
-        for t, peer_iter in _groupby(rows, key=lambda x: x[0]):
-            peers = list(peer_iter)
-            t_iso = t.isoformat()
-            lo_iso = (t - delta).isoformat()
-            window.extend((t_iso, v) for _, v in peers)
-            window = [w for w in window if w[0] >= lo_iso]
-            vals = [x[1] for x in window]
-            for _, v in peers:
-                rec = dict(zip(key_cols, key))
-                rec.update(
-                    {
-                        "ts": t,
-                        "value": v,
-                        "win_sum": sum(vals),
-                        "win_cnt": len(vals),
-                        "win_avg": sum(vals) / len(vals),
-                    }
-                )
-                out.append(rec)
-        state.update((_json.dumps(window),))
-        if out:
-            yield pd.DataFrame(out)
+    def trim(window, t):
+        lo_iso = (t - delta).isoformat()
+        return [w for w in window if w[0] >= lo_iso]
 
-    return df.groupBy(*key_cols).applyInPandasWithState(
-        fn, output_schema, "win string", "update", GroupStateTimeout.NoTimeout
+    return _streaming_over(
+        df, keys, ts, value_col, output_schema, peers_by_ts=True, trim=trim
     )

@@ -9,9 +9,11 @@ own spelling — `group_by` before `select` (aggregates resolved in the
 select, as Flink does), Flink expression strings (`a.sum AS total`,
 `f0.upperCase`), `left_outer_join`, `fetch/offset`, `execute().collect()`.
 
-Expression strings accept plain SQL (passed to Catalyst) plus the two
+Expression strings accept plain SQL (passed to Catalyst) plus the
 Flink-isms worth translating mechanically: the postfix aggregate/
-function call (`price.sum`, `name.upperCase()`) and `AS` aliasing.
+function call (`price.sum`, `name.upperCase()`), `AS` aliasing, and the
+Flink built-in names Spark lacks (`SPLIT_INDEX`, `JSON_VALUE`, ...,
+rewritten by the SQL dialect's sql_flink.rewrite_flink_builtins).
 Anything else is already valid Spark SQL — Catalyst parses it.
 """
 
@@ -20,6 +22,8 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame
+
+from flink_1_20_spark.sql_flink import rewrite_flink_builtins
 
 # Flink postfix-call → SQL function (the common Table API vocabulary)
 _POSTFIX_FNS = {
@@ -37,12 +41,14 @@ _POSTFIX_RE = re.compile(
 
 def _translate(expr: str) -> str:
     """Rewrite Flink postfix calls (`a.sum`, `s.upperCase()`) into SQL
-    calls (`sum(a)`, `upper(s)`); leave everything else to Catalyst."""
+    calls (`sum(a)`, `upper(s)`), then Flink built-in names Spark lacks
+    (`SPLIT_INDEX`, `JSON_VALUE`, ...) through the SQL dialect's rewrite
+    table; leave everything else to Catalyst."""
     out = expr
     while True:
         new = _POSTFIX_RE.sub(lambda m: f"{_POSTFIX_FNS[m.group(2)]}({m.group(1)})", out)
         if new == out:
-            return new
+            return rewrite_flink_builtins(new)
         out = new
 
 

@@ -1413,6 +1413,32 @@ def test_flink_builtin_name_rewrites(fixture_env):
     assert r.jq == "[1, 2]" or r.jq == "[1,2]"
 
 
+def test_flink_builtin_sql_forms_match_flink_types(fixture_env):
+    """The SQL rewrite table is the only definition of each Flink
+    built-in, so it carries the forms the Python API needs: FROM_BASE64
+    is STRING (no CAST), JSON_VALUE ... RETURNING is NULL ON ERROR (a
+    try_cast, not an ANSI cast error), JSON_QUERY takes the
+    unconditional array wrapper, and an unsupported ON EMPTY clause is
+    a ValueError instead of SQL Spark cannot parse."""
+    df = fixture_env.execute_sql("""
+        SELECT FROM_BASE64('eA==') AS x,
+               JSON_VALUE('{"k":5}', '$.k' RETURNING INT) AS v5,
+               JSON_VALUE('{"k":"s"}', '$.k' RETURNING INT) AS v_bad,
+               JSON_QUERY('{"t":["a"]}', '$.t[0]'
+                          WITH UNCONDITIONAL ARRAY WRAPPER) AS q
+    """)
+    assert df.schema["x"].dataType.simpleString() == "string"
+    r = df.collect()[0]
+    assert r.x == "x"
+    assert r.v5 == 5 and r.v_bad is None
+    assert r.q == '["a"]'
+    with pytest.raises(ValueError, match="DEFAULT 1 ON EMPTY"):
+        fixture_env.execute_sql(
+            "SELECT JSON_VALUE(x, '$.k' DEFAULT 1 ON EMPTY) AS v "
+            "FROM (SELECT '{}' AS x)"
+        )
+
+
 def test_filesystem_scan_streaming(spark, tmp_path):
     """'scan.streaming'='true' on a plain filesystem table gives the
     continuous-monitoring FileSource for any format, with the declared

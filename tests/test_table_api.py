@@ -14,6 +14,14 @@ def test_expression_translation():
     assert _translate("substring(name, 1, 3)") == "substring(name, 1, 3)"
 
 
+def test_select_takes_flink_builtins(spark):
+    """Table API expression strings take the Flink built-in names Spark
+    lacks, through the same rewrite table as execute_sql."""
+    t = from_data_frame(spark.createDataFrame([("a.b.c",)], "s string"))
+    rows = t.select("SPLIT_INDEX(s, '.', 1) AS x").execute().collect()
+    assert [r.x for r in rows] == ["b"]
+
+
 def test_filter_group_select_pipeline(spark):
     df = spark.createDataFrame(
         [("a", 1.0), ("a", 3.0), ("b", 10.0), ("b", 20.0), ("c", 5.0)],
