@@ -33,25 +33,23 @@ from pyspark.sql import DataFrame, SparkSession
 # (`from flink_1_20_spark.sql_ddl import flink_type_to_spark, ...`)
 # keep working and removals fail loudly
 from flink_1_20_spark.sqlenv.text import (  # noqa: F401
-    _FROM_LIST_STOP,
     _GENERIC_HEADS,
     _SIMPLE_TYPES,
     TableMeta,
     _apply_watermark,
-    _blank_comments,
     _computed_col_expr,
     _ctl_view_name,
     _db_view_name,
     _from_comma_tables,
     _leading_cte_names,
-    _mask_quoted,
-    _mask_string_literals,
+    _option_pairs,
     _scan_streaming_setops,
     _split_on_where,
     _split_top,
     _split_top_all,
-    _sub_outside_literals,
-    _sub_outside_quotes,
+    _sql_mask,
+    _sql_regions,
+    _sub_unquoted,
     flink_type_to_spark,
     spark_type_to_flink,
 )
@@ -255,9 +253,7 @@ class TableEnvironment(
                 # wipe the comment/properties recorded at first creation
                 self._db_meta[f"{self.current_catalog}.{db}"] = {
                     "comment": m.group(2) or "",
-                    "properties": dict(
-                        re.findall(r"'([^']+)'\s*=\s*'([^']*)'", m.group(3) or "")
-                    ),
+                    "properties": dict(_option_pairs(m.group(3) or "")),
                 }
             return None
         m = re.match(r"DESCRIBE\s+DATABASE\s+(EXTENDED\s+)?(\S+)$", s, re.I)
@@ -287,7 +283,7 @@ class TableEnvironment(
                 f"{self.current_catalog}.{db}", {"comment": "", "properties": {}}
             )
             props = dict(meta.setdefault("properties", {}))
-            props.update(re.findall(r"'([^']+)'\s*=\s*'([^']*)'", m.group(2)))
+            props.update(_option_pairs(m.group(2)))
             meta["properties"] = props
             return None
         m = re.match(
@@ -550,7 +546,8 @@ class TableEnvironment(
         # only those that resolve to a registered table. 3-part
         # `catalog.db.table` first so the 2-part pass never partially
         # rewrites its tail (the lookbehind also blocks matching right
-        # after a dot); literals are never touched.
+        # after a dot); quoted text and comments are never touched
+        # ("x.y" is a string literal, `x.y` one identifier).
         if "." in s:
 
             def _repl3(mm: re.Match) -> str:
@@ -564,10 +561,8 @@ class TableEnvironment(
                     return _db_view_name(mm.group(1), mm.group(2))
                 return mm.group(0)
 
-            s = _sub_outside_literals(
-                s, r"(?<![\w.])(\w+)\.(\w+)\.(\w+)\b", _repl3
-            )
-            s = _sub_outside_literals(s, r"(?<![\w.])(\w+)\.(\w+)\b", _repl2)
+            s = _sub_unquoted(s, r"(?<![\w.])(\w+)\.(\w+)\.(\w+)\b", _repl3)
+            s = _sub_unquoted(s, r"(?<![\w.])(\w+)\.(\w+)\b", _repl2)
         u = s.upper()
         # TRUNCATE TABLE (SqlTruncateTable, Flink 1.18+): filesystem
         # tables overwrite their path with an empty relation of the
@@ -1008,9 +1003,9 @@ class TableEnvironment(
         # broadcasts already) and their quoted-key syntax breaks Spark's
         # hint parser — strip them. BROADCAST / SHUFFLE_HASH /
         # SHUFFLE_MERGE hints share Spark's names and pass through.
-        s = re.sub(
-            r"/\*\+\s*(?:OPTIONS|LOOKUP)\s*\(\s*'[^)]*\)\s*\*/", "", s, flags=re.I
-        )
+        for a, b, kind in reversed(_sql_regions(s)):
+            if kind == "/*" and re.match(r"/\*\+\s*(?:OPTIONS|LOOKUP)\s*\(", s[a:b], re.I):
+                s = s[:a] + s[b:]
         from flink_1_20_spark.sql_flink import rewrite_streaming_session_tvf
 
         dedup = self._try_streaming_dedup(s)
@@ -1145,14 +1140,12 @@ class TableEnvironment(
                 "filter on the stored column (or store the derived "
                 "column) so row groups can be skipped",
             ))
-        # string literals and back-quoted identifiers are stripped
-        # before the scan (a '%now(%' LIKE pattern is not a call);
-        # ANSI niladic forms (current_timestamp without parens) match
-        # as bare words, and unix_timestamp only in its zero-arg form
-        # (with arguments it is a deterministic parse)
-        scrubbed = re.sub(
-            r"`[^`]*`", "``", re.sub(r"'(?:[^']|'')*'", "''", query)
-        )
+        # quoted text and comments are blanked before the scan (a
+        # '%now(%' LIKE pattern is not a call); ANSI niladic forms
+        # (current_timestamp without parens) match as bare words, and
+        # unix_timestamp only in its zero-arg form (with arguments it
+        # is a deterministic parse)
+        scrubbed = _sql_mask(query, idents=True)
         if df.isStreaming and re.search(
             r"\b(?:rand|randn|uuid|shuffle|monotonically_increasing_id"
             r")\s*\(|\bunix_timestamp\s*\(\s*\)|"

@@ -45,7 +45,15 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
-from flink_1_20_spark.sqlenv.text import flink_type_to_spark
+from flink_1_20_spark.sqlenv.text import (
+    _find_close,
+    _split_top_all,
+    _sql_mask,
+    _sql_regions,
+    _sub_unquoted,
+    _top_level,
+    flink_type_to_spark,
+)
 
 # ------------------------------------------------------------- intervals
 
@@ -77,51 +85,8 @@ def _parse_interval(text: str) -> tuple[str, str, float]:
 
 
 def _split_args(s: str) -> list[str]:
-    """Split TVF arguments on top-level commas (quote/paren aware)."""
-    out, depth, cur, q = [], 0, [], None
-    for ch in s:
-        if q:
-            cur.append(ch)
-            if ch == q:
-                q = None
-        elif ch in "'\"":
-            q = ch
-            cur.append(ch)
-        elif ch == "(":
-            depth += 1
-            cur.append(ch)
-        elif ch == ")":
-            depth -= 1
-            cur.append(ch)
-        elif ch == "," and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur).strip())
-    return out
-
-
-def _find_close(s: str, open_idx: int, pair: str = "()") -> int:
-    """Index of the closer matching the opener at open_idx (quote
-    aware); `pair` picks the delimiter pair — '()' or '[]'."""
-    opener, closer = pair
-    depth, q = 0, None
-    for i in range(open_idx, len(s)):
-        ch = s[i]
-        if q:
-            if ch == q:
-                q = None
-        elif ch in "'\"":
-            q = ch
-        elif ch == opener:
-            depth += 1
-        elif ch == closer:
-            depth -= 1
-            if depth == 0:
-                return i
-    raise ValueError(f"unbalanced {pair}")
+    """Split call arguments on top-level commas (no generic `<` heads)."""
+    return _split_top_all(s, ",", heads=())
 
 
 # ----------------------------------------------------------- window TVFs
@@ -136,12 +101,14 @@ CUMULATE_HIDDEN_PROJ = "SELECT * EXCEPT(__wm, __we),"
 
 
 def _parse_source(arg: str) -> tuple[str, list[str]]:
-    """`TABLE t [PARTITION BY a, b]` → (t, [a, b])."""
+    """`TABLE t [PARTITION BY a, b]` → (t as written, [a, b]); the table
+    keeps its backticks for the lowering's FROM (`my,t` must stay one
+    name) — strip them for a catalog lookup."""
     m = re.match(r"TABLE\s+(\S+?)(?:\s+PARTITION\s+BY\s+(.+))?$", arg.strip(), re.S | re.I)
     if not m:
         raise ValueError(f"window TVF source must be `TABLE name`: {arg!r}")
     keys = [c.strip().strip("`") for c in m.group(2).split(",")] if m.group(2) else []
-    return m.group(1).strip("`"), keys
+    return m.group(1), keys
 
 
 def _parse_descriptor(arg: str) -> str:
@@ -248,10 +215,10 @@ def rewrite_window_tvfs(sql: str) -> str:
     merging needs the session_window() call inside the GROUP BY, which
     the derived-table form cannot express."""
     while True:
-        m = _TVF_HEAD.search(sql)
+        m = _TVF_HEAD.search(_sql_mask(sql, idents=True))
         if not m:
             return sql
-        inner_open = sql.index("(", m.end() - 1)  # the TVF's own '('
+        inner_open = m.end() - 1  # the TVF's own '('
         inner_close = _find_close(sql, inner_open)
         outer_close = _find_close(sql, sql.index("(", m.start()))
         args = _split_args(sql[inner_open + 1 : inner_close])
@@ -278,27 +245,20 @@ def find_cascading_tvf_sources(
     nodes combine by min, and the outer node never sees data until the
     inner agg emits, which waits on the combined watermark."""
     out: list[tuple[str, str, int, int]] = []
-    pos = 0
-    while True:
-        m = _TVF_HEAD.search(sql, pos)
-        if not m:
-            return out
-        pos = m.end()
-        inner_open = sql.index("(", m.end() - 1)
+    for m in _TVF_HEAD.finditer(_sql_mask(sql, idents=True)):
+        inner_open = m.end() - 1
         inner_close = _find_close(sql, inner_open)
         args = _split_args(sql[inner_open + 1 : inner_close])
         try:
-            table, _pby = _parse_source(args[0])
+            written = _parse_source(args[0])[0]
             ts = _parse_descriptor(args[1])
         except (ValueError, IndexError):
             continue
+        table = written.strip("`")
         if is_time_attr(table, ts.lower()):
             head = re.compile(r"\s*TABLE\s+", re.I).match(sql, inner_open + 1)
-            name_start = head.end()
-            name_end = name_start + len(
-                re.match(r"[^\s,)]+", sql[name_start:]).group(0)
-            )
-            out.append((table, ts, name_start, name_end))
+            out.append((table, ts, head.end(), head.end() + len(written)))
+    return out
 
 
 def rewrite_streaming_session_tvf(sql: str, is_streaming) -> str:
@@ -323,18 +283,18 @@ def rewrite_streaming_session_tvf(sql: str, is_streaming) -> str:
     with a window_start/window_end GROUP BY; every other case falls
     through to the batch lowering (which then fails loudly on streaming
     input rather than silently mis-merging)."""
-    heads = [
-        m for m in re.finditer(r"\bTABLE\s*\(\s*SESSION\s*\(", sql, re.I)
-    ]
+    heads = list(
+        re.finditer(r"\bTABLE\s*\(\s*SESSION\s*\(", _sql_mask(sql, idents=True), re.I)
+    )
     if len(heads) != 1:
         return sql
     m = heads[0]
-    inner_open = sql.index("(", m.end() - 1)
+    inner_open = m.end() - 1
     inner_close = _find_close(sql, inner_open)
     outer_close = _find_close(sql, sql.index("(", m.start()))
     args = _split_args(sql[inner_open + 1 : inner_close])
     table, pby = _parse_source(args[0])
-    if not (is_streaming and is_streaming(table)):
+    if not (is_streaming and is_streaming(table.strip("`"))):
         return sql
     ts = _parse_descriptor(args[1])
     gap, _, _ = _parse_interval(args[2])
@@ -364,7 +324,7 @@ def rewrite_streaming_session_tvf(sql: str, is_streaming) -> str:
     # select item gets an automatic alias back — a token inside an
     # expression is substituted plainly (an injected AS there would be
     # a syntax error); an existing user alias is preserved.
-    from_idx = re.search(r"\bFROM\b", out, re.I).start()
+    from_idx = next(_top_level(out, r"\bFROM\b")).start()
     sel_m = re.match(r"(\s*SELECT\s+)", out, re.I)
     head, items_txt = out[: sel_m.end()], out[sel_m.end() : from_idx]
     mapping = {
@@ -424,13 +384,14 @@ def rewrite_legacy_group_windows(sql: str) -> str:
     if not re.search(r"GROUP\s+BY[^;]*\b(TUMBLE|HOP|SESSION)\s*\(", sql, re.I):
         return sql
     out, pos = [], 0
+    mask = _sql_mask(sql, idents=True)
     while True:
-        m = _LEGACY_GW.search(sql, pos)
+        m = _LEGACY_GW.search(mask, pos)
         if not m:
             out.append(sql[pos:])
             return "".join(out)
         kind, aux = m.group(1).upper(), (m.group(2) or "").upper()
-        open_idx = sql.index("(", m.end() - 1)
+        open_idx = m.end() - 1
         close_idx = _find_close(sql, open_idx)
         args = _split_args(sql[open_idx + 1 : close_idx])
         expr, struct_col = _legacy_window_expr(kind, args)
@@ -472,18 +433,19 @@ def _compile_predicate(expr: str, var: str, all_vars: list[str]) -> Callable:
     default); `LAST(var.x)` on the variable being defined means the
     previous row bound to it."""
     others = [v for v in all_vars if v != var]
-    py = expr
     # Mask string literals FIRST so no rewrite pass can touch their
     # interior (a literal like 'add to cart' must not have 'to'
     # rewritten to a column ref). SQL '' escaping is unfolded; the
     # sentinel uses control chars no identifier/keyword regex matches.
+    # (an unterminated literal stays text and fails the compile loudly)
     literals: list[str] = []
-
-    def _mask(mm: re.Match) -> str:
-        literals.append(mm.group(0)[1:-1].replace("''", "'"))
-        return f"\x00{len(literals) - 1}\x01"
-
-    py = re.sub(r"'(?:[^']|'')*'", _mask, py)
+    pieces, last = [], 0
+    for start, end, kind in _sql_regions(expr):
+        if kind == "'" and end - start > 1 and expr[end - 1] == "'":
+            pieces += [expr[last:start], f"\x00{len(literals)}\x01"]
+            literals.append(expr[start + 1 : end - 1].replace("''", "'"))
+            last = end
+    py = "".join(pieces) + expr[last:]
     # IS [NOT] NULL — before the navigation/aggregate rewrites so the
     # operand is still compact SQL (`LAST(B.price) IS NULL` works); the
     # operand pattern accepts a call form or a simple term. The operand
@@ -761,11 +723,11 @@ def run_match_recognize(spark: SparkSession, sql: str) -> DataFrame:
     Catalyst."""
     from flink_1_20_spark.operators.cep import match_recognize
 
-    m = _MR_RE.search(sql)
+    m = _MR_RE.search(_sql_mask(sql))
     if not m:
         raise ValueError("no MATCH_RECOGNIZE clause found")
     table = m.group(1).strip("`")
-    open_idx = sql.index("(", m.end() - 1)
+    open_idx = m.end() - 1
     close_idx = _find_close(sql, open_idx)
     body = sql[open_idx + 1 : close_idx]
     # optional alias after the clause
@@ -1018,10 +980,10 @@ def rewrite_unnest(sql: str) -> str:
         "HAVING|LIMIT|WINDOW|SELECT"
     )
     while True:
-        m = _UNNEST.search(sql)
+        m = _UNNEST.search(_sql_mask(sql, idents=True))
         if not m:
             return sql
-        open_idx = sql.index("(", m.end() - 1)
+        open_idx = m.end() - 1
         close_idx = _find_close(sql, open_idx)
         expr = sql[open_idx + 1 : close_idx]
         rest = sql[close_idx + 1 :]
@@ -1087,10 +1049,11 @@ def _json_path_clause(arg: str) -> tuple[str, str]:
     """Split a SQL/JSON path argument into the path (mode prefix
     stripped) and its trailing clause: `'lax $.k' RETURNING INT` ->
     (`'$.k'`, `RETURNING INT`). A non-literal path has no clause."""
-    m = re.match(r"\s*('(?:[^']|'')*')(.*)$", arg, re.S)
-    if not m:
+    lead = len(arg) - len(arg.lstrip())
+    first = next(iter(_sql_regions(arg)), None)
+    if not first or first[0] != lead or first[2] != "'":
         return arg, ""
-    return _strip_json_mode(m.group(1)), " ".join(m.group(2).split())
+    return _strip_json_mode(arg[lead : first[1]]), " ".join(arg[first[1] :].split())
 
 
 def _bi_split_index(a):
@@ -1292,17 +1255,11 @@ def _bi_json_array(a):
 
 def _split_key_value(item: str) -> tuple[str, str] | None:
     """Split a JSON_OBJECT/JSON_OBJECTAGG entry at the first VALUE
-    keyword OUTSIDE single-quoted literals AND backtick identifiers —
-    a key like 'my value key' or `unit value` must not split at its
-    inner word. Returns (key_text, value_text) or None."""
-    offset = 0
-    for i, p in enumerate(re.split(r"('(?:[^']|'')*'|`[^`]*`)", item)):
-        if i % 2 == 0:
-            vm = re.search(r"\sVALUE\s", p, re.I)
-            if vm:
-                return item[: offset + vm.start()], item[offset + vm.end():]
-        offset += len(p)
-    return None
+    keyword outside quoted text and comments — a key like 'my value
+    key' or `unit value` must not split at its inner word. Returns
+    (key_text, value_text) or None."""
+    vm = re.search(r"\sVALUE\s", _sql_mask(item, idents=True), re.I)
+    return (item[: vm.start()], item[vm.end() :]) if vm else None
 
 
 def _bi_json_arrayagg(a):
@@ -1455,82 +1412,43 @@ _BUILTIN_HEAD = re.compile(
 _COLLECTION_LITERAL = re.compile(r"\b(ARRAY|MAP)\s*\[", re.I)
 
 
-def _find_close_bracket(s: str, open_idx: int) -> int:
-    """Index of the ']' matching the '[' at open_idx (quote aware)."""
-    return _find_close(s, open_idx, pair="[]")
-
-
 def _rewrite_collection_literals(sql: str) -> str:
     """Calcite's bracket collection constructors — ARRAY[1, 2] and
     MAP['k', v] (Flink's literal forms) — onto Spark's array()/map()
     calls. One bracket pair per pass; nested literals resolve on later
-    passes. The keyword scan skips string literals ('ARRAY[...]' in a
+    passes. Quoted text and comments are skipped ('ARRAY[...]' in a
     string is data)."""
-    while True:
-        found = None
-        offset = 0
-        for i, p in enumerate(re.split(r"('(?:[^']|'')*')", sql)):
-            if i % 2 == 0:  # non-literal segment
-                mm = _COLLECTION_LITERAL.search(p)
-                if mm:
-                    found = (offset + mm.start(), offset + mm.end(), mm.group(1))
-                    break
-            offset += len(p)
-        if found is None:
-            return sql
-        start, end, kw = found
-        open_idx = sql.index("[", end - 1)
-        close = _find_close_bracket(sql, open_idx)
+    while m := _COLLECTION_LITERAL.search(_sql_mask(sql, idents=True)):
+        open_idx = m.end() - 1
+        close = _find_close(sql, open_idx, "[]")
         sql = (
-            sql[:start]
-            + kw.lower()
+            sql[: m.start()]
+            + m.group(1).lower()
             + "("
             + sql[open_idx + 1 : close]
             + ")"
             + sql[close + 1 :]
         )
+    return sql
 
 
+# matched on the lexer's mask, where a quoted operand is its delimiters
+# around blanks; the operand's text is read back from the statement
 _IS_JSON = re.compile(
-    r"(?P<op>'(?:[^']|'')*'|`[^`]+`|\w+(?:\.\w+)*(?:\([^()]*\))?)"
-    r"\s+(?P<kw>IS)\s+(?P<neg>NOT\s+)?JSON"
+    r"(?P<op>' *'|` *`|\w+(?:\.\w+)*(?:\([^()]*\))?)"
+    r"\s+IS\s+(?P<neg>NOT\s+)?JSON"
     r"(?:\s+(?P<shape>VALUE|SCALAR|OBJECT|ARRAY))?\b",
     re.I,
 )
 
 
-
-def _literal_spans(sql: str) -> list[tuple[int, int]]:
-    return [m.span() for m in re.finditer(r"'(?:[^']|'')*'", sql)]
-
-
-def _in_literal(spans: list[tuple[int, int]], pos: int) -> bool:
-    return any(s <= pos < e for s, e in spans)
-
-
-def _guarded_sub(sql: str, regex: "re.Pattern", fn) -> str:
-    """regex.sub that skips matches whose KEYWORD (the 'kw' group) lies
-    inside a string literal — the operand of IS JSON may legitimately
-    BE a literal, so the guard anchors on the keyword, not the match
-    start."""
-    spans = _literal_spans(sql)
-
-    def repl(m: "re.Match") -> str:
-        if _in_literal(spans, m.start("kw")):
-            return m.group(0)
-        return fn(m)
-
-    return regex.sub(repl, sql)
-
-
-def _rewrite_is_json(m: "re.Match") -> str:
+def _rewrite_is_json(x: str, neg: str | None, shape: str | None) -> str:
     """`x IS [NOT] JSON [VALUE|SCALAR|OBJECT|ARRAY]` (SqlJsonPredicate):
     validity via get_json_object's parse (NULL on malformed input —
     with the literal 'null' special-cased, which parses to JSON null),
     shape via the first non-space character. A NULL operand yields
     UNKNOWN (NULL), per the standard."""
-    x, neg = m.group("op"), m.group("neg")
-    shape = (m.group("shape") or "VALUE").upper()
+    shape = (shape or "VALUE").upper()
     valid = (
         f"(get_json_object({x}, '$') IS NOT NULL "
         f"OR trim(CAST({x} AS STRING)) = 'null')"
@@ -1564,52 +1482,31 @@ def _overlaps_expr(s1: str, e1: str, s2: str, e2: str) -> str:
     )
 
 
+_OVERLAPS = re.compile(r"\bOVERLAPS\b", re.I)
+
+
 def _rewrite_overlaps_scan(sql: str) -> str:
     """Row-syntax `(S1, E1) OVERLAPS (S2, E2)` onto _overlaps_expr.
     Scan-based (not a regex): the operands are matched as BALANCED
-    paren groups around each OVERLAPS keyword found outside string
-    literals, so arbitrarily nested calls with commas work. A keyword
-    whose neighbors are not two 2-element row groups is left alone."""
-    pos = 0
-    spans = _literal_spans(sql)
-    while True:
-        m = None
-        for mm in re.finditer(r"\bOVERLAPS\b", sql[pos:], re.I):
-            if not _in_literal(spans, pos + mm.start()):
-                m = mm
-                break
-        if m is None:
-            return sql
-        k_start, k_end = pos + m.start(), pos + m.end()
-        j = k_start - 1
-        while j >= 0 and sql[j].isspace():
-            j -= 1
-        ok = j >= 0 and sql[j] == ")"
+    paren groups around each OVERLAPS keyword found outside quoted text
+    and comments, so arbitrarily nested calls with commas work. A
+    keyword whose neighbors are not two 2-element row groups is left
+    alone."""
+    pos, mask = 0, _sql_mask(sql, idents=True)
+    while m := _OVERLAPS.search(mask, pos):
+        j = len(mask[: m.start()].rstrip()) - 1  # last char before it
+        i = len(mask) - len(mask[m.end() :].lstrip())  # first char after
+        ok = j >= 0 and mask[j] == ")" and i < len(mask) and mask[i] == "("
         if ok:
-            # match the opener by scanning the prefix REVERSED with the
-            # swapped pair — quote spans ('' escapes included) are
-            # palindromic, so the quote-aware scanner still works
-            rev = sql[: j + 1][::-1]
             try:
-                open1 = j - _find_close(rev, 0, pair=")(")
-            except ValueError:
+                open1, close2 = _find_close(sql, j), _find_close(sql, i)
+            except ValueError:  # unbalanced text: left to the parser
                 ok = False
-        if ok:
             # a ROW constructor, not a call's argument list: the char
             # before the opener must not be part of an identifier
             ok = open1 == 0 or not (
                 sql[open1 - 1].isalnum() or sql[open1 - 1] in "_`$."
             )
-        if ok:
-            i = k_end
-            while i < len(sql) and sql[i].isspace():
-                i += 1
-            ok = i < len(sql) and sql[i] == "("
-        if ok:
-            try:
-                close2 = _find_close(sql, i)
-            except ValueError:
-                ok = False  # e.g. a '(' inside a trailing comment
         if ok:
             a1 = _split_args(sql[open1 + 1 : j])
             a2 = _split_args(sql[i + 1 : close2])
@@ -1621,21 +1518,21 @@ def _rewrite_overlaps_scan(sql: str) -> str:
                 and not a2[0].lstrip().upper().startswith("SELECT")
             )
         if not ok:
-            pos = k_end
+            pos = m.end()
             continue
         repl = _overlaps_expr(
             a1[0].strip(), a1[1].strip(), a2[0].strip(), a2[1].strip()
         )
         sql = sql[:open1] + repl + sql[close2 + 1 :]
-        pos = open1 + len(repl)
-        spans = _literal_spans(sql)
+        pos, mask = open1 + len(repl), _sql_mask(sql, idents=True)
+    return sql
 
 
 def rewrite_flink_builtins(sql: str) -> str:
     """Replace Flink-named builtin calls with Spark SQL equivalents
     (innermost-first so nested calls resolve), then the two
     non-call-shaped forms: the IS JSON predicate and row-syntax
-    OVERLAPS."""
+    OVERLAPS.  A name inside quoted text or a comment is not a call."""
     # bracket literals FIRST: _split_args does not track '[' depth, so
     # a call argument like ARRAY[1, 2] would split at its inner comma
     sql = _rewrite_collection_literals(sql)
@@ -1644,24 +1541,25 @@ def rewrite_flink_builtins(sql: str) -> str:
     # is "the replacement differs from the matched text", not "a match
     # exists" — the latter never terminates
     while True:
-        changed = False
-        spans = _literal_spans(sql)
         # innermost first: scan matches from the right (deepest in
         # left-to-right nesting), restart after every edit (indices
-        # shift); a head inside a string literal is data, not a call
-        for m in reversed(list(_BUILTIN_HEAD.finditer(sql))):
-            if _in_literal(spans, m.start()):
-                continue
-            open_idx = sql.index("(", m.end() - 1)
+        # shift)
+        for m in reversed(list(_BUILTIN_HEAD.finditer(_sql_mask(sql, idents=True)))):
+            open_idx = m.end() - 1
             close_idx = _find_close(sql, open_idx)
             args = _split_args(sql[open_idx + 1 : close_idx])
             repl = _BUILTIN_REWRITES[m.group(1).upper()](args)
             if repl != sql[m.start() : close_idx + 1]:
                 sql = sql[: m.start()] + repl + sql[close_idx + 1 :]
-                changed = True
                 break
-        if not changed:
+        else:
             break
-    sql = _guarded_sub(sql, _IS_JSON, _rewrite_is_json)
-    sql = _rewrite_overlaps_scan(sql)
-    return sql
+    src = sql
+    sql = _sub_unquoted(
+        src,
+        _IS_JSON,
+        lambda m: _rewrite_is_json(
+            src[m.start("op") : m.end("op")], m.group("neg"), m.group("shape")
+        ),
+    )
+    return _rewrite_overlaps_scan(sql)

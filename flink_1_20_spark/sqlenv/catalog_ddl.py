@@ -19,7 +19,9 @@ from flink_1_20_spark.sqlenv.text import (
     _computed_col_expr,
     _ctl_view_name,
     _db_view_name,
+    _option_pairs,
     _split_top_all,
+    _sql_mask,
     flink_type_to_spark,
     spark_type_to_flink,
 )
@@ -207,7 +209,7 @@ class CatalogDdlMixin:
             meta.primary_key = []
         if "EXCLUDING GENERATED" in fu:
             meta.computed = []
-        new_opts = dict(re.findall(r"'([^']+)'\s*=\s*'([^']*)'", with_body))
+        new_opts = dict(_option_pairs(with_body))
         if "connector" in new_opts:
             meta.connector = new_opts.pop("connector")
         if "OVERWRITING OPTIONS" in fu or new_opts:
@@ -574,7 +576,7 @@ class CatalogDdlMixin:
             if if_not_exists:
                 return None
             raise ValueError(f"catalog already exists: {name}")
-        options = dict(re.findall(r"'([^']+)'\s*=\s*'([^']*)'", with_body))
+        options = dict(_option_pairs(with_body))
         ctype = options.pop("type", "generic_in_memory")
         if ctype != "generic_in_memory":
             raise ValueError(
@@ -637,7 +639,7 @@ class CatalogDdlMixin:
         entry = self._catalogs[name]
         m = re.match(r"SET\s*\((.*)\)$", action, re.S | re.I)
         if m:
-            for k, v in re.findall(r"'([^']+)'\s*=\s*'([^']*)'", m.group(1)):
+            for k, v in _option_pairs(m.group(1)):
                 if k == "type":
                     raise ValueError("ALTER CATALOG cannot change 'type'")
                 entry["options"][k] = v
@@ -925,7 +927,7 @@ class CatalogDdlMixin:
                     "TABLE to replace it)"
                 )
             self._drop_table(f"DROP TABLE {name}")
-        options = dict(re.findall(r"'([^']+)'\s*=\s*'([^']*)'", options_body))
+        options = dict(_option_pairs(options_body))
         connector = options.pop("connector", "filesystem")
         if connector != "filesystem":
             raise ValueError(
@@ -960,18 +962,15 @@ class CatalogDdlMixin:
         # extracted before the main patterns (it sits between the column
         # body and PARTITIONED BY/WITH)
         distribution = None
-        # scan only OUTSIDE string literals — a path option like
+        # scan outside quoted text and comments — a path option like
         # '/data/DISTRIBUTED INTO 3 BUCKETS' is data, not the clause
-        parts = re.split(r"('(?:[^']|'')*')", s)
-        for i in range(0, len(parts), 2):
-            dm = re.search(
-                r"\bDISTRIBUTED\s+(?:BY\s+(?:(HASH|RANGE)\s*)?\(([^)]*)\)\s*"
-                r"(?:INTO\s+(\d+)\s+BUCKETS)?|INTO\s+(\d+)\s+BUCKETS)",
-                parts[i],
-                re.I,
-            )
-            if not dm:
-                continue
+        dm = re.search(
+            r"\bDISTRIBUTED\s+(?:BY\s+(?:(HASH|RANGE)\s*)?\(([^)]*)\)\s*"
+            r"(?:INTO\s+(\d+)\s+BUCKETS)?|INTO\s+(\d+)\s+BUCKETS)",
+            _sql_mask(s),
+            re.I,
+        )
+        if dm:
             kind = (dm.group(1) or "HASH").upper()
             cols = [
                 c.strip().strip("`")
@@ -987,9 +986,7 @@ class CatalogDdlMixin:
                     "DISTRIBUTED requires bucket columns or a bucket count"
                 )
             distribution = (kind, cols, buckets)
-            parts[i] = parts[i][: dm.start()] + parts[i][dm.end():]
-            s = "".join(parts)
-            break
+            s = s[: dm.start()] + s[dm.end() :]
         # PARTITIONED BY is matched by a dedicated pattern FIRST: in the
         # combined pattern the greedy column-body group would swallow the
         # optional clause (regex backtracking prefers the longer body
@@ -1012,9 +1009,7 @@ class CatalogDdlMixin:
             raise ValueError(f"cannot parse CREATE TABLE: {s[:120]!r}")
         name = m.group(1).strip("`")
         body, part_by, with_body = m.group(2), m.group(3), m.group(4)
-        options = dict(
-            re.findall(r"'([^']+)'\s*=\s*'([^']*)'", with_body)
-        )
+        options = dict(_option_pairs(with_body))
         connector = options.pop("connector", None)
         if connector is None:
             raise ValueError("WITH options must include 'connector'")

@@ -16,7 +16,9 @@ from pyspark.sql import DataFrame
 from flink_1_20_spark.sqlenv.text import (
     TableMeta,
     _computed_col_expr,
+    _split_depth0,
     _split_top_all,
+    _sql_mask,
 )
 
 
@@ -427,13 +429,14 @@ class DmlMixin:
         if not meta.partitioned_by:
             return None
         spec: dict[str, str] = {}
-        for part in re.split(r"\s+AND\s+", cond.strip(), flags=re.I):
-            m = re.match(
-                r"`?(\w+)`?\s*=\s*('(?:[^']|'')*'|[\w.+-]+)\s*$", part.strip()
-            )
-            if not m:
+        for part in _split_depth0(cond.strip(), r"\s+AND\s+"):
+            part = part.strip()
+            m = re.match(r"`?(\w+)`?\s*=\s*(' *'|[\w.+-]+)\s*$", _sql_mask(part))
+            # a backslash escape reads differently in Spark and in the
+            # partition value: leave such a DELETE to the row-level path
+            if not m or "\\" in part:
                 return None
-            col, lit = m.group(1), m.group(2)
+            col, lit = m.group(1), part[m.start(2) : m.end(2)]
             if lit.startswith("'"):
                 lit = lit[1:-1].replace("''", "'")  # SQL quote unescape
             if col not in meta.partitioned_by or col in spec:

@@ -16,6 +16,7 @@ from flink_1_20_spark.sqlenv.text import (
     TableMeta,
     _ctl_view_name,
     _db_view_name,
+    _option_pairs,
     _split_top_all,
 )
 
@@ -50,7 +51,7 @@ class MaterializedMixin:
         part_by = [
             c.strip().strip("`") for c in (m.group(5) or "").split(",") if c.strip()
         ]
-        options = dict(re.findall(r"'([^']+)'\s*=\s*'([^']*)'", m.group(6) or ""))
+        options = dict(_option_pairs(m.group(6) or ""))
         freshness_sec = int(m.group(7)) * self._FRESHNESS_UNIT_SEC[
             m.group(8).upper()
         ]
@@ -295,9 +296,7 @@ class MaterializedMixin:
             if entry["status"] == "RUNNING":
                 return None
             if m.group(1):
-                entry["meta"].options.update(
-                    re.findall(r"'([^']+)'\s*=\s*'([^']*)'", m.group(1))
-                )
+                entry["meta"].options.update(_option_pairs(m.group(1)))
             if entry["mode"] == "CONTINUOUS":
                 # restarts from the retained checkpoint: only source files
                 # unseen before the suspension are ingested
@@ -386,7 +385,7 @@ class MaterializedMixin:
         # path) is not an option
         m = re.match(r"SET\s*\((.*)\)$", action, re.S | re.I)
         if m:
-            kvs = re.findall(r"'([^']+)'\s*=\s*'([^']*)'", m.group(1))
+            kvs = _option_pairs(m.group(1))
             if any(k in ("connector", "path") for k, _ in kvs):
                 raise ValueError(
                     "ALTER MATERIALIZED TABLE SET cannot change the "

@@ -14,13 +14,14 @@ from pyspark.sql import DataFrame
 
 # the moved method bodies reference the shared helpers by bare name
 from flink_1_20_spark.sqlenv.text import (
-    _blank_comments,
     _from_comma_tables,
     _leading_cte_names,
-    _mask_string_literals,
     _scan_streaming_setops,
+    _split_depth0,
     _split_top_all,
-    _sub_outside_quotes,
+    _sql_mask,
+    _sub_unquoted,
+    _top_level,
 )
 
 
@@ -68,7 +69,7 @@ class StreamingSqlMixin:
             return
         if re.search(r"\brow_kind\b", query, re.I):
             return
-        blanked = _mask_string_literals(_blank_comments(query))
+        blanked = _sql_mask(query)
         for tm in re.finditer(r"\b(?:FROM|JOIN)\s+`?(\w+)`?", blanked, re.I):
             if self._is_changelog_stream(tm.group(1)):
                 raise ValueError(
@@ -293,8 +294,8 @@ class StreamingSqlMixin:
         view = "__lookup_join_out"
         joined.createOrReplaceTempView(view)
         # strip alias qualifiers — the joined view is flat
-        body = _sub_outside_quotes(sel, rf"\b(?:{fa}|{da})\.", "")
-        tail = _sub_outside_quotes(where or "", rf"\b(?:{fa}|{da})\.", "")
+        body = _sub_unquoted(sel, rf"\b(?:{fa}|{da})\.", "")
+        tail = _sub_unquoted(where or "", rf"\b(?:{fa}|{da})\.", "")
         return self.spark.sql(f"SELECT {body} FROM {view}{tail}")
 
     def _temporal_join(self, s: str):
@@ -321,7 +322,7 @@ class StreamingSqlMixin:
             raise ValueError("AS OF must reference the fact side's time column")
         # equi keys from the ON conjunction, either side order
         fact_keys, dim_keys = [], []
-        for clause in re.split(r"\bAND\b", on, flags=re.I):
+        for clause in _split_depth0(on, r"\bAND\b"):
             em = re.match(
                 r"\s*(\w+)\.`?(\w+)`?\s*=\s*(\w+)\.`?(\w+)`?\s*$", clause
             )
@@ -461,8 +462,8 @@ class StreamingSqlMixin:
                 joined = joined.withColumnRenamed("ts", ts_col)
             view = "__temporal_join_stream_out"
             joined.createOrReplaceTempView(view)
-            body = _sub_outside_quotes(sel, rf"\b(?:{fa}|{da})\.", "")
-            tail = _sub_outside_quotes(where or "", rf"\b(?:{fa}|{da})\.", "")
+            body = _sub_unquoted(sel, rf"\b(?:{fa}|{da})\.", "")
+            tail = _sub_unquoted(where or "", rf"\b(?:{fa}|{da})\.", "")
             return self.spark.sql(f"SELECT {body} FROM {view}{tail}")
         dim_df = dim_df.withColumn("__version_ts", F.col(dim_ts))
         payload = [
@@ -484,8 +485,8 @@ class StreamingSqlMixin:
         view = "__temporal_join_out"
         joined.createOrReplaceTempView(view)
         # strip alias qualifiers — the joined view is flat
-        body = _sub_outside_quotes(sel, rf"\b(?:{fa}|{da})\.", "")
-        tail = _sub_outside_quotes(where or "", rf"\b(?:{fa}|{da})\.", "")
+        body = _sub_unquoted(sel, rf"\b(?:{fa}|{da})\.", "")
+        tail = _sub_unquoted(where or "", rf"\b(?:{fa}|{da})\.", "")
         return self.spark.sql(f"SELECT {body} FROM {view}{tail}")
 
     def _try_streaming_over(self, stmt: str) -> DataFrame | None:
@@ -919,24 +920,21 @@ class StreamingSqlMixin:
         the full prefix).  An unparseable WITH prologue fails safe:
         unknown CTEs must not silently disarm the guard."""
         names, complete = _leading_cte_names(query)
-        if re.match(r"\s*WITH\b", query, re.I) and not complete:
+        if not complete:
             raise ValueError(
                 "cannot establish the WITH/CTE scope of this streaming "
                 "set operation (unparseable CTE prologue) — the lowering "
                 "splits the text at the operator, losing the scope; "
                 "inline the CTEs or stage them through a table"
             )
-        # comments blanked first (r10): `JOIN -- note\n cte` slipped the
+        # comments blanked (r10): `JOIN -- note\n cte` slipped the
         # FROM/JOIN regex (\s+ cannot cross the comment TEXT) and the
         # comma scanner (which stops at the JOIN stop-keyword), letting
         # the CTE name silently bind to a same-named registered table.
         # String literals blanked too: 'pulled FROM c' is content, and
         # matching it falsely REJECTS a valid query. Backticks survive —
         # `FROM \`c\`` is a real reference and must keep firing.
-        # _from_comma_tables gets the RAW text (it lexes comments and
-        # quotes itself — one implementation, not two layers to keep
-        # consistent).
-        scope_text = _mask_string_literals(_blank_comments(right_text))
+        scope_text = _sql_mask(right_text)
         comma_tables = _from_comma_tables(right_text) if names else set()
         for name in names:
             if name.lower() in comma_tables or re.search(
@@ -1014,42 +1012,19 @@ class StreamingSqlMixin:
         (documented cost of the unknown shape, not a correctness risk
         for anything that runs)."""
         s = query.lstrip()
-        m = re.match(r"SELECT\s", s, re.I)
+        # a set quantifier is skipped so SELECT DISTINCT * / SELECT ALL *
+        # still classify the star as the first list item
+        m = re.match(r"SELECT\s+(?:(?:DISTINCT|ALL)\b)?", s, re.I)
         if not m:
             return True
-        depth, q, i = 0, None, m.end()
-        # skip a set quantifier so SELECT DISTINCT * / SELECT ALL *
-        # still classify the star as the first list item
-        sq = re.match(r"\s*(DISTINCT|ALL)\b", s[i:], re.I)
-        if sq:
-            i += sq.end()
-        # last significant depth-0 char, for star-position classification
-        prev = ","  # list start behaves like 'after a comma'
-        while i < len(s):
-            ch = s[i]
-            if q:
-                if ch == q:
-                    q = None
-            elif ch in "'\"`":
-                q = ch
-                if depth == 0:
-                    prev = "x"  # a literal/identifier, not a list break
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    prev = "x"
-            elif depth == 0:
-                if ch in "Ff" and re.match(r"FROM\b", s[i:], re.I) and not (
-                    s[i - 1].isalnum() or s[i - 1] == "_"
-                ):
-                    return False
-                if ch == "*" and prev in (",", "."):
-                    return True
-                if not ch.isspace():
-                    prev = ch if ch in ",." else "x"
-            i += 1
+        for t in _top_level(s[m.end() :], r"\bFROM\b|\*"):
+            if t.group() != "*":
+                return False
+            # the last significant char before the star (mask: comments
+            # blank, quoted text keeps its delimiters) decides: list
+            # start, a comma or a dot make it a projection star
+            if t.string[: t.start()].rstrip()[-1:] in ("", ",", "."):
+                return True
         return False
 
     def _try_streaming_setop_insert(

@@ -81,46 +81,189 @@ _GENERIC_HEADS = ("ARRAY", "MAP", "ROW", "MULTISET")
 _GENERIC_HEADS_TYPES = _GENERIC_HEADS + ("STRUCT",)
 
 
-def _split_top_all(s: str, sep: str, heads=_GENERIC_HEADS) -> list[str]:
-    """Split on `sep` at paren/angle-bracket depth 0, quote-aware.
+# ------------------------------------------------------------------ lexer
+#
+# The one place that decides where a string literal, a quoted identifier
+# or a comment begins and ends in SQL text — Flink has one generated
+# lexer for every statement (Calcite's FlinkSqlParserImpl).  Every
+# quote-, comment- and paren-aware scan of the SQL layer reads the mask
+# or the regions computed here, once per statement when it is planned.
 
-    `<` opens a bracket only when it directly follows a generic type
-    head (`heads`, default ARRAY/MAP/ROW/MULTISET) — comparison
-    operators in computed column expressions (`a >= b`, `a < b`) stay
-    literal; `>` closes only while a generic is open."""
-    out, pdepth, adepth, cur, i, q = [], 0, 0, [], 0, None
-    while i < len(s):
-        ch = s[i]
-        if q:
-            cur.append(ch)
-            if ch == q:
-                q = None
-        elif ch in "'\"`":
-            q = ch
-            cur.append(ch)
-        elif ch == "(":
-            pdepth += 1
-            cur.append(ch)
-        elif ch == ")":
-            pdepth -= 1
-            cur.append(ch)
-        elif ch == "<":
-            head = re.search(r"(\w+)\s*$", "".join(cur))
-            if head and head.group(1).upper() in heads or adepth > 0:
-                adepth += 1
-            cur.append(ch)
-        elif ch == ">":
-            if adepth > 0:
-                adepth -= 1
-            cur.append(ch)
-        elif ch == sep and pdepth == 0 and adepth == 0:
-            out.append("".join(cur))
-            cur = []
+_REGION_START = re.compile(r"['\"`]|--|/\*")
+_REGION_END = {
+    # string literals honor backslash escapes (Spark's default parser)
+    # and doubled quotes (Calcite's); `` escapes a backtick
+    "'": re.compile(r"(?:[^'\\]|\\.|'')*'", re.S),
+    '"': re.compile(r'(?:[^"\\]|\\.|"")*"', re.S),
+    "`": re.compile(r"(?:[^`]|``)*`"),
+    "--": re.compile(r"[^\n]*"),
+}
+_BLOCK_COMMENT_TOKEN = re.compile(r"/\*|\*/")
+
+
+def _sql_regions(s: str) -> list[tuple[int, int, str]]:
+    """(start, end, kind) of every string literal, quoted identifier and
+    comment in `s`, in order; `kind` is the opening delimiter (' " `
+    -- /*).  One pass, because quotes and comments interact both ways:
+    a comment marker inside a literal is content, and the apostrophe in
+    `/* it's */` must not open a string (a mask-quotes-then-scan form
+    once paired it with a later literal and blanked real SQL to the end
+    of the statement).  `/* */` comments nest, as Spark parses them
+    (SPARK-28880).  An unterminated region runs to the end of `s`: the
+    parser rejects the statement anyway, and no scan may read its
+    text."""
+    out, i, n = [], 0, len(s)
+    while True:
+        m = _REGION_START.search(s, i)
+        if not m:
+            return out
+        kind, end = m.group(), n
+        if kind == "/*":
+            depth = 0
+            for t in _BLOCK_COMMENT_TOKEN.finditer(s, m.start()):
+                depth += 1 if t.group() == "/*" else -1
+                if depth == 0:
+                    end = t.end()
+                    break
         else:
-            cur.append(ch)
-        i += 1
-    if cur:
-        out.append("".join(cur))
+            e = _REGION_END[kind].match(s, m.end())
+            end = e.end() if e else n
+        out.append((m.start(), end, kind))
+        i = end
+
+
+def _sql_mask(s: str, idents: bool = False) -> str:
+    """Same-length copy of `s` for structural scans, so positions found
+    in it index straight into `s`: comments are blanked to spaces (a
+    `\\s+` regex crosses them) and string-literal bodies are blanked
+    between their kept delimiters (`'a,b'` → `'   '`, still one token).
+    Quoted identifiers are blanked the same way only when `idents` is
+    set: a paren or comma inside `` `we)ird` `` is not structure, but the
+    CTE scope guards must still see `` `cte` `` names."""
+    out, last = [], 0
+    for start, end, kind in _sql_regions(s):
+        if kind == "`" and not idents:
+            continue
+        if kind in ("--", "/*"):
+            a, b = start, end
+        else:
+            a = start + 1
+            b = end - 1 if end - a and s[end - 1] == kind else end
+        out += [s[last:a], " " * (b - a)]
+        last = b
+    out.append(s[last:])
+    return "".join(out)
+
+
+_HEAD_BEFORE = re.compile(r"(\w+)\s*\Z")
+
+
+def _top_level(s: str, pattern: str, heads=()):
+    """Yield the case-insensitive matches of `pattern` that sit outside
+    quoted text and comments, at paren depth 0 and outside generic
+    angle brackets.  The matches are made on `_sql_mask(s, idents=True)`:
+    their positions index `s`, their text equals `s` wherever a match
+    lies outside quoted text.  `<` opens an angle bracket only directly
+    after a generic type head in `heads` (ARRAY<...>) or inside one, so
+    comparisons in computed-column expressions (`a < b`) stay literal;
+    `>` closes only while one is open.  `pattern` must not match a
+    bracket."""
+    mask = _sql_mask(s, idents=True)
+    depth = adepth = last = 0
+    for m in re.finditer(rf"(?:{pattern})|(?P<_br>[()<>])", mask, re.I):
+        br = m.group("_br")
+        if br is None:
+            if depth == adepth == 0:
+                yield m
+                last = m.end()
+        elif br == "(":
+            depth += 1
+        elif br == ")":
+            depth -= 1
+        elif br == "<":
+            head = _HEAD_BEFORE.search(mask, last, m.start())
+            if adepth or head and head.group(1).upper() in heads:
+                adepth += 1
+        elif adepth:
+            adepth -= 1
+
+
+def _split_depth0(s: str, pattern: str, heads=()) -> list[str]:
+    """`s` cut at every `_top_level` match of `pattern`; the pieces
+    re-join to `s` with the separators between them."""
+    out, last = [], 0
+    for m in _top_level(s, pattern, heads):
+        out.append(s[last : m.start()])
+        last = m.end()
+    out.append(s[last:])
+    return out
+
+
+def _find_close(s: str, idx: int, pair: str = "()") -> int:
+    """Index of the bracket that balances the one at `idx`, skipping
+    quoted text and comments.  `pair` is (opener, closer), e.g. '()' or
+    '[]'; the search runs right from an opener and left from a
+    closer."""
+    mask = _sql_mask(s, idents=True)
+    opener, closer = pair
+    if mask[idx] not in pair:
+        raise ValueError(f"no {pair} at {idx}")
+    step = 1 if mask[idx] == opener else -1
+    depth = 0
+    for i in range(idx, len(mask) if step > 0 else -1, step):
+        if mask[i] == opener:
+            depth += step
+        elif mask[i] == closer:
+            depth -= step
+        if depth == 0:
+            return i
+    raise ValueError(f"unbalanced {pair}")
+
+
+def _sub_unquoted(s: str, pattern, repl) -> str:
+    """re.sub that never touches quoted text or comments: `pattern` is
+    matched on `_sql_mask(s, idents=True)` and replacements are spliced
+    into `s`.  A path like '/tmp/x.csv' or an identifier like `a.b`
+    must not be rewritten even when a table `csv` exists in a database
+    `x`.  A callable `repl` gets the match on the mask — its group text
+    equals `s` outside quoted text; a group that may BE quoted text is
+    read from `s` by its span."""
+    mask = _sql_mask(s, idents=True)
+    out, last = [], 0
+    for m in re.finditer(pattern, mask):
+        out += [s[last : m.start()], repl(m) if callable(repl) else m.expand(repl)]
+        last = m.end()
+    out.append(s[last:])
+    return "".join(out)
+
+
+def _option_pairs(text: str) -> list[tuple[str, str]]:
+    """('k', 'v') for every `'k' = 'v'` pair in `text` — a WITH (...)
+    option list or a SET (...) property list — read from the lexer's
+    string-literal regions, doubled quotes unfolded."""
+    lits = [(a, b) for a, b, kind in _sql_regions(text) if kind == "'"]
+    return [
+        (text[a + 1 : b - 1].replace("''", "'"), text[c + 1 : d - 1].replace("''", "'"))
+        for (a, b), (c, d) in zip(lits, lits[1:])
+        if b - a > 2 and re.fullmatch(r"\s*=\s*", text[b:c])
+    ]
+
+
+# ------------------------------------------------------------------ splits
+
+
+def _split_top_all(s: str, sep: str, heads=_GENERIC_HEADS) -> list[str]:
+    """Split on the character `sep` at paren/angle-bracket depth 0,
+    outside quoted text and comments (`_top_level`; `heads` defaults to
+    ARRAY/MAP/ROW/MULTISET).  A trailing empty piece is dropped, and
+    each piece is trimmed of surrounding whitespace AND comments: a
+    column definition `b INT /* note */` is `b INT`, and a spliced call
+    argument `x -- note` would comment out the rest of its line."""
+    parts = _split_depth0(s, re.escape(sep), heads)
+    out = []
+    for p in parts if parts[-1] else parts[:-1]:
+        m = _sql_mask(p)
+        out.append(p[len(m) - len(m.lstrip()) : len(m.rstrip())])
     return out
 
 
@@ -167,32 +310,21 @@ def spark_type_to_flink(t: str) -> str:
 
 
 def _split_on_where(text: str) -> tuple[str, str | None]:
-    """Split at the first WHERE keyword OUTSIDE string literals AND at
-    paren depth 0 — `SET note = 'a WHERE b'` must not split inside the
-    literal, and `SET a = (SELECT x FROM u WHERE u.k = t.k)` must not
-    split at the subquery's inner WHERE.  Double-quoted literals and
-    backticked identifiers are excluded from BOTH the WHERE scan and
-    the paren count (an unbalanced '(' inside "a(b" must not wedge the
-    depth)."""
-    parts = re.split(r"('(?:[^']|'')*'|\"[^\"]*\"|`[^`]*`)", text)
-    depth = 0
-    consumed = 0  # characters of `text` before the current part
-    for i, part in enumerate(parts):
-        if i % 2:  # string literal: parens inside are text
-            consumed += len(part)
-            continue
-        for m in re.finditer(r"[()]|\sWHERE\s", part, re.I):
-            tok = m.group(0)
-            if tok == "(":
-                depth += 1
-            elif tok == ")":
-                depth -= 1
-            elif depth == 0:
-                before = text[: consumed + m.start()]
-                after = text[consumed + m.end() :]
-                return before, after
-        consumed += len(part)
+    """Split at the first WHERE keyword at paren depth 0 outside quoted
+    text and comments — `SET note = 'a WHERE b'` must not split inside
+    the literal, `SET a = (SELECT x FROM u WHERE u.k = t.k)` not at the
+    subquery's inner WHERE, and a '(' inside "a(b" or `weird(col` must
+    not wedge the depth."""
+    for m in _top_level(text, r"\sWHERE\s"):
+        return text[: m.start()], text[m.end() :]
     return text, None
+
+
+# matched on the fully blanked mask, where a backticked name is its
+# delimiters around blanks; the name is read back from the statement
+_CTE_HEAD = re.compile(
+    r"\s*([A-Za-z_]\w*|` *`)\s*(?:\([^)]*\)\s*)?AS\s*\(", re.I
+)
 
 
 def _leading_cte_names(query: str) -> tuple[list[str], bool]:
@@ -203,207 +335,75 @@ def _leading_cte_names(query: str) -> tuple[list[str], bool]:
     treat complete=False as "unknown CTEs exist" and fail safe — a
     truncated list would silently disarm scope guards for the CTEs it
     missed.  ([], True) when the statement does not start with WITH."""
-    m = re.match(r"\s*WITH\s+(?:RECURSIVE\s+)?", query, re.I)
+    mask = _sql_mask(query, idents=True)
+    m = re.match(r"\s*WITH\s+(?:RECURSIVE\s+)?", mask, re.I)
     if not m:
         return [], True
     names, i = [], m.end()
-    while True:
-        nm = re.match(
-            r"\s*(?:([A-Za-z_]\w*)|`([^`]+)`)\s*(?:\([^)]*\)\s*)?AS\s*\(",
-            query[i:],
-            re.I,
-        )
-        if not nm:
-            break
-        names.append((nm.group(1) or nm.group(2)).lower())
-        # skip the balanced CTE body
-        depth, j, q = 0, i + nm.end() - 1, None
-        while j < len(query):
-            ch = query[j]
-            if q:
-                if ch == q:
-                    q = None
-            elif ch in "'\"`":
-                q = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            j += 1
-        i = j + 1
-        c = re.match(r"\s*,", query[i:])
+    while nm := _CTE_HEAD.match(mask, i):
+        names.append(query[nm.start(1) : nm.end(1)].strip("`").lower())
+        try:  # skip the balanced CTE body
+            i = _find_close(query, nm.end() - 1) + 1
+        except ValueError:
+            return names, False
+        c = re.compile(r"\s*,").match(mask, i)
         if not c:
             break
-        i += c.end()
+        i = c.end()
     complete = bool(
-        names and re.match(r"\s*(SELECT|VALUES|\()", query[i:], re.I)
+        names and re.compile(r"\s*(SELECT|VALUES|\()", re.I).match(mask, i)
     )
     return names, complete
 
 
-_FROM_LIST_STOP = re.compile(
-    r"(?i)\b(WHERE|GROUP|HAVING|ORDER|LIMIT|WINDOW|QUALIFY|UNION|"
+# one token of a FROM list: a bracket, an item comma, or the clause
+# keyword that ends the list
+_FROM_LIST_TOKEN = re.compile(
+    r"[(),]|\b(?:WHERE|GROUP|HAVING|ORDER|LIMIT|WINDOW|QUALIFY|UNION|"
     r"EXCEPT|INTERSECT|JOIN|INNER|LEFT|RIGHT|FULL|CROSS|NATURAL|ON|"
-    r"USING|MATCH_RECOGNIZE)\b"
+    r"USING|MATCH_RECOGNIZE)\b",
+    re.I,
 )
-
-
-def _mask_quoted(s: str) -> str:
-    """Same-length copy of `s` with every quoted region Spark SQL
-    recognizes (single-/double-quoted literals with backslash escapes,
-    backticked identifiers) blanked to spaces.  Length-preserving so
-    positions found in the mask index straight into the original."""
-    parts = re.split(
-        r"('(?:[^'\\]|\\.|'')*'|\"(?:[^\"\\]|\\.|\"\")*\"|`[^`]*`)", s
-    )
-    return "".join(p if i % 2 == 0 else " " * len(p) for i, p in enumerate(parts))
-
-
-def _mask_string_literals(s: str) -> str:
-    """Same-length copy with only the STRING-literal forms blanked
-    (single-/double-quoted; backslash escapes honored).  Backticked
-    identifiers survive: they are table references, and blanking them
-    would under-match — the direction the CTE scope guard must never
-    take.  A literal, by contrast, can never be a table reference."""
-    parts = re.split(r"('(?:[^'\\]|\\.|'')*'|\"(?:[^\"\\]|\\.|\"\")*\")", s)
-    return "".join(p if i % 2 == 0 else " " * len(p) for i, p in enumerate(parts))
-
-
-def _blank_comments(s: str) -> str:
-    """Same-length copy of `s` with SQL comments blanked to spaces —
-    both `-- ...` line comments (newlines kept, so `\\s+` regexes cross
-    the former comment) and `/* ... */` bracketed comments, which Spark
-    parses NESTED (SPARK-28880), so depth is tracked.
-
-    SINGLE-PASS lexer (r10 review finding): quotes and comments
-    interact both ways — a comment marker inside a string literal is
-    content, AND a quote inside a comment (the apostrophe in
-    `/* it's */`) must not open a string.  The earlier mask-quotes-
-    then-scan form got the second direction wrong: the apostrophe
-    paired with a later real literal, the masked region swallowed the
-    comment terminator, and real SQL was blanked to end-of-string —
-    silently disarming the CTE scope guard.  An unterminated bracketed
-    comment blanks to end-of-string (the parser would reject the
-    statement anyway; the guard must still not see its text)."""
-    out = list(s)
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if ch in ("'", '"'):
-            # string literal: honor backslash escapes and doubled quotes
-            j = i + 1
-            while j < n:
-                if s[j] == "\\":
-                    j += 2
-                    continue
-                if s[j] == ch:
-                    if j + 1 < n and s[j + 1] == ch:
-                        j += 2
-                        continue
-                    break
-                j += 1
-            i = min(j + 1, n)
-        elif ch == "`":
-            j = s.find("`", i + 1)
-            i = n if j < 0 else j + 1
-        elif ch == "-" and s[i : i + 2] == "--":
-            j = s.find("\n", i)
-            j = n if j < 0 else j
-            out[i:j] = " " * (j - i)
-            i = j
-        elif ch == "/" and s[i : i + 2] == "/*":
-            depth, j = 1, i + 2
-            while j < n and depth:
-                if s[j : j + 2] == "/*":
-                    depth += 1
-                    j += 2
-                elif s[j : j + 2] == "*/":
-                    depth -= 1
-                    j += 2
-                else:
-                    j += 1
-            out[i:j] = " " * (j - i)
-            i = j
-        else:
-            i += 1
-    return "".join(out)
-
-
 
 
 def _from_comma_tables(text: str) -> set[str]:
     """Lowercased head identifiers of every TOP-LEVEL FROM-list item
-    (``FROM a, b`` → {a, b}) anywhere in `text`, with line comments
-    stripped.  Complements the ``FROM/JOIN <name>`` regex in the set-op
-    CTE scope guard — a comma-joined CTE reference (``... FROM x,
-    cte``) or a comment-separated head (``FROM -- x\\n cte``) would
-    otherwise slip past it and silently bind to a same-named registered
-    table.  Paren-depth aware (subquery commas don't split items);
-    scanning a FROM list stops at the first depth-0 clause keyword.
-    Over-matching is acceptable here — the guard fails SAFE by raising
-    a clear unsupported-scope error — under-matching is not.  FROM
-    anchors are located on a comment-blanked, quote-masked copy (r10):
-    a literal containing 'FROM <cte-name>' must not add a phantom head
-    (that direction falsely REJECTS valid queries), and a FROM inside a
-    line comment is not a FROM list.  Segments are scanned on the
-    comment-blanked original so backticked/quoted names survive."""
+    (``FROM a, b`` → {a, b}) anywhere in `text`.  Complements the
+    ``FROM/JOIN <name>`` regex in the set-op CTE scope guard — a
+    comma-joined CTE reference (``... FROM x, cte``) or a
+    comment-separated head (``FROM -- x\\n cte``) would otherwise slip
+    past it and silently bind to a same-named registered table.
+    Paren-depth aware (subquery commas don't split items); scanning a
+    FROM list stops at the first depth-0 clause keyword.  Over-matching
+    is acceptable here — the guard fails SAFE by raising a clear
+    unsupported-scope error — under-matching is not.  The list
+    structure is read on the fully blanked mask (a literal holding
+    'FROM <cte-name>' adds no phantom head, which would falsely REJECT
+    a valid query); item heads are read with quoted identifiers kept,
+    so a backticked table name is never dropped."""
     out: set[str] = set()
-    scan = _blank_comments(text)
-    for m in re.finditer(r"\bFROM\b", _mask_quoted(scan), re.I):
-        seg = scan[m.end():]
-        depth, i = 0, 0
-        items: list[list[str]] = [[]]
-        while i < len(seg):
-            ch = seg[i]
-            if ch == "(":
+    mask, names = _sql_mask(text, idents=True), _sql_mask(text)
+    for m in re.finditer(r"\bFROM\b", mask, re.I):
+        depth, start, bounds = 0, m.end(), []
+        for t in _FROM_LIST_TOKEN.finditer(mask, m.end()):
+            tok = t.group()
+            if tok == "(":
                 depth += 1
-            elif ch == ")":
-                if depth == 0:
-                    break
+            elif tok == ")" and depth:
                 depth -= 1
-            elif ch in "'\"`":
-                # copy the whole quoted token verbatim: skipping it
-                # would DROP a backticked table name from its item —
-                # the under-match this guard must never have. Commas
-                # and parens inside are never scanned, so they can't
-                # split items or shift depth. The string forms honor
-                # backslash escapes (Spark's default parser does): a
-                # naive find() would end the token at \' and a phantom
-                # quoted region could then swallow a real comma + name.
-                j = i + 1
-                while j < len(seg):
-                    if ch != "`" and seg[j] == "\\":
-                        j += 2
-                        continue
-                    if seg[j] == ch:
-                        break
-                    j += 1
-                j = min(j, len(seg) - 1)
-                items[-1].extend(seg[i : j + 1])
-                i = j + 1
-                continue
-            # (no comment branch: `scan` is already comment-blanked —
-            # both -- and /* */ forms — by _blank_comments above)
-            elif depth == 0:
-                if ch == ",":
-                    items.append([])
-                    i += 1
-                    continue
-                k = _FROM_LIST_STOP.match(seg, i)
-                if k and not (i > 0 and (seg[i - 1].isalnum() or seg[i - 1] == "_")):
-                    break
-            items[-1].append(ch)
-            i += 1
-        # items[0] (directly after FROM) is included too: the FROM/JOIN
-        # regex fallback cannot cross a line comment (`FROM -- x\n cte`),
-        # and this scan strips comments — over-reporting a head name is
-        # harmless (the guard fails safe), missing one is not
-        for item in items:
-            t = re.match(r"\s*`?([A-Za-z_][\w$]*)`?", "".join(item).strip())
-            if t:
-                out.add(t.group(1).lower())
+            elif tok == ",":
+                if not depth:
+                    bounds.append((start, t.start()))
+                    start = t.end()
+            elif not depth:
+                break
+        else:
+            t = None
+        bounds.append((start, t.start() if t else len(mask)))
+        for a, b in bounds:
+            h = re.match(r"\s*`?([A-Za-z_][\w$]*)`?", names[a:b])
+            if h:
+                out.add(h.group(1).lower())
     return out
 
 
@@ -427,18 +427,12 @@ def parse_watermark_delay(col: str, delay: str) -> str:
     # strip BALANCED redundant outer parens only: "(a) - (b)" must not
     # lose its first "(" — require the opening paren to close at the end
     while d.startswith("(") and d.endswith(")"):
-        depth = 0
-        for i, ch in enumerate(d):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0 and i < len(d) - 1:
-                    break
-        else:
-            d = d[1:-1].strip()
-            continue
-        break
+        try:
+            if _find_close(d, 0) != len(d) - 1:
+                break
+        except ValueError:
+            break
+        d = d[1:-1].strip()
     # the bounded-delay form is matched EXACTLY (`<col> - INTERVAL '<n>'
     # <unit>`), never by searching for an INTERVAL token: a chained
     # `ts - INTERVAL '10' MINUTE - INTERVAL '30' SECOND` or a delay
@@ -474,39 +468,19 @@ def _scan_streaming_setops(query: str) -> list[tuple[int, int, str, bool]]:
     (start, end, 'INTERSECT'|'EXCEPT', is_all).  A SET OPERATOR is
     followed by a query — `SELECT * EXCEPT(col)` projections, comment
     text, and quoted identifiers never match."""
-    found = []
-    depth, q, i = 0, None, 0
-    while i < len(query):
-        ch = query[i]
-        if q:
-            if ch == q:
-                q = None
-        elif ch in "'\"`":
-            q = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and ch in "IiEe":
-            m = re.match(
-                r"(INTERSECT|EXCEPT)\b(\s+(?:ALL|DISTINCT)\b)?"
-                r"(?=\s*\(?\s*SELECT\b)",
-                query[i:],
-                re.I,
-            )
-            if m and (i == 0 or not (query[i - 1].isalnum() or query[i - 1] == "_")):
-                found.append(
-                    (
-                        i,
-                        i + m.end(),
-                        m.group(1).upper(),
-                        (m.group(2) or "").strip().upper() == "ALL",
-                    )
-                )
-                i += m.end()
-                continue
-        i += 1
-    return found
+    return [
+        (
+            m.start(),
+            m.end(),
+            m.group(1).upper(),
+            (m.group(2) or "").strip().upper() == "ALL",
+        )
+        for m in _top_level(
+            query,
+            r"\b(INTERSECT|EXCEPT)\b(\s+(?:ALL|DISTINCT)\b)?"
+            r"(?=\s*\(?\s*SELECT\b)",
+        )
+    ]
 
 
 # ------------------------------------------------------------------ model
@@ -551,35 +525,7 @@ def _computed_col_expr(expr: str) -> str:
     CURRENT_TIMESTAMP: Flink stamps processing time per record
     (ProcTimeAttribute); a micro-batch engine stamps per batch — the
     batch-consistent wall clock is the Spark-idiomatic analog."""
-    return _sub_outside_literals(
-        expr, r"(?i)\bPROCTIME\s*\(\s*\)", "CURRENT_TIMESTAMP"
-    )
-
-
-def _sub_outside_literals(s: str, pattern: str, repl: str) -> str:
-    """re.sub that never touches single-quoted SQL string literals —
-    a path like '/tmp/x.csv' must not be rewritten even when a table
-    `csv` exists in a database `x`."""
-    parts = re.split(r"('(?:[^']|'')*')", s)
-    return "".join(
-        p if i % 2 else re.sub(pattern, repl, p) for i, p in enumerate(parts)
-    )
-
-
-def _sub_outside_quotes(s: str, pattern: str, repl: str) -> str:
-    """re.sub protected from ALL quoted regions Spark SQL recognizes:
-    single-quoted literals, double-quoted literals (Spark's default,
-    non-ANSI mode treats \"...\" as a string), and backticked
-    identifiers — with backslash escapes honored inside the string
-    forms. Used where the substitution target can legitimately appear
-    inside literal text (e.g. alias-qualifier stripping: a literal
-    'd.name tag' must survive `d.` removal)."""
-    parts = re.split(
-        r"('(?:[^'\\]|\\.|'')*'|\"(?:[^\"\\]|\\.|\"\")*\"|`[^`]*`)", s
-    )
-    return "".join(
-        p if i % 2 else re.sub(pattern, repl, p) for i, p in enumerate(parts)
-    )
+    return _sub_unquoted(expr, r"(?i)\bPROCTIME\s*\(\s*\)", "CURRENT_TIMESTAMP")
 
 
 def _db_view_name(db: str, table: str) -> str:
@@ -599,22 +545,23 @@ __all__ = [
     "flink_type_to_spark",
     "spark_type_to_flink",
     "_GENERIC_HEADS",
+    "_sql_regions",
+    "_sql_mask",
+    "_top_level",
+    "_split_depth0",
+    "_find_close",
+    "_sub_unquoted",
+    "_option_pairs",
     "_split_top_all",
     "_split_top",
     "_split_on_where",
     "_leading_cte_names",
-    "_FROM_LIST_STOP",
-    "_mask_quoted",
-    "_mask_string_literals",
-    "_blank_comments",
     "_from_comma_tables",
     "_apply_watermark",
     "parse_watermark_delay",
     "_scan_streaming_setops",
     "TableMeta",
     "_computed_col_expr",
-    "_sub_outside_literals",
-    "_sub_outside_quotes",
     "_db_view_name",
     "_ctl_view_name",
 ]

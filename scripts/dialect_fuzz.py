@@ -1,4 +1,4 @@
-"""Grammar-driven dialect fuzz harness (30 shapes): seeded random SQL over the
+"""Grammar-driven dialect fuzz harness (36 shapes): seeded random SQL over the
 fixture tables, executed through BOTH executeSql→Spark (the hand-written
 dialect surface in sql_ddl.py + sql_flink.py) and DuckDB, with
 order-insensitive value comparison — the property-test upgrade of the
@@ -1254,6 +1254,39 @@ class Gen:
             )
         return spark_sql, duck_sql
 
+    def q_lexer_noise(self) -> tuple[str, str]:
+        """Comments holding `(`, `,`, WHERE and a built-in name — one
+        inside a built-in call's argument list — plus a backticked
+        alias, inside otherwise shared SQL: the built-in rewrite and
+        every other structural scan of the dialect layer must read them
+        as the one lexer does.  DuckDB spells the quoted alias with
+        double quotes and TRUNCATE(x, 0) as trunc(x)."""
+        r = self.rng
+        t = r.choice([x for x in TABLES if TABLES[x]["doubles"]])
+        ic, dc = self.int_col(t), self.dbl_col(t)
+        k = r.choice([3, 5, 7])
+        notes = [
+            "-- TRUNCATE(x, ( WHERE a, b\n",
+            "/* SPLIT_INDEX(y, ',', 0) WHERE ( */ ",
+            "-- it's ) EXCEPT SELECT 1\n",
+            "/* ) , TO_BASE64( */ ",
+        ]
+        n1, n2, n3, n4, n5 = (r.choice(notes) for _ in range(5))
+        alias = r.choice(["g,1", "we)ird", "k (x)", "a WHERE b"])
+        body = (
+            f"SELECT {ic} % {k} AS @alias, {n1}count(*) AS cnt, "
+            f"CAST(sum(CAST(@trunc AS BIGINT)) AS BIGINT) AS s_t "
+            f"FROM {t} {n2}WHERE {self.pred(t)} {n3}GROUP BY {ic} % {k} {n4}"
+        )
+        return (
+            body.replace("@alias", f"`{alias}`").replace(
+                "@trunc", f"TRUNCATE({dc} {n5}, 0)"
+            ),
+            body.replace("@alias", f'"{alias}"').replace(
+                "@trunc", f"trunc({dc} {n5})"
+            ),
+        )
+
     # ------------------------------------------------------ battery
 
     SHAPES = (
@@ -1298,6 +1331,8 @@ class Gen:
         # r12 second-half growth
         ("match_bounded", "q_match_bounded", 1),
         ("unnest_ord", "q_unnest_ordinality", 2),
+        # comments and quoted identifiers through the one SQL lexer
+        ("lexer_noise", "q_lexer_noise", 2),
     )
 
     def battery(self, n: int) -> list[tuple[str, str, str]]:

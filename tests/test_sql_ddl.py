@@ -1503,6 +1503,18 @@ def test_review_fixes_dialect(fixture_env, spark, tmp_path):
     env.execute_sql("USE default_database")
     got = env.execute_sql("SELECT 'path to x.csv here' AS p").collect()[0].p
     assert got == "path to x.csv here"
+    # Spark reads "x.csv" as a string literal and `x.csv` as ONE
+    # identifier: neither is the qualified reference x.csv
+    r = env.execute_sql("""SELECT "x.csv" AS d, 'x.csv' AS s""").collect()[0]
+    assert r.d == "x.csv" and r.s == "x.csv"
+    with pytest.raises(Exception, match="x.csv"):
+        env.execute_sql("SELECT count(*) FROM `x.csv`").collect()
+    # a comment in a column list is whitespace, as in Flink's lexer
+    env.execute_sql(f"""
+        CREATE TABLE cmt (a BIGINT -- the only column, (
+        ) WITH ('connector'='filesystem','path'='{src}','format'='csv')
+    """)
+    assert env.execute_sql("SELECT count(*) AS n FROM cmt").collect()[0].n == 1
     assert env.execute_sql("SELECT count(*) AS n FROM x.csv").collect()[0].n == 1
     env.execute_sql("USE x")
     env.execute_sql("DROP TABLE csv")
@@ -2823,8 +2835,11 @@ def test_streaming_intersect_and_except(spark, tmp_path):
     # star-EXCEPT projection and comment text are not set ops
     df = env.execute_sql("SELECT * EXCEPT(k), k FROM si_a")
     assert df.isStreaming and df.columns == ["k"]
-    df = env.execute_sql("SELECT k FROM si_a -- except late rows")
-    assert df.isStreaming
+    for q in (
+        "SELECT k FROM si_a -- except late rows",
+        "SELECT k FROM si_a -- EXCEPT SELECT",
+    ):
+        assert env.execute_sql(q).isStreaming
     # explicit DISTINCT spelling and a chained INTERSECT both lower
     df = env.execute_sql(
         "SELECT k FROM si_a INTERSECT DISTINCT SELECT k FROM si_b"
@@ -4530,12 +4545,19 @@ def test_streaming_setop_review_guards(spark, tmp_path):
     )
     assert df.isStreaming
     # an unparseable WITH prologue fails SAFE (unknown CTEs must not
-    # silently disarm the guard)
+    # silently disarm the guard): the main query starts with a form the
+    # prologue parser does not know (Spark's `TABLE c3`)
     with pytest.raises(ValueError, match="unparseable"):
         env.execute_sql(
-            "WITH /* odd */ c3 AS (SELECT k FROM sg_a) "
-            "SELECT k FROM c3 INTERSECT SELECT k FROM sg_b"
+            "WITH c3 AS (SELECT k FROM sg_a) "
+            "TABLE c3 INTERSECT SELECT k FROM sg_b"
         )
+    # a comment in the prologue is lexed like whitespace, not unparseable
+    df = env.execute_sql(
+        "WITH /* odd */ c3 AS (SELECT k FROM sg_a) "
+        "SELECT k FROM c3 INTERSECT SELECT k FROM sg_b"
+    )
+    assert df.isStreaming
     # an unrelated right-side typo keeps its own missing-table error,
     # not a misattributed CTE message
     with pytest.raises(Exception, match="sg_nope|TABLE_OR_VIEW"):
@@ -4600,6 +4622,10 @@ def test_split_on_where_quoted_paren_not_counted():
     assert _split_on_where('g = "a(b" WHERE id = 1') == ('g = "a(b"', "id = 1")
     assert _split_on_where("g = `weird(col` WHERE id = 1") == (
         "g = `weird(col`", "id = 1"
+    )
+    # a WHERE inside a comment is not the clause
+    assert _split_on_where("a = 1 -- no WHERE here\n WHERE k = 1") == (
+        "a = 1 -- no WHERE here\n", "k = 1"
     )
 
 
