@@ -6,10 +6,15 @@ optional:397, oneOrMore:415, times) compiled to an NFA (NFA.java:85) run
 by CepOperator.java:82; SQL MATCH_RECOGNIZE lowers onto the same operator
 (CommonExecMatch.java:170).
 
-Spark-first design: Spark has no pattern operator. Batch: one shuffle+sort
-per key (`applyInPandas`), then a linear NFA scan per partition-group in
-Python — Arrow-batched, no per-row Python round trips. The NFA is the
-textbook nondeterministic simulation — one matcher (`_matches_at`)
+Spark-first design: Spark has no pattern operator. A strict chain of
+single-row steps needs none: `match_recognize` lowers it to one Catalyst
+window plan (`_lowered`: each step's predicate evaluated per row, then
+`lead(pred_i, i)` over the key's ordered rows — the `lead()` rewrite the
+chain's SQL oracle uses). Every other pattern runs the NFA. Batch NFA: one
+shuffle+sort per key (`applyInPandas`), then a linear scan per
+partition-group in Python — Arrow-batched, no per-row Python round
+trips. The NFA is the textbook nondeterministic simulation — one
+matcher (`_matches_at`)
 and one skip scan (`_scan`), shared with streaming/cep_stream.py — with:
 - contiguity: STRICT (Flink `next`), RELAXED (`followedBy`,
   SKIP_TILL_NEXT: binds the first matching row, never a later one) or
@@ -31,12 +36,13 @@ pre-split by time range).
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
-from dataclasses import dataclass, field
+from collections.abc import Callable, Iterator, Mapping
+from dataclasses import dataclass, field, replace
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 # One-argument predicates `fn(row)` are vectorized over the frame.
@@ -44,14 +50,17 @@ from pyspark.sql.types import StructType
 # (Pattern.where(IterativeCondition), ctx.getEventsForPattern): `groups`
 # maps each step name to the DataFrame of rows bound so far (for the
 # step being evaluated: its previous rows), evaluated lazily per
-# candidate row.
+# candidate row.  A predicate may also be SQL text (a DEFINE condition,
+# `a.event_type = 'click'`): it compiles through the DEFINE compiler
+# (`sql_flink._compile_predicate`) for the NFA, and a strict chain of
+# them lowers to Catalyst.
 RowPredicate = Callable[..., bool]
 
 
 @dataclass
 class _Step:
     name: str
-    predicate: RowPredicate
+    predicate: RowPredicate | str
     min_times: int = 1
     max_times: int = 1  # -1 = unbounded (oneOrMore / greedy tail)
     strict: bool = False  # True = Flink `next`, False = `followedBy`
@@ -71,17 +80,17 @@ class Pattern:
     skip_step: str | None = None  # target step for SKIP_TO_FIRST/LAST
 
     @staticmethod
-    def begin(name: str, where: RowPredicate) -> "Pattern":
+    def begin(name: str, where: RowPredicate | str) -> "Pattern":
         p = Pattern()
         p.steps.append(_Step(name, where))
         return p
 
-    def next(self, name: str, where: RowPredicate) -> "Pattern":
+    def next(self, name: str, where: RowPredicate | str) -> "Pattern":
         """Strict contiguity (Pattern.next:338)."""
         self.steps.append(_Step(name, where, strict=True))
         return self
 
-    def followed_by(self, name: str, where: RowPredicate) -> "Pattern":
+    def followed_by(self, name: str, where: RowPredicate | str) -> "Pattern":
         """Relaxed contiguity — non-matching rows may intervene
         (Pattern.followedBy:356). SKIP_TILL_NEXT: the step binds the
         first matching row, never a later one, under every skip
@@ -89,7 +98,7 @@ class Pattern:
         self.steps.append(_Step(name, where, strict=False))
         return self
 
-    def followed_by_any(self, name: str, where: RowPredicate) -> "Pattern":
+    def followed_by_any(self, name: str, where: RowPredicate | str) -> "Pattern":
         """Non-deterministic relaxed contiguity (Pattern.followedByAny:387):
         the step branches on EVERY later matching row, not just the first
         — one match per alternative. Alternatives are enumerated under
@@ -141,14 +150,14 @@ class Pattern:
         self.steps[-1].strict = True
         return self
 
-    def not_next(self, name: str, where: RowPredicate) -> "Pattern":
+    def not_next(self, name: str, where: RowPredicate | str) -> "Pattern":
         """Negative strict contiguity (Pattern.notNext:338): the row
         immediately after the previous step must NOT match. Consumes no
         rows."""
         self.steps.append(_Step(name, where, strict=True, negative=True))
         return self
 
-    def not_followed_by(self, name: str, where: RowPredicate) -> "Pattern":
+    def not_followed_by(self, name: str, where: RowPredicate | str) -> "Pattern":
         """Negative relaxed contiguity (Pattern.notFollowedBy:369): no
         matching row may appear between the previous step and the next
         one. As the FINAL step it requires `within(...)` (same
@@ -200,6 +209,25 @@ def _is_ctx(fn) -> bool:
     Context) and cannot be vectorized."""
     code = getattr(fn, "__code__", None)
     return code is not None and code.co_argcount >= 2
+
+
+def _compiled(pat: Pattern) -> Pattern:
+    """`pat` with every SQL predicate compiled through the DEFINE
+    compiler against the full list of step names (so a condition may
+    name any step); callables pass through. Runs on the driver, before
+    the pattern ships to the Python workers."""
+    if not any(isinstance(s.predicate, str) for s in pat.steps):
+        return pat
+    from flink_1_20_spark.sql_flink import _compile_predicate
+
+    names = [s.name for s in pat.steps]
+    steps = [
+        replace(s, predicate=_compile_predicate(s.predicate, s.name, names))
+        if isinstance(s.predicate, str)
+        else s
+        for s in pat.steps
+    ]
+    return replace(pat, steps=steps)
 
 
 def _precompute(pat: Pattern, pdf: pd.DataFrame) -> tuple:
@@ -492,12 +520,110 @@ def _render(
     return out
 
 
+Measures = Callable[[dict[str, pd.DataFrame]], dict] | Mapping[str, str]
+
+
+def _parsed_measures(measures: Mapping[str, str]) -> dict[str, tuple[str, str, str]]:
+    """{out name: (agg, step, col)} — the MEASURES grammar of
+    `sql_flink._parse_measure` (`FIRST(a.ts)`, `LAST(c.value)`, `c.ts`)."""
+    from flink_1_20_spark.sql_flink import _parse_measure
+
+    return {name: _parse_measure(expr) for name, expr in measures.items()}
+
+
+def _measure_fn(parsed: dict[str, tuple[str, str, str]]):
+    """Mapping measures as the NFA's `measures(groups) -> dict`."""
+    from flink_1_20_spark.sql_flink import _measure_value
+
+    def fn(groups: dict[str, pd.DataFrame]) -> dict:
+        return {name: _measure_value(groups, *spec) for name, spec in parsed.items()}
+
+    return fn
+
+
+def _lowerable(
+    pat: Pattern,
+    parsed: dict[str, tuple[str, str, str]] | None,
+    tiebreak: list[str],
+    all_rows: bool,
+) -> bool:
+    """True when the pattern is a strict chain of single-row steps that
+    one window plan answers: `begin().next()...next()` with no
+    quantifier, optional, until, within or negation; SQL predicates that
+    read only their own row (no cross-step reference — the DEFINE
+    compiler gives those the two-argument context form); AFTER MATCH
+    SKIP TO NEXT ROW (the only strategy under which every anchor whose
+    k rows match emits); ONE ROW PER MATCH; FIRST/LAST measures of a
+    step's column; and a tiebreak column, so the row order — and with
+    it each anchor's k rows — is the NFA's."""
+    if parsed is None or all_rows or not tiebreak or pat.skip != "TO_NEXT_ROW":
+        return False
+    if pat.within_seconds is not None:
+        return False
+    names = {s.name for s in pat.steps}
+    for i, s in enumerate(pat.steps):
+        if not isinstance(s.predicate, str) or (i and not s.strict):
+            return False
+        if s.negative or s.any_match or s.until is not None:
+            return False
+        if (s.min_times, s.max_times) != (1, 1):
+            return False
+    if any(
+        agg not in ("FIRST", "LAST") or var not in names or col == "*"
+        for agg, var, col in parsed.values()
+    ):
+        return False
+    compiled = _compiled(pat)
+    return not any(_is_ctx(s.predicate) for s in compiled.steps)
+
+
+def _lowered(
+    df: DataFrame,
+    keys: list[str],
+    ts: str,
+    tiebreak: list[str],
+    pat: Pattern,
+    parsed: dict[str, tuple[str, str, str]],
+    out_fields,
+) -> DataFrame:
+    """The strict chain as one Catalyst window plan: step i's predicate
+    is evaluated on every row, and an anchor matches when
+    `lead(pred_i, i)` holds for every i over PARTITION BY keys ORDER BY
+    ts, tiebreak (a NULL predicate or a lead past the key's last row is
+    a non-match). A measure of step i's column is `lead(col, i)`.
+    NULLs order last, as the NFA's pandas sort puts them."""
+    from flink_1_20_spark.sqlenv.text import _sub_unquoted
+
+    w = Window.partitionBy(*keys).orderBy(
+        *(F.col(c).asc_nulls_last() for c in (ts, *tiebreak))
+    )
+    at = {s.name: i for i, s in enumerate(pat.steps)}
+
+    def lead(c, i: int):
+        return c if i == 0 else F.lead(c, i).over(w)
+
+    conds = [
+        lead(F.expr(_sub_unquoted(s.predicate, rf"\b{s.name}\s*\.\s*", "")), i)
+        for i, s in enumerate(pat.steps)
+    ]
+    exprs = {name: lead(F.col(col), at[var]) for name, (_, var, col) in parsed.items()}
+    matched = df.select(
+        *keys,
+        *(e.alias(f"__m{j}") for j, e in enumerate(exprs.values())),
+        *(c.alias(f"__p{i}") for i, c in enumerate(conds)),
+    ).filter(" AND ".join(f"__p{i}" for i in range(len(conds))))
+    slot = {name: f"__m{j}" for j, name in enumerate(exprs)}
+    return matched.select(
+        *(F.col(slot.get(f.name, f.name)).cast(f.dataType).alias(f.name) for f in out_fields)
+    )
+
+
 def match_recognize(
     df: DataFrame,
     keys: list[str],
     ts: str,
     pattern: Pattern,
-    measures: Callable[[dict[str, pd.DataFrame]], dict],
+    measures: Measures,
     output_schema: StructType | str,
     order_tiebreak: list[str] | None = None,
     all_rows: bool = False,
@@ -516,11 +642,24 @@ def match_recognize(
     `measures(groups) -> dict` receives {step_name: DataFrame of its
     rows} (FINAL semantics in one-row mode, running prefix in all-rows
     mode); in one-row mode `keys` columns are appended automatically.
+    `measures` may instead map each output name to a MEASURES
+    expression (`FIRST(a.ts)`, `LAST(c.value)`). A strict chain with
+    SQL predicates and such measures (see `_lowerable`) runs as one
+    Catalyst window plan; every other pattern runs the NFA.
     """
     tiebreak = order_tiebreak or []
+    fields = _schema_fields(output_schema)
+    parsed = None if callable(measures) else _parsed_measures(measures)
+    if _lowerable(pattern, parsed, tiebreak, all_rows) and all(
+        f.name in parsed or f.name in keys for f in fields
+    ):
+        return _lowered(df, keys, ts, tiebreak, pattern, parsed, fields)
+    pattern = _compiled(pattern)
+    if parsed is not None:
+        measures = _measure_fn(parsed)
     # Resolve output column names on the driver — schema parsing needs an
     # active SparkSession, which workers don't have.
-    out_cols = [f.name for f in _schema_fields(output_schema)]
+    out_cols = [f.name for f in fields]
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values([ts, *tiebreak], kind="mergesort").reset_index(drop=True)

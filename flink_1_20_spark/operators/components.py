@@ -17,12 +17,49 @@ both shuffling on the node id — the standard large-scale CC
 (Kiveris et al., "Connected Components in MapReduce and Beyond"). The
 edge list and each round's labels are checkpointed so lineage stays
 O(1) and the (expensive) pair-generation upstream runs exactly once.
+
+Small graphs skip the rounds: when the checkpointed edge list holds at
+most `CAP` rows, one job collects it and a min-root union-find labels
+the nodes in the driver — the same min-id labels, one job instead of
+one per round.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+# Largest directed edge list (both directions of every pair) labeled in
+# the driver.  At the cap (4-core host, 66,667 nodes in 3-edge chains):
+# collect, union-find and the local result frame took 0.67-0.93 s warm
+# (1.8 s on a cold JVM) and raised driver RSS by 24-39 MB; end to end,
+# connected_components took 3.2 s on this path and 5.0 s on the round
+# loop.  Twice the cap doubles both (1.3-1.7 s, 54-66 MB).
+CAP = 100_000
+
+
+def _driver_components(edges: list) -> list[tuple]:
+    """(node, component) by min-root union-find over `edges` (u, v)
+    rows: every union hangs the larger root under the smaller, so each
+    root is its component's min id."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in edges:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return [(n, find(n)) for n in parent]
 
 
 def connected_components(
@@ -45,6 +82,11 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
+    small = edges.limit(CAP + 1).collect()
+    if len(small) <= CAP:
+        t = edges.schema["u"].dataType
+        schema = StructType([StructField("node", t), StructField("component", t)])
+        return edges.sparkSession.createDataFrame(_driver_components(small), schema)
     labels = edges.select(F.col("u").alias("node")).distinct().withColumn(
         "component", F.col("node")
     )

@@ -48,6 +48,25 @@ def _conf_bytes(value: str, default: int = 128 * 1024**2) -> int:
 _SPLITTABLE_EXT = (".parquet", ".orc")
 
 
+# Inputs whose files total less than this are not repartitioned: the
+# extra exchange and job cost more wall time than the serialized scan
+# saves.  Bisected on dedup_minhash_lsh over one-file documents inputs
+# (4-core host, warm, median of 7, guard off vs on, table in CHANGES.md):
+# the guard lost at 63 and 120 KB, tied at 147 KB, and won from 177 KB
+# (0.98 -> 0.88 s) up to 584 KB (1.32 -> 1.00 s).
+SMALL_SCAN_BYTES = 160 * 1024
+
+
+def _local_size(f: str) -> int | None:
+    """Bytes of a local `file:` URI (a metadata-only stat), else None."""
+    if not f.startswith("file:"):
+        return None
+    try:
+        return os.path.getsize(unquote(urlparse(f).path))
+    except OSError:
+        return None
+
+
 def _estimated_splits(files: list[str], max_partition_bytes: int) -> int:
     """Driver-side estimate of the scan's split count from file sizes.
 
@@ -59,15 +78,23 @@ def _estimated_splits(files: list[str], max_partition_bytes: int) -> int:
     than risking a serialized scan)."""
     total = 0
     for f in files:
-        if f.startswith("file:") and f.lower().endswith(_SPLITTABLE_EXT):
-            try:
-                size = os.path.getsize(unquote(urlparse(f).path))
-            except OSError:
-                size = 0
-            total += max(1, ceil(size / max_partition_bytes))
+        if f.lower().endswith(_SPLITTABLE_EXT):
+            total += max(1, ceil((_local_size(f) or 0) / max_partition_bytes))
         else:
             total += 1
     return total
+
+
+def _is_small(files: list[str]) -> bool:
+    """True when every file is local and they total < SMALL_SCAN_BYTES;
+    a file of unknown size counts as large."""
+    total = 0
+    for f in files:
+        size = _local_size(f)
+        if size is None:
+            return False
+        total += size
+    return total < SMALL_SCAN_BYTES
 
 
 def ensure_scan_parallelism(docs: DataFrame) -> DataFrame:
@@ -103,6 +130,10 @@ def ensure_scan_parallelism(docs: DataFrame) -> DataFrame:
     leaf file scan) report no files and skip the guard: their
     partitioning already came from parallelize/shuffle.
 
+    Tiny inputs skip it too: below SMALL_SCAN_BYTES of files the
+    repartition's extra exchange and job cost more than the one-core
+    scan.
+
     Derived inputs fire too, DELIBERATELY (r10, adjudicated across two
     review passes): inputFiles() traverses to leaf scans, so a
     post-shuffle frame (collapse_exact's representatives, a windowed
@@ -120,7 +151,7 @@ def ensure_scan_parallelism(docs: DataFrame) -> DataFrame:
     cores = spark.sparkContext.defaultParallelism
     files = docs.inputFiles()
     n_files = len(files)
-    if n_files == 0 or n_files >= cores:
+    if n_files == 0 or n_files >= cores or _is_small(files):
         return docs
     max_pb = _conf_bytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")

@@ -128,36 +128,32 @@ def cep_funnel_strict(spark: SparkSession, sf_dir: str) -> DataFrame:
     the NFA of Pattern.begin().next().next(). The SQL oracle is the
     lead()-rewrite valid exactly for strict patterns.
 
-    Boundary trim (guide §4): applyInPandas is opaque to column
-    pruning, so only the columns the NFA touches are selected before
-    the boundary — `props` stays out of the scan's ReadSchema and the
-    Arrow transfer."""
-    e = T(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
+    SQL predicates and MEASURES expressions make this chain lowerable:
+    match_recognize runs it as that same lead() window plan in Catalyst
+    (one shuffle on user_id, no Python worker); the NFA stays for the
+    patterns a window cannot answer."""
+    e = T(spark, sf_dir, "events")
     pat = (
-        Pattern.begin("a", lambda r: r["event_type"] == "click")
-        .next("b", lambda r: r["event_type"] == "view")
-        .next("c", lambda r: r["event_type"] == "purchase")
+        Pattern.begin("a", "a.event_type = 'click'")
+        .next("b", "b.event_type = 'view'")
+        .next("c", "c.event_type = 'purchase'")
         .after_match_skip("TO_NEXT_ROW")
     )
-
-    def measures(g: dict[str, pd.DataFrame]) -> dict:
-        return {
-            "start_ts": g["a"]["ts"].iloc[0],
-            "end_ts": g["c"]["ts"].iloc[-1],
-            "purchase_value": round(float(g["c"]["value"].iloc[-1]), 4),
-        }
-
     return match_recognize(
         e,
         keys=["user_id"],
         ts="ts",
         pattern=pat,
-        measures=measures,
+        measures={
+            "start_ts": "FIRST(a.ts)",
+            "end_ts": "LAST(c.ts)",
+            "purchase_value": "LAST(c.value)",
+        },
         output_schema="start_ts timestamp, end_ts timestamp, purchase_value double, user_id bigint",
         order_tiebreak=["event_id"],
-    ).select("user_id", "start_ts", "end_ts", "purchase_value")
+    ).select(
+        "user_id", "start_ts", "end_ts", F.round("purchase_value", 4).alias("purchase_value")
+    )
 
 
 _ERROR_BURST_ORACLE = """

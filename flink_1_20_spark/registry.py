@@ -77,7 +77,7 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "tpch_q21_waiting_suppliers",
     "dedup_cluster_best_representative_collapsed",
     # ---- rewritten queries enter the window in the round they change
-    # (10): the q16 EXISTS shape, q24b's scalar-subquery HAVING gate,
+    # (15): the q16 EXISTS shape, q24b's scalar-subquery HAVING gate,
     # the Arrow cogroup, q44's floor form, the three CEP queries
     # whose matcher became the one branch enumerator (followedBy binds
     # the first matching row under every skip strategy), and the three
@@ -93,17 +93,30 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "fn_string_regex",
     "fn_math_misc",
     "fn_json_path",
-    # ---- the remaining 29 re-proof slots take the next-oldest driver
+    # the dedup-path queries whose plans changed with the driver
+    # union-find for small graphs and the tiny-scan bound of
+    # ensure_scan_parallelism
+    "dedup_connected_clusters",
+    "dedup_cluster_best_representative",
+    "pipeline_corpus_curation",
+    "dedup_minhash_lsh",
+    "text_lm_score",
+    # ---- the remaining 24 re-proof slots take the next-oldest driver
     # confirmations (computed from CORRECTNESS_r01..r12: the r6 era —
     # the wtvf_*/setop_*/fn_* band the r12 verdict names; the five
     # r5-era rows, the two oldest r6 rows, and fn_map, subquery_in and
     # simsearch_lsh_buckets (3 confirmations each, r06/r13/r14; their
     # families keep fn_json, subquery_scalar and simsearch_hard_negatives
-    # here) rotated out to make room for the block above).  Rotated-out
-    # rows keep their local-oracle coverage in every verify_local sweep.
+    # here) rotated out to make room for the block above; then
+    # tpch_q2_min_cost_supplier (4 confirmations), correlate_posexplode,
+    # simsearch_recall_ivf, subquery_correlated_agg and
+    # tpcds_q62_latency_grid_three_dims (3 each; their families keep
+    # correlate_unnest_words, simsearch_hard_negatives, subquery_scalar
+    # and the other TPC-DS shapes here) for the dedup block).
+    # Rotated-out rows keep their local-oracle coverage in every
+    # verify_local sweep.
     "cep_error_burst",
     "changelog_normalize",
-    "correlate_posexplode",
     "correlate_unnest_words",
     "count_window_slide",
     "dedup_simhash_collapsed",
@@ -111,8 +124,6 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "fn_temporal_extract",
     "pipeline_temperature_mix",
     "simsearch_hard_negatives",
-    "simsearch_recall_ivf",
-    "subquery_correlated_agg",
     "subquery_scalar",
     "text_fingerprint",
     "text_repetition",
@@ -121,11 +132,9 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "tpcds_q23b_best_customer_frequent_items",
     "tpcds_q29_sale_return_repurchase",
     "tpcds_q39b_cov_pair_gated",
-    "tpcds_q62_latency_grid_three_dims",
     "tpcds_q6_state_over_avg_price",
     "tpch_q13_customer_distribution",
     "tpch_q18_large_volume",
-    "tpch_q2_min_cost_supplier",
     "tpch_q4_order_priority",
     "tpch_q7_volume_shipping",
     "udx_pandas_scalar",

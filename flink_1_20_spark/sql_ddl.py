@@ -42,6 +42,7 @@ from flink_1_20_spark.sqlenv.text import (  # noqa: F401
     _db_view_name,
     _from_comma_tables,
     _leading_cte_names,
+    _match_lexed,
     _option_pairs,
     _scan_streaming_setops,
     _split_on_where,
@@ -172,7 +173,7 @@ class TableEnvironment(
         # -- catalog statements (SqlCreateCatalogConverter.java,
         # SqlAlterCatalogOptionsConverter.java,
         # SqlDescribeCatalogConverter.java surface) ----------------------
-        m = re.match(
+        m = _match_lexed(
             r"CREATE\s+CATALOG\s+(IF\s+NOT\s+EXISTS\s+)?(\S+)"
             r"(?:\s+COMMENT\s+'([^']*)')?"
             r"(?:\s+WITH\s*\((.*)\))?\s*$",
@@ -198,7 +199,7 @@ class TableEnvironment(
         m = re.match(r"USE\s+CATALOG\s+(\S+)$", s, re.I)
         if m:
             return self._use_catalog(m.group(1).strip("`"))
-        m = re.match(
+        m = _match_lexed(
             r"SHOW\s+CATALOGS(?:\s+(NOT\s+)?LIKE\s+'([^']*)')?$", s, re.I
         )
         if m:
@@ -237,7 +238,7 @@ class TableEnvironment(
         if m and m.group(1).strip("`") in self._catalogs:
             return self._alter_catalog(m.group(1).strip("`"), m.group(2).strip())
         # -- database statements (CatalogManager.java:80 surface) --------
-        m = re.match(
+        m = _match_lexed(
             r"CREATE\s+DATABASE\s+(?:IF\s+NOT\s+EXISTS\s+)?(\S+)"
             r"(?:\s+COMMENT\s+'([^']*)')?"
             r"(?:\s+WITH\s*\((.*)\))?\s*$",
@@ -306,7 +307,7 @@ class TableEnvironment(
         m = re.match(r"USE\s+(\S+)$", s, re.I)
         if m and m.group(1).strip("`") in self._dbs:
             return self._use_database(m.group(1).strip("`"))
-        m = re.match(
+        m = _match_lexed(
             r"SHOW\s+DATABASES(?:\s+(NOT\s+)?LIKE\s+'([^']*)')?$", s, re.I
         )
         if m:
@@ -322,7 +323,7 @@ class TableEnvironment(
             )
         # -- session clauses (SqlClient SET/RESET/ADD JAR surface,
         # SqlNodeToOperationConversion SqlSet/SqlReset/SqlAddJar paths) --
-        m = re.match(r"SET\s+'([^']+)'\s*=\s*'([^']*)'$", s, re.I)
+        m = _match_lexed(r"SET\s+'([^']+)'\s*=\s*'([^']*)'$", s, re.I)
         if m:
             return self._set_option(m.group(1), m.group(2))
         if re.match(r"SET$", u):
@@ -330,7 +331,7 @@ class TableEnvironment(
                 sorted(self.session_options.items()) or [],
                 "key string, value string",
             )
-        m = re.match(r"RESET\s+'([^']+)'$", s, re.I)
+        m = _match_lexed(r"RESET\s+'([^']+)'$", s, re.I)
         if m:
             self._reset_option(m.group(1))
             return None
@@ -338,7 +339,7 @@ class TableEnvironment(
             for key in list(self.session_options):
                 self._reset_option(key)
             return None
-        m = re.match(r"ADD\s+JAR\s+'([^']+)'$", s, re.I)
+        m = _match_lexed(r"ADD\s+JAR\s+'([^']+)'$", s, re.I)
         if m:
             # Spark has a native ADD JAR; route through it so the jar
             # actually lands on the session classpath. Record only after
@@ -348,7 +349,7 @@ class TableEnvironment(
             if m.group(1) not in self._jars:
                 self._jars.append(m.group(1))
             return None
-        m = re.match(r"REMOVE\s+JAR\s+'([^']+)'$", s, re.I)
+        m = _match_lexed(r"REMOVE\s+JAR\s+'([^']+)'$", s, re.I)
         if m:
             # Flink unregisters the jar from the session; Spark cannot
             # unload a loaded jar, so this only drops it from SHOW JARS
@@ -379,7 +380,7 @@ class TableEnvironment(
         # job id / name / status / start time; a missing id is an error,
         # not an empty result). Visibility contract matches SHOW JOBS:
         # active session queries plus terminated env-started ones.
-        m = re.match(r"(?:DESCRIBE|DESC)\s+JOB\s+'([^']+)'$", s, re.I)
+        m = _match_lexed(r"(?:DESCRIBE|DESC)\s+JOB\s+'([^']+)'$", s, re.I)
         if m:
             jid = m.group(1)
             target = next(
@@ -417,7 +418,7 @@ class TableEnvironment(
                 "job_id string, job_name string, status string, "
                 "start_time timestamp",
             )
-        m = re.match(
+        m = _match_lexed(
             r"STOP\s+JOB\s+'([^']+)'(\s+WITH\s+SAVEPOINT)?(\s+WITH\s+DRAIN)?$",
             s,
             re.I,
@@ -763,7 +764,7 @@ class TableEnvironment(
         # flink-table-common/.../functions/); here the target is a
         # Python path `module.attr` resolving to a pyspark UDF/UDTF, a
         # Flink-style class with .eval, or a plain callable.
-        m = re.match(
+        m = _match_lexed(
             r"CREATE\s+(?:TEMPORARY\s+)?(?:SYSTEM\s+)?FUNCTION\s+"
             r"(?:IF\s+NOT\s+EXISTS\s+)?(\S+)\s+AS\s+'([^']+)'"
             r"(?:\s+LANGUAGE\s+(\w+))?$",
@@ -786,7 +787,7 @@ class TableEnvironment(
         # SHOW TABLES/VIEWS/FUNCTIONS [(FROM|IN) [catalog.]db]
         # [[NOT] LIKE '<sql pattern>'] (SqlShowTables.java:52 — Flink
         # 1.20 added the scoping/filter clauses to all three listings)
-        m = re.match(
+        m = _match_lexed(
             r"SHOW\s+TABLES"
             r"(?:\s+(?:FROM|IN)\s+(\S+))?"
             r"(?:\s+(NOT\s+)?LIKE\s+'([^']*)')?$",
@@ -812,7 +813,7 @@ class TableEnvironment(
             return self.spark.createDataFrame(
                 [(n,) for n in names], "table_name string"
             )
-        m = re.match(
+        m = _match_lexed(
             r"SHOW\s+VIEWS(?:\s+(NOT\s+)?LIKE\s+'([^']*)')?$", s, re.I
         )
         if m:
@@ -827,7 +828,7 @@ class TableEnvironment(
             return self.spark.createDataFrame(
                 [(n,) for n in names], "view_name string"
             )
-        m = re.match(
+        m = _match_lexed(
             r"SHOW\s+(?:USER\s+)?FUNCTIONS(?:\s+(NOT\s+)?LIKE\s+'([^']*)')?$",
             s,
             re.I,
@@ -868,7 +869,7 @@ class TableEnvironment(
                 self._view_sql[vname] = body
             return None
         # ALTER FUNCTION f AS 'new.target' (SqlAlterFunction.java)
-        m = re.match(
+        m = _match_lexed(
             r"ALTER\s+(?:TEMPORARY\s+)?(?:SYSTEM\s+)?FUNCTION\s+"
             r"(?:IF\s+EXISTS\s+)?(\S+)\s+AS\s+'([^']+)'"
             r"(?:\s+LANGUAGE\s+\w+)?$",
@@ -889,7 +890,7 @@ class TableEnvironment(
             return self._describe(m.group(1).strip("`"))
         # SHOW COLUMNS (FROM|IN) t [[NOT] LIKE '<sql pattern>'] — the
         # DESCRIBE shape filtered by column name (SqlShowColumns)
-        m = re.match(
+        m = _match_lexed(
             r"SHOW\s+COLUMNS\s+(?:FROM|IN)\s+(\S+?)"
             r"(?:\s+(NOT\s+)?LIKE\s+'([^']*)')?$",
             s,
@@ -1008,6 +1009,7 @@ class TableEnvironment(
                 s = s[:a] + s[b:]
         from flink_1_20_spark.sql_flink import rewrite_streaming_session_tvf
 
+        s = self._rank1_ties_broken(s)
         dedup = self._try_streaming_dedup(s)
         if dedup is not None:
             return dedup
@@ -1251,7 +1253,7 @@ class TableEnvironment(
     _CREATE_MT = re.compile(
         r"CREATE\s+MATERIALIZED\s+TABLE\s+(?:(IF\s+NOT\s+EXISTS)\s+)?(\S+)\s*"
         r"(?:\(\s*PRIMARY\s+KEY\s*\(([^)]*)\)\s*(?:NOT\s+ENFORCED)?\s*\)\s*)?"
-        r"(?:COMMENT\s+'([^']*)'\s*)?"
+        r"(?:COMMENT\s+'((?:[^']|'')*)'\s*)?"
         r"(?:PARTITIONED\s+BY\s*\(([^)]*)\)\s*)?"
         r"(?:WITH\s*\((.*?)\)\s*)?"
         r"FRESHNESS\s*=\s*INTERVAL\s+'(\d+)'\s+(SECOND|MINUTE|HOUR|DAY)S?\s*"

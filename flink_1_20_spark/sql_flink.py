@@ -411,6 +411,7 @@ _SQL_TO_PY = [
     (re.compile(r"\bAND\b", re.I), " and "),
     (re.compile(r"\bOR\b", re.I), " or "),
     (re.compile(r"\bNOT\s+IN\b", re.I), " not in "),
+    (re.compile(r"\bIN\b", re.I), " in "),
     (re.compile(r"\bNOT\b(?!\s+in)", re.I), " not "),
     (re.compile(r"\bTRUE\b", re.I), "True"),
     (re.compile(r"\bFALSE\b", re.I), "False"),
@@ -513,7 +514,8 @@ def _compile_predicate(expr: str, var: str, all_vars: list[str]) -> Callable:
     # `SOME_UDF(...)`) are a parse error, not Python to run. Scanned
     # BEFORE the literal restore so a string literal containing
     # "word(" can never be mistaken for a call.
-    _allowed_calls = {"isna", "_ofs", "len", "_isnull"}
+    # (`in (...)` / `not (...)` / `and (...)` are operators, not calls)
+    _allowed_calls = {"isna", "_ofs", "len", "_isnull", "in", "not", "and", "or"}
     for mm in re.finditer(r"([A-Za-z_]\w*)\s*\(", py):
         if mm.group(1) not in _allowed_calls:
             raise ValueError(
@@ -670,11 +672,14 @@ def _build_pattern(
         if not m:
             raise ValueError(f"cannot parse pattern token: {tok!r}")
         var, quant, n, mx, reluct = m.group(1), m.group(2), m.group(3), m.group(4), m.group(5)
-        cond = defines.get(var)
+        # the DEFINE text itself is the step's predicate (Pattern
+        # compiles it, and a strict chain lowers it to Catalyst); only
+        # a SUBSET-reading condition needs the wrapped callable
+        cond = defines.get(var) or "TRUE"
         pred = (
             _wrap_pred_subsets(_compile_predicate(cond, var, ref_names), subsets)
-            if cond
-            else (lambda r: True)
+            if subsets
+            else cond
         )
         if pat is None:
             pat = Pattern.begin(var, pred)
@@ -928,12 +933,17 @@ def run_match_recognize(spark: SparkSession, sql: str) -> DataFrame:
                 *(f"{k} {key_types[k]}" for k in keys),
             ]
         )
+        # without SUBSETs the parsed MEASURES pass through as text, so
+        # a strict chain lowers to a window plan (cep._lowerable)
         out = match_recognize(
             df,
             keys=keys,
             ts=ts_col,
             pattern=pat,
-            measures=measure_fn,
+            measures=measure_fn if subsets else {
+                name: "COUNT(*)" if var == "*" else f"{agg}({var}.{col})"
+                for name, agg, var, col in measures
+            },
             output_schema=schema,
             order_tiebreak=tiebreak,
         ).select(*keys, *(name for name, *_ in measures))

@@ -19,7 +19,9 @@ from flink_1_20_spark.sqlenv.text import (
     _computed_col_expr,
     _ctl_view_name,
     _db_view_name,
+    _match_lexed,
     _option_pairs,
+    _quoted_items,
     _split_top_all,
     _sql_mask,
     flink_type_to_spark,
@@ -420,7 +422,7 @@ class CatalogDdlMixin:
         m = re.match(r"SET\s*\((.*)\)$", action, re.S | re.I)
         if m:
             for kv in _split_top_all(m.group(1), ","):
-                km = re.match(r"\s*'([^']*)'\s*=\s*'([^']*)'\s*$", kv)
+                km = _match_lexed(r"\s*'([^']*)'\s*=\s*'([^']*)'\s*$", kv)
                 if not km:
                     raise ValueError(f"cannot parse option: {kv!r}")
                 meta.options[km.group(1)] = km.group(2)
@@ -646,12 +648,12 @@ class CatalogDdlMixin:
             return None
         m = re.match(r"RESET\s*\((.*)\)$", action, re.S | re.I)
         if m:
-            for k in re.findall(r"'([^']+)'", m.group(1)):
+            for k in _quoted_items(m.group(1)):
                 if k == "type":
                     raise ValueError("ALTER CATALOG cannot reset 'type'")
                 entry["options"].pop(k, None)
             return None
-        m = re.match(r"COMMENT\s+'([^']*)'$", action, re.I)
+        m = _match_lexed(r"COMMENT\s+'([^']*)'$", action, re.I)
         if m:
             entry["comment"] = m.group(1)
             return None

@@ -601,6 +601,7 @@ class DmlMixin:
 
         from flink_1_20_spark.sql_flink import rewrite_streaming_session_tvf
 
+        query = self._rank1_ties_broken(query)
         dedup = self._try_streaming_dedup(query)
         over = self._try_streaming_over(query) if dedup is None else None
         query = rewrite_streaming_session_tvf(query, self._is_streaming_table)

@@ -608,6 +608,53 @@ class StreamingSqlMixin:
                 sel.append(F.col(facade[fn_]).alias(alias))
         return out.select(*sel)
 
+    @staticmethod
+    def _rank_tiebreak(df: DataFrame, keys: list[str], ts: str) -> list[str]:
+        """The tie rule of a rank-1 dedup: after the order column, the
+        remaining columns in declared order (those Spark can order —
+        maps and variants cannot be compared)."""
+        from pyspark.sql.types import ArrayType, MapType, StructType, VariantType
+
+        def orderable(t) -> bool:
+            if isinstance(t, (MapType, VariantType)):
+                return False
+            if isinstance(t, ArrayType):
+                return orderable(t.elementType)
+            if isinstance(t, StructType):
+                return all(orderable(f.dataType) for f in t.fields)
+            return True
+
+        return [
+            f.name
+            for f in df.schema.fields
+            if f.name not in keys and f.name != ts and orderable(f.dataType)
+        ]
+
+    def _rank1_ties_broken(self, stmt: str) -> str:
+        """A batch `ROW_NUMBER() ... ORDER BY c [dir]` dedup (`rn = 1` /
+        `rn <= 1`) with the streaming form's tie rule appended to its
+        ORDER BY, so batch and streaming keep the same row when order
+        values tie. Any other statement comes back unchanged."""
+        m = self._DEDUP_RANK.match(stmt)
+        if not m or int(m.group("topn")) != 1 or self._is_streaming_table(m.group("tbl")):
+            return stmt
+        keys = [k.strip().strip("`") for k in m.group("keys").split(",")]
+        ts = m.group("ts")
+        try:
+            df = self.spark.table(m.group("tbl"))
+        except Exception:
+            return stmt  # unknown table: Catalyst reports it
+        if ts not in df.columns:
+            return stmt
+        direction = (m.group("dir") or "ASC").upper()
+        extra = "".join(
+            f", `{c}` {direction}" for c in self._rank_tiebreak(df, keys, ts)
+        )
+        at = m.end("dir") if m.group("dir") else m.end("ts")
+        if stmt[at : at + 1] == "`":
+            at += 1
+        return stmt[:at] + extra + stmt[at:]
+
     def _try_streaming_dedup(self, stmt: str) -> DataFrame | None:
         """Flink's streaming rank shapes — dedup AND Top-N — recognized
         on `ROW_NUMBER() OVER (PARTITION BY k ORDER BY c [ASC|DESC])
@@ -618,13 +665,14 @@ class StreamingSqlMixin:
           (StreamExecDeduplicate.java:89): stateful min_by/max_by per
           key — event-time keep-first/keep-last including out-of-order
           rows, an updating result like Flink's dedup changelog. Rows
-          with EQUAL timestamps: min_by/max_by picks an arbitrary one,
-          where Flink's RowTimeDeduplicateFunction keeps the first/last
-          ARRIVED — arrival order isn't observable to a Spark stateful
-          aggregate, so ties are nondeterministic here (Flink's own
-          pick is arrival-dependent and not reproducible across runs
-          either). SELECT * drops the constant-1 rank column; an
-          outer projection reading it falls through.
+          with EQUAL timestamps are ordered by the remaining columns in
+          declared order (`_rank_tiebreak`), the rule the batch form
+          gets from `_rank1_ties_broken`, so both pick the same row.
+          Flink's RowTimeDeduplicateFunction keeps the first/last
+          ARRIVED, which a Spark stateful aggregate cannot observe (and
+          which is not reproducible across runs either). SELECT *
+          drops the constant-1 rank column; an outer projection reading
+          it falls through.
         - anything else (N > 1, or N = 1 ordered by a non-rowtime
           column) → streaming Top-N (StreamExecRank.java:70) via
           streaming/rank.streaming_topn: per-key state bounded by N,
@@ -657,14 +705,15 @@ class StreamingSqlMixin:
             re.search(rf"\b{re.escape(m.group('rn'))}\b", outer)
         )
         if n == 1 and rowtime and not outer_reads_rank:
-            # pure dedup (rank dropped): event-time keep-first/last;
-            # equal-timestamp ties are arbitrary (see docstring)
+            # pure dedup (rank dropped): event-time keep-first/last,
+            # equal timestamps broken by the remaining columns
             from pyspark.sql import functions as F
 
             pick = F.min_by if ascending else F.max_by
             rest = [c for c in df.columns if c not in keys]
+            order = F.struct(ts, *self._rank_tiebreak(df, keys, ts))
             picked = df.groupBy(*keys).agg(
-                pick(F.struct(*rest), F.col(ts)).alias("__r")
+                pick(F.struct(*rest), order).alias("__r")
             )
             # source column order preserved (keys stay in declared position)
             out = picked.select(

@@ -249,6 +249,45 @@ def _option_pairs(text: str) -> list[tuple[str, str]]:
     ]
 
 
+class _Lexed:
+    """The groups of a `_match_lexed` match, as `re.Match.group` reads
+    them."""
+
+    __slots__ = ("_groups",)
+
+    def __init__(self, groups: list[str | None]):
+        self._groups = groups
+
+    def group(self, i: int = 0) -> str | None:
+        return self._groups[i]
+
+
+def _match_lexed(pattern, s: str, flags: int = 0) -> _Lexed | None:
+    """re.match of a statement grammar on the lexer mask of `s`, so a
+    quoted token `'([^']*)'` spans the whole literal, `''` included
+    (its body is blank in the mask).  Groups read `s`; a group that is
+    exactly a string literal's body comes back with `''` unfolded."""
+    m = re.match(pattern, _sql_mask(s), flags)
+    if m is None:
+        return None
+    bodies = {(a + 1, b - 1) for a, b, kind in _sql_regions(s) if kind == "'"}
+    groups: list[str | None] = []
+    for i in range(m.re.groups + 1):
+        a, b = m.span(i)
+        text = None if a < 0 else s[a:b]
+        groups.append(text.replace("''", "'") if (a, b) in bodies else text)
+    return _Lexed(groups)
+
+
+def _quoted_items(text: str) -> list[str]:
+    """Every string literal's body in `text`, `''` unfolded."""
+    return [
+        text[a + 1 : b - 1].replace("''", "'")
+        for a, b, kind in _sql_regions(text)
+        if kind == "'" and b - a >= 2
+    ]
+
+
 # ------------------------------------------------------------------ splits
 
 

@@ -73,7 +73,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from flink_1_20_spark.operators.cep import Pattern, _render, _scan
+from flink_1_20_spark.operators.cep import Pattern, _compiled, _render, _scan
 
 
 # state-record marshalling shared with streaming/rank.py — one place
@@ -116,6 +116,7 @@ def match_recognize_stream(
     what gets buffered in state — keep it to what the pattern needs;
     Flink's SharedBuffer stores whole rows, we store the projection)."""
     key_cols = list(keys)
+    pattern = _compiled(pattern)
 
     # variable-length patterns (a quantifier that may consume MORE rows
     # than it did) can be RESHAPED by later input when the match was

@@ -107,6 +107,7 @@ def test_mt_full_manual_refresh_and_as_query(env, tmp_path):
     # freshness over the 30-min threshold + bounded source → FULL derived
     env.execute_sql(f"""
         CREATE MATERIALIZED TABLE mtf
+        COMMENT 'bounded source''s daily copy'
         WITH ('path' = '{tmp_path}/mtf')
         FRESHNESS = INTERVAL '1' DAY
         AS SELECT k, v + 1 AS v1 FROM src_b

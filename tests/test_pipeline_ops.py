@@ -664,16 +664,25 @@ def test_ensure_scan_parallelism_guard(spark, tmp_path):
     scan to core count (the CPU-bound boundary scan is otherwise
     serialized onto one core), stay a NO-OP at healthy split counts,
     and skip non-file inputs — all decided from metadata only (no jobs
-    at build time)."""
-    from flink_1_20_spark.operators.util import ensure_scan_parallelism
+    at build time).  The compact inputs are above SMALL_SCAN_BYTES
+    (hex text barely compresses); tiny inputs are the no-fire case of
+    test_ensure_scan_parallelism_small_bound."""
+    from flink_1_20_spark.operators.util import SMALL_SCAN_BYTES, ensure_scan_parallelism
 
     cores = spark.sparkContext.defaultParallelism
-    rows = spark.range(1000).selectExpr("id AS doc_id", "repeat('x', 50) AS text")
+    rows = spark.range(6000).selectExpr(
+        "id AS doc_id", "concat(sha2(string(id), 256), sha2(string(-id), 256)) AS text"
+    )
     # one compact file -> guard fires, scan parallelism = cores
     one = str(tmp_path / "one")
     rows.coalesce(1).write.parquet(one)
     compact = spark.read.parquet(one)
     assert len(compact.inputFiles()) == 1
+    import glob
+    import os as _os
+
+    fsize = _os.path.getsize(glob.glob(f"{one}/*.parquet")[0])
+    assert fsize >= SMALL_SCAN_BYTES, "premise: the fixture is above the bound"
     assert ensure_scan_parallelism(compact).rdd.getNumPartitions() == cores
     # a few files but < cores -> guard still fires (r10: the old
     # cores//2 bar left a 3-file scan at 3-way parallelism, and was
@@ -684,6 +693,9 @@ def test_ensure_scan_parallelism_guard(spark, tmp_path):
         few = str(tmp_path / "few")
         rows.repartition(3).write.parquet(few)
         assert 0 < len(spark.read.parquet(few).inputFiles()) < cores
+        assert sum(
+            _os.path.getsize(f) for f in glob.glob(f"{few}/*.parquet")
+        ) >= SMALL_SCAN_BYTES
         assert (
             ensure_scan_parallelism(spark.read.parquet(few)).rdd.getNumPartitions()
             == cores
@@ -702,10 +714,6 @@ def test_ensure_scan_parallelism_guard(spark, tmp_path):
     # per file and skips when the scan is already wide). Simulated by
     # shrinking maxPartitionBytes below the compact file's size so ONE
     # file estimates >= cores splits.
-    import glob
-    import os as _os
-
-    fsize = _os.path.getsize(glob.glob(f"{one}/*.parquet")[0])
     old_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
         spark.conf.set(
@@ -735,6 +743,31 @@ def test_ensure_scan_parallelism_guard(spark, tmp_path):
         "left",
     )
     assert ensure_scan_parallelism(joined) is not joined
+
+
+def test_ensure_scan_parallelism_small_bound(spark, tmp_path, monkeypatch):
+    """Inputs whose files total less than SMALL_SCAN_BYTES are not
+    repartitioned (the extra exchange costs more than the one-core scan
+    saves): a tiny compact file is a no-op at the shipped bound, and
+    the bound is strict — the same file fires when the bound equals
+    its size and is skipped one byte above it."""
+    import glob
+    import os as _os
+
+    from flink_1_20_spark.operators import util
+
+    cores = spark.sparkContext.defaultParallelism
+    tiny = str(tmp_path / "tiny")
+    spark.range(1000).selectExpr("id AS doc_id", "repeat('x', 50) AS text") \
+        .coalesce(1).write.parquet(tiny)
+    df = spark.read.parquet(tiny)
+    size = _os.path.getsize(glob.glob(f"{tiny}/*.parquet")[0])
+    assert size < util.SMALL_SCAN_BYTES
+    assert util.ensure_scan_parallelism(df) is df
+    monkeypatch.setattr(util, "SMALL_SCAN_BYTES", size + 1)
+    assert util.ensure_scan_parallelism(df) is df
+    monkeypatch.setattr(util, "SMALL_SCAN_BYTES", size)
+    assert util.ensure_scan_parallelism(df).rdd.getNumPartitions() == cores
 
 
 def test_exact_substring_decontaminate(spark):

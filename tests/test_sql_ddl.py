@@ -2050,6 +2050,55 @@ def test_show_jobs_and_stop_job(spark, tmp_path):
             q.stop()
 
 
+def test_statement_grammars_read_lexed_quoted_tokens(spark):
+    """The anchored statement grammars read a quoted token as the
+    lexer's string-literal region, so a doubled quote is one quote of
+    the value (Calcite's escape) instead of a grammar miss that fell
+    through to Spark's parser (`SET 'pipeline.name' = 'it''s'` raised
+    INVALID_SET_SYNTAX)."""
+    env = TableEnvironment(spark)
+    # SET / RESET
+    env.execute_sql("SET 'pipeline.name' = 'it''s'")
+    env.execute_sql("SET 'my''key' = 'v'")
+    opts = dict(tuple(r) for r in env.execute_sql("SET").collect())
+    assert opts["pipeline.name"] == "it's" and opts["my'key"] == "v"
+    env.execute_sql("RESET 'my''key'")
+    assert "my'key" not in dict(tuple(r) for r in env.execute_sql("SET").collect())
+    # ADD JAR records the unfolded path (Spark only logs a missing
+    # jar); REMOVE JAR drops it
+    env.execute_sql("ADD JAR '/nonexistent/it''s.jar'")
+    assert [r[0] for r in env.execute_sql("SHOW JARS").collect()] == ["/nonexistent/it's.jar"]
+    env.execute_sql("REMOVE JAR '/nonexistent/it''s.jar'")
+    assert env.execute_sql("SHOW JARS").collect() == []
+    # DESCRIBE JOB / STOP JOB look the unfolded id up
+    with pytest.raises(ValueError, match="no'such"):
+        env.execute_sql("DESCRIBE JOB 'no''such'")
+    with pytest.raises(ValueError, match="no'such"):
+        env.execute_sql("STOP JOB 'no''such'")
+    # COMMENT (CREATE CATALOG, ALTER CATALOG, CREATE DATABASE)
+    env.execute_sql(
+        "CREATE CATALOG qcat COMMENT 'it''s aux' WITH ('type'='generic_in_memory')"
+    )
+    info = dict(tuple(r) for r in env.execute_sql("DESCRIBE CATALOG qcat").collect())
+    assert info["comment"] == "it's aux"
+    env.execute_sql("ALTER CATALOG qcat COMMENT 'Bob''s'")
+    info = dict(tuple(r) for r in env.execute_sql("DESCRIBE CATALOG qcat").collect())
+    assert info["comment"] == "Bob's"
+    env.execute_sql("CREATE DATABASE `it's_db` COMMENT 'a ''quoted'' db'")
+    info = dict(tuple(r) for r in env.execute_sql("DESCRIBE DATABASE `it's_db`").collect())
+    assert info["comment"] == "a 'quoted' db"
+    # SHOW ... LIKE
+    dbs = env.execute_sql("SHOW DATABASES LIKE 'it''s%'").collect()
+    assert [r[0] for r in dbs] == ["it's_db"]
+    assert env.execute_sql("SHOW CATALOGS LIKE 'it''s%'").collect() == []
+    assert env.execute_sql("SHOW TABLES LIKE 'it''s%'").collect() == []
+    assert env.execute_sql("SHOW VIEWS LIKE 'it''s%'").collect() == []
+    assert env.execute_sql("SHOW FUNCTIONS LIKE 'it''s%'").collect() == []
+    # CREATE FUNCTION ... AS resolves the unfolded target
+    with pytest.raises(Exception, match="no'such"):
+        env.execute_sql("CREATE FUNCTION qfn AS 'no''such.mod'")
+
+
 def test_describe_job(spark, tmp_path):
     """DESCRIBE JOB '<id>' (SqlDescribeJob.java / the gateway's
     callDescribeJobOperation): one row of id/name/status/start_time;
@@ -3335,6 +3384,55 @@ def test_streaming_dedup_rank_shape(spark, tmp_path):
         ) WHERE rn = 1
     """).collect()
     assert sorted((r["k"], r["v"]) for r in rows) == [(1, 1.0), (2, 7.0)]
+
+
+def test_first_per_key_tie_rule_streaming_equals_batch(spark, tmp_path):
+    """Two events of one key share the lowest timestamp: streaming
+    keep-first (min_by) and the batch ROW_NUMBER statement both keep
+    the row that is lowest in rowtime, then in the remaining columns in
+    declared order (here event_id 29, not 83 — written first so arrival
+    order cannot decide it). Keep-last takes the highest the same way."""
+    import json as _json
+
+    src = tmp_path / "tie_src"
+    src.mkdir()
+    rows = [
+        {"event_id": 83, "ts": "2023-12-31T23:59:58.870", "k": 2, "et": "view"},
+        {"event_id": 29, "ts": "2023-12-31T23:59:58.870", "k": 2, "et": "click"},
+        {"event_id": 40, "ts": "2023-12-31T23:59:59.000", "k": 2, "et": "view"},
+        {"event_id": 7, "ts": "2023-12-31T23:59:59.000", "k": 3, "et": "view"},
+        {"event_id": 5, "ts": "2023-12-31T23:59:59.000", "k": 3, "et": "error"},
+    ]
+    (src / "b0.jsonl").write_text("\n".join(_json.dumps(r) for r in rows) + "\n")
+    env = TableEnvironment(spark)
+    cols = "event_id BIGINT, ts TIMESTAMP(3), k BIGINT, et STRING"
+    env.execute_sql(f"""
+        CREATE TABLE tie_stream ({cols}, WATERMARK FOR ts AS ts - INTERVAL '5' SECOND)
+        WITH ('connector'='filesystem','path'='{src}',
+              'format'='json','scan.streaming'='true')
+    """)
+    env.execute_sql(f"""
+        CREATE TABLE tie_batch ({cols})
+        WITH ('connector'='filesystem','path'='{src}',
+              'format'='json','scan.streaming'='false')
+    """)
+    stmt = (
+        "SELECT event_id, k FROM (SELECT *, ROW_NUMBER() OVER "
+        "(PARTITION BY k ORDER BY ts {d}) AS rn FROM {t}) WHERE rn = 1"
+    )
+    for d, want in (("ASC", {(29, 2), (5, 3)}), ("DESC", {(40, 2), (7, 3)})):
+        q = (
+            env.execute_sql(stmt.format(d=d, t="tie_stream"))
+            .writeStream.format("memory").queryName(f"tie_{d}")
+            .outputMode("complete").start()
+        )
+        try:
+            q.processAllAvailable()
+            got = {(r["event_id"], r["k"]) for r in spark.table(f"tie_{d}").collect()}
+        finally:
+            q.stop()
+        batch = env.execute_sql(stmt.format(d=d, t="tie_batch")).collect()
+        assert got == {(r["event_id"], r["k"]) for r in batch} == want, d
 
 
 def test_streaming_top1_by_value_is_rank_not_dedup(spark, tmp_path):
