@@ -14,8 +14,8 @@ chain's SQL oracle uses). Every other pattern runs the NFA. Batch NFA: one
 shuffle+sort per key (`applyInPandas`), then a linear scan per
 partition-group in Python — Arrow-batched, no per-row Python round
 trips. The NFA is the textbook nondeterministic simulation — one
-matcher (`_matches_at`)
-and one skip scan (`_scan`), shared with streaming/cep_stream.py — with:
+matcher (`_matches_at`) and one skip scan (`_scan`), shared with
+streaming/cep_stream.py — with:
 - contiguity: STRICT (Flink `next`), RELAXED (`followedBy`,
   SKIP_TILL_NEXT: binds the first matching row, never a later one) or
   non-deterministic relaxed (`followedByAny`, one branch per row)

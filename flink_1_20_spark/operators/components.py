@@ -21,13 +21,17 @@ O(1) and the (expensive) pair-generation upstream runs exactly once.
 Small graphs skip the rounds: when the checkpointed edge list holds at
 most `CAP` rows, one job collects it and a min-root union-find labels
 the nodes in the driver — the same min-id labels, one job instead of
-one per round.
+one per round. The labels go back as an Arrow table, which Spark plans
+as a LocalTableScan; a list of Python rows would instead be an RDD
+scan that starts a Python worker per partition.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructField, StructType
 
 # Largest directed edge list (both directions of every pair) labeled in
@@ -66,12 +70,12 @@ def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iter: int = 20,
 ) -> DataFrame:
     """Label every node of the pair graph with its component's min id.
 
     Returns (node, component). Deterministic: component = smallest node
-    id in the connected component."""
+    id in the connected component. The round loop runs to its fixpoint:
+    labels only fall, so it ends within diameter + 1 rounds."""
     # Materialize the edge list ONCE: `pairs` usually carries an
     # expensive lineage (MinHash banding, signature joins) that must not
     # be recomputed every round. On a cluster this would be
@@ -86,11 +90,15 @@ def connected_components(
     if len(small) <= CAP:
         t = edges.schema["u"].dataType
         schema = StructType([StructField("node", t), StructField("component", t)])
-        return edges.sparkSession.createDataFrame(_driver_components(small), schema)
+        labeled = _driver_components(small)
+        table = pa.table(
+            [[n for n, _ in labeled], [c for _, c in labeled]], schema=to_arrow_schema(schema)
+        )
+        return edges.sparkSession.createDataFrame(table, schema)
     labels = edges.select(F.col("u").alias("node")).distinct().withColumn(
         "component", F.col("node")
     )
-    for it in range(max_iter):
+    while True:
         # candidate labels via one hop: neighbor's current label
         nbr = (
             edges.join(labels.withColumnRenamed("node", "v"), "v")
@@ -119,8 +127,7 @@ def connected_components(
         changed = new_labels.filter(F.col("chg")).count()
         labels = new_labels.select("node", "component")
         if changed == 0:
-            break
-    return labels
+            return labels
 
 
 def dedup_assignment(

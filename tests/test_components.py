@@ -28,7 +28,7 @@ def test_chain_clique_isolated(spark):
 def test_long_chain_converges(spark, monkeypatch):
     from flink_1_20_spark.operators import components
 
-    n = 20  # diameter 19 — exercises multi-round convergence + checkpoint
+    n = 24  # diameter 23: multi-round convergence + checkpoint, past 20 rounds
     pairs = spark.createDataFrame([(i, i + 1) for i in range(n)], "id_a bigint, id_b bigint")
     for cap in (0, components.CAP):  # the round loop, then the driver path
         monkeypatch.setattr(components, "CAP", cap)
@@ -86,9 +86,8 @@ def test_driver_path_cap_boundary(spark, monkeypatch):
 
 
 def test_driver_path_long_chain_and_single_edge(spark, monkeypatch):
-    """A chain of diameter 30 — past the round loop's 20-round limit —
-    gets one label on the driver path; a single edge labels both ends
-    the same on both paths."""
+    """A chain of diameter 30 gets one label on the driver path; a
+    single edge labels both ends the same on both paths."""
     from flink_1_20_spark.operators import components
 
     n = 30
@@ -108,3 +107,18 @@ def test_driver_path_equals_round_loop(spark, monkeypatch):
     got, rounds = _both_paths(spark, monkeypatch, pairs, cap=1000)
     assert got == rounds
     assert got[100] == got[50] == 7
+
+
+def test_driver_path_is_a_local_relation(spark):
+    """The driver path's labels are a LocalTableScan, not an RDD scan of
+    pickled rows (which starts a Python worker per partition); an empty
+    pair set comes back as an empty frame of the same schema."""
+    pairs = spark.createDataFrame([(4, 1), (1, 9)], "id_a bigint, id_b bigint")
+    cc = connected_components(pairs)
+    plan = cc._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert _labels(cc) == {1: 1, 4: 1, 9: 1}
+    empty = connected_components(pairs.filter("id_a < 0"))
+    assert empty.collect() == [] and empty.schema.simpleString() == (
+        "struct<node:bigint,component:bigint>"
+    )
